@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
+import Harness.{js, jsNames, r3}
+
 object Bench {
   // Gates whose timed body is dominated by an index/table BUILD (bucketed
   // saveAsTable writes, persisted ANN index writes), not the query itself.
@@ -80,10 +84,6 @@ object Bench {
     * is spec-testable without running queries. */
   private[graft] def renderFinal(med: Seq[(String, Double)],
       build: Seq[(String, Double)], total: Double, sfDir: String): String = {
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def js(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     def line(head: Seq[(String, Double)]): String =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${med.size},"queries":${js(head)},"build_queries":${js(build)},"sf":"$sfDir"}"""
     val byName = med.toMap
@@ -93,75 +93,52 @@ object Bench {
     line(head)
   }
 
+  /** Warm every gate, then time three INTERLEAVED passes (pass 1 runs every
+    * gate, then pass 2, then pass 3) and keep each gate's median and
+    * minimum. Back-to-back samples of one gate share any multi-second
+    * machine-contention window, which poisoned whole medians in round 4
+    * (e02 10.1 s measured vs 0.37 s quiet); interleaving decorrelates the
+    * noise at the same total cost. A gate that throws in any pass is
+    * listed under "failed" and left out of the medians, the total and
+    * `n_queries`. Returns the per-gate detail line and the final line. */
+  private[graft] def bench(spark: SparkSession, sfDir: String,
+      gates: Seq[(String, Harness.Gate)]): (String, String) = {
+    // without the warm-up pass per-gate numbers move ±3× between rounds on
+    // map-iteration order (whichever gate ran first paid the JVM warm-up)
+    Harness.warm(spark, sfDir, gates.map(_._2))
+    val passes = Seq.fill(3)(gates.map { case (n, gate) =>
+      n -> Harness.run(spark, sfDir, gate).toOption.map(_.sec) })
+    val samples = passes.flatten.groupMap(_._1)(_._2)
+    val (timed, failed) =
+      gates.map(_._1).partition(n => samples(n).forall(_.isDefined))
+    val sorted = timed.map(n => n -> samples(n).flatten.sorted)
+    val med = sorted.map { case (n, s) => n -> s(s.size / 2) }
+    val mins = sorted.map { case (n, s) => n -> s.head }
+    val detail =
+      s"""{"detail":"per_query","queries":${js(med)},"min_queries":${js(mins)},"failed":${jsNames(failed)},"sf":"$sfDir"}"""
+    (detail, renderFinal(med, med.filter(kv => buildDominated(kv._1)),
+      med.map(_._2).sum, sfDir))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // local-iteration subset (comma-separated names); driver runs the full set
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    val queries = only.fold(SparkEntry.queries)(names =>
+    val gates = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter(q => names(q._1))).toSeq
-    val spark = Sessions.local(cpus, "graft-bench")
-    // Warm-up pass: run every query once (JIT compilation, codegen caches,
-    // parquet footer reads, shuffle-service spin-up) — without it, per-query
-    // numbers move ±3× between rounds purely on map-iteration order
-    // (whichever query ran first paid the JVM warm-up).
-    queries.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      finally Caches.clear() // each invocation persists fresh projections
+    Harness.report("graft-bench", "4") { spark =>
+      val (detail, last) = bench(spark, sfDir, gates)
+      // Full per-query detail: one stdout line (scrollback) + a file the
+      // repo keeps, since the driver's stdout tail is too small to hold it.
+      println(detail)
+      try {
+        val w = new java.io.PrintWriter("BENCH_DETAIL.json")
+        try w.println(detail) finally w.close()
+      } catch { case _: Throwable => () }
+      // FINAL line — the one the driver parses. Compact: totals + a stable
+      // headline subset, 3 decimal places; renderFinal prunes tail
+      // representatives if the line would outgrow the driver's parse budget.
+      last
     }
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
-      finally Caches.clear()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Median of 3 INTERLEAVED full passes (pass 1 runs every query, then
-    // pass 2, then pass 3; per-query median across passes). Back-to-back
-    // samples of one query share any multi-second machine-contention window,
-    // which poisoned whole medians in round 4 (e02 10.1 s measured vs 0.37 s
-    // quiet); interleaving decorrelates the noise at the same total cost.
-    // A GC/compaction pause inside one pass still lands on only one of the
-    // three samples of each query it touches.
-    val names = queries.map(_._1)
-    val samples = names.map(_ -> scala.collection.mutable.Buffer.empty[Double]).toMap
-    for (_ <- 1 to 3; (name, fn) <- queries) samples(name) += timeOnce(fn)
-    val med = names.map { n => n -> samples(n).sorted.apply(1) }
-    val mins = names.map { n => n -> samples(n).min }
-    // Locale.ROOT pins the decimal separator: the final JSON line is the
-    // driver's one parse surface, and f"" interpolation would emit "0,472"
-    // under a comma-decimal default locale.
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def js(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => s"\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
-    val build = med.filter(kv => buildDominated(kv._1))
-    val total = med.map(_._2).sum
-    // Full per-query detail: one stdout line (scrollback) + a file the
-    // repo keeps, since the driver's stdout tail is too small to hold it.
-    val detail =
-      s"""{"detail":"per_query","queries":${js(med)},"min_queries":${js(mins)},"sf":"$sfDir"}"""
-    println(detail)
-    try {
-      val w = new java.io.PrintWriter("BENCH_DETAIL.json")
-      try w.println(detail) finally w.close()
-    } catch { case _: Throwable => () }
-    // Silence every async printer BEFORE the final line: the streaming
-    // gates spin up the JVM-wide StateStore maintenance thread, which
-    // races spark.stop() and dumps a stack trace ("SparkEnv not active")
-    // AFTER the metric line — pushing it out of the driver's ~2000-char
-    // stdout tail (observed in BENCH_r13's captured tail). Stop any
-    // straggler streams, then the maintenance task itself, so nothing
-    // can print after the one line the driver parses.
-    try {
-      spark.streams.active.foreach(q => try q.stop() catch {
-        case _: Throwable => () })
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    } catch { case _: Throwable => () }
-    // FINAL line — the one the driver parses. Compact: totals + a stable
-    // headline subset, 3 decimal places; renderFinal prunes tail
-    // representatives if the line would outgrow the driver's parse budget.
-    println(renderFinal(med, build, total, sfDir))
-    spark.stop()
   }
 }

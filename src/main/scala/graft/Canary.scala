@@ -31,40 +31,17 @@ object Canary {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.local(cpus, "graft-canary")
-    // ONE fixed warm-up query absorbs the bulk of JVM/codegen startup so
-    // the 15 measurements are comparable across rounds (the startup cost
-    // itself is NOT the signal — plan regressions are)
-    try SparkEntry.queries("f03_q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    finally Caches.clear()
-    // A failed query must NOT be logged as a (fast) timing — that would
-    // silently corrupt exactly the round-over-round drift signal the
-    // canary exists to pin. Record failures explicitly; canary.sh greps
-    // for "failed" and refuses to append a median built on one.
-    var failed = List.empty[String]
-    val times = pinned.map { n =>
-      val fn = SparkEntry.queries(n)
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).count()
-      catch { case _: Throwable => failed ::= n }
-      finally Caches.clear()
-      n -> (System.nanoTime() - t0) / 1e9
-    }.filterNot { case (n, _) => failed.contains(n) }
-    // silence async printers before the parse line (the Bench lesson)
-    try {
-      spark.streams.active.foreach(q => try q.stop() catch {
-        case _: Throwable => () })
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    } catch { case _: Throwable => () }
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    println("{\"canary\":" + times.map { case (k, v) =>
-      "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}") +
-      ",\"total\":" + r3(times.map(_._2).sum) +
-      ",\"failed\":[" + failed.reverse.map("\"" + _ + "\"").mkString(",") +
-      "],\"sf\":\"" + sfDir + "\"}")
-    spark.stop()
+    Harness.report("graft-canary", "32") { spark =>
+      Harness.warm(spark, sfDir, Seq(SparkEntry.queries(Harness.warmUpGate)))
+      val runs = pinned.map(n =>
+        n -> Harness.run(spark, sfDir, SparkEntry.queries(n)))
+      val times = runs.collect { case (n, Right(s)) => n -> s.sec }
+      // canary.sh refuses to append a median built on a failed gate
+      val failed = runs.collect { case (n, Left(_)) => n }
+      "{\"canary\":" + Harness.js(times) +
+        ",\"total\":" + Harness.r3(times.map(_._2).sum) +
+        ",\"failed\":" + Harness.jsNames(failed) +
+        ",\"sf\":\"" + sfDir + "\"}"
+    }
   }
 }

@@ -1,302 +1,44 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
-/** Step-level timing probe for the expensive gates (guide §1: measure
-  * first, attribute to the exact sub-step). NOT part of the bench or
-  * verify surface — a scratch main for the optimization rounds:
+/** Plan dumps of the real operators, the evidence committed under
+  * `plans/r17/`. NOT part of the bench or verify surface:
   *
-  *   sbt "runMain graft.Probe substr /root/testdata/sf0.1"
-  *   sbt "runMain graft.Probe louvain /root/testdata/sf0.1"
+  *   sbt "runMain graft.Probe round_plans /root/testdata/sf0.01 plans/r17"
+  *   sbt "runMain graft.Probe knn_plans /root/testdata/sf0.01 plans/r17"
   *
-  * Each probe replicates a gate's body with an explicit action per
-  * step, prints per-step seconds for a warm-up pass plus 2 timed
-  * passes, and labels jobs so the UI/event-log attribution matches. */
+  * Gate wall time and stage skew come from `graft.Rehearsal`. */
 object Probe {
 
-  private def t[A](label: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    val r = f
-    println(f"[probe] $label%-40s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-    r
-  }
-
   def main(args: Array[String]): Unit = {
-    val what = args.headOption.getOrElse("substr")
+    val what = args.headOption.getOrElse("round_plans")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val outDir = if (args.length > 2) args(2) else "plans/r17"
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
       "graft-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    val passes = if (what == "round_plans") 1 else 3
-    (1 to passes).foreach { pass =>
-      println(s"[probe] ===== pass $pass =====")
-      what match {
-        case "substr" => substr(spark, sfDir)
-        case "substr_incr" => substrIncr(spark, sfDir)
-        case "substr_incr_deep" => substrIncrDeep(spark, sfDir)
-        case "louvain" => louvain(spark, sfDir)
-        case "louvain_plan" => louvainPlan(spark, sfDir)
-        case "round_plans" => roundPlans(spark, sfDir,
-          if (args.length > 2) args(2) else "plans/r17")
-        case "knn_plans" => knnPlans(spark, sfDir,
-          if (args.length > 2) args(2) else "plans/r17")
-        case "knn_dup" => knnDup(spark, sfDir)
-        case "rebuild" => rebuildProbe(spark, sfDir)
-        case "jaccard" => jaccardProbe(spark, sfDir)
-        case "ivfpq" => ivfpq(spark, sfDir)
-        case other => sys.error(s"unknown probe: $other")
-      }
-      Caches.clear()
+    Files.createDirectories(Paths.get(outDir))
+    what match {
+      case "round_plans" => roundPlans(spark, sfDir, outDir)
+      case "knn_plans" => knnPlans(spark, sfDir, outDir)
+      case other => sys.error(s"unknown probe: $other")
     }
+    Caches.clear()
     spark.stop()
   }
 
-  /** d49 batch ExactSubstr, step by step. */
-  private def substr(s: SparkSession, d: String): Unit = {
-    import graft.ops.{DedupOps, TextOps}
-    val docs = Tables.documents(s, d)
-    val k = 50
-    val base = t("base persist (gram text + tokens)") {
-      val b = graft.Caches.track(
-        DedupOps.spread(docs.select(col("doc_id").as("id"),
-            col("text").as("__txt")), "id")
-          .select(col("id"),
-            graft.functions.NgramText.ngramText(col("__txt"), k).as("__gs"),
-            TextOps.tokens(col("__txt")).as("__ts"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      b.count(); b
-    }
-    val posts = base
-      .select(col("id"), posexplode(col("__gs")))
-      .select(col("id"), col("pos").cast("long").as("pos"),
-        DedupOps.portableHash60(col("col")).as("h"))
-    t("posts explode+md5 (noop count)") { posts.count() }
-    val cand = posts.groupBy("h")
-      .agg(count_distinct(col("id")).as("__cd"))
-      .filter(col("__cd") >= 2)
-      .select("h")
-    t("cand screen") { cand.count() }
-    val grams = t("grams sliver persist") {
-      val g = graft.Caches.track(base
-        .select(col("id"), posexplode(col("__gs")))
-        .select(col("id"), col("pos").cast("long").as("pos"),
-          col("col").as("g"), DedupOps.portableHash60(col("col")).as("h"))
-        .join(cand, Seq("h"), "left_semi")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      g.count(); g
-    }
-    val verified = grams.groupBy("h", "g")
-      .agg(count_distinct(col("id")).as("__cd"))
-      .filter(col("__cd") >= 2)
-      .select("h", "g")
-    val covered = grams.join(verified, Seq("h", "g"), "left_semi")
-      .select(col("id"),
-        explode(sequence(col("pos"), col("pos") + (k - 1))).as("p"))
-      .distinct()
-    t("verify + coverage") { covered.count() }
-    val full = t("full d49 body end-to-end") {
-      DedupOps.exactSubstrDedup(docs, "doc_id", "text", k)
-        .orderBy("doc_id").count()
-    }
-    println(s"[probe] d49 rows: $full")
+  private def write(outDir: String, file: String, plan: String): Unit = {
+    Files.writeString(Paths.get(outDir, file), plan)
+    println(s"[probe] wrote $outDir/$file")
   }
 
-  /** d50 incremental ExactSubstr, step by step (index build vs
-    * incremental pass vs prior-answer swap). */
-  private def substrIncr(s: SparkSession, d: String): Unit = {
-    import graft.ops.DedupOps
-    val docs = Tables.documents(s, d)
-    val w1 = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val w2 = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_probe_d50").toString
-    val prior = t("exactSubstrIndex (build + writes)") {
-      val p = DedupOps.exactSubstrIndex(w1, "doc_id", "text", 50,
-        s"$root/idx")
-      p.count(); p
-    }
-    val inc = t("exactSubstrIncremental") {
-      val i = DedupOps.exactSubstrIncremental(w1, s"$root/idx", w2,
-        "doc_id", "text", 50)
-      i.count(); i
-    }
-    t("prior-answer swap + order") {
-      prior.join(inc, Seq("doc_id"), "left_anti")
-        .unionByName(inc).orderBy("doc_id").count()
-    }
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
-  /** exactSubstrIncremental's body inlined with a timing per step. */
-  private def substrIncrDeep(s: SparkSession, d: String): Unit = {
-    import graft.ops.{DedupOps, TextOps}
-    import org.apache.spark.storage.StorageLevel
-    val docs = Tables.documents(s, d)
-    val w1 = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-    val w2 = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_probe_d50d").toString
-    t("exactSubstrIndex (build + writes)") {
-      DedupOps.exactSubstrIndex(w1, "doc_id", "text", 50,
-        s"$root/idx").count()
-    }
-    val indexDir = s"$root/idx"
-    val (idCol, textCol, k) = ("doc_id", "text", 50)
-    val (indexed, arriving) = (w1, w2)
-    def substrBase(df: DataFrame): DataFrame = graft.Caches.track(
-      DedupOps.spread(df.select(col(idCol).as("id"),
-          col(textCol).as("__txt")), "id")
-        .select(col("id"),
-          graft.functions.NgramText.ngramText(col("__txt"), k).as("__gs"),
-          TextOps.tokens(col("__txt")).as("__ts"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    def substrGrams(base: DataFrame, cand: DataFrame): DataFrame =
-      graft.Caches.track(base
-        .select(col("id"), posexplode(col("__gs")))
-        .select(col("id"), col("pos").cast("long").as("pos"),
-          col("col").as("g"), DedupOps.portableHash60(col("col")).as("h"))
-        .join(cand, Seq("h"), "left_semi")
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val base2 = substrBase(arriving)
-    val posts2 = graft.Caches.track(base2
-      .select(col("id"), posexplode(col("__gs")))
-      .select(col("id"), col("pos").cast("long").as("pos"),
-        DedupOps.portableHash60(col("col")).as("h"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    t("posts2 persist") { posts2.count() }
-    val idxPosts = s.read.parquet(s"$indexDir/postings")
-    val intra = posts2.groupBy("h")
-      .agg(count_distinct(col("id")).as("__cd"))
-      .filter(col("__cd") >= 2)
-      .select("h")
-    val cross = idxPosts
-      .join(posts2.select("h").distinct(), Seq("h"), "left_semi")
-      .select("h").distinct()
-    val cand = graft.Caches.track(intra.unionByName(cross).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    t("cand (intra + cross screen)") { cand.count() }
-    val touchedScan = idxPosts.join(cand, Seq("h"), "left_semi")
-      .select(col("id")).distinct()
-    val base1 = substrBase(
-      indexed.join(touchedScan.withColumnRenamed("id", idCol),
-        Seq(idCol), "left_semi"))
-    t("base1 (touched sliver)") { base1.count() }
-    val grams = graft.Caches.track(
-      substrGrams(base2, cand).unionByName(substrGrams(base1, cand))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    t("grams union persist") { grams.count() }
-    val verified = grams.groupBy("h", "g")
-      .agg(count_distinct(col("id")).as("__cd"))
-      .filter(col("__cd") >= 2)
-      .select("h", "g")
-    val coveredNew = graft.Caches.track(
-      grams.join(verified, Seq("h", "g"), "left_semi")
-        .select(col("id"),
-          explode(sequence(col("pos"), col("pos") + (k - 1))).as("p"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    t("coveredNew persist") { coveredNew.count() }
-    val shardIds = base2.select(col("id"))
-    val covered2 = coveredNew.join(shardIds, Seq("id"), "left_semi")
-    val touched1 = coveredNew.join(shardIds, Seq("id"), "left_anti")
-      .select("id").distinct()
-    val coveredOld = s.read.parquet(s"$indexDir/covered")
-    val covered1 = coveredOld.join(touched1, Seq("id"), "left_semi")
-      .unionByName(coveredNew.join(touched1, Seq("id"), "left_semi"))
-      .distinct()
-    t("  sub: covered1 count") { covered1.count() }
-    t("  sub: rebuild2 count") {
-      DedupOps.rebuildWithoutCovered(base2, covered2, idCol).count() }
-    t("  sub: rebuild1 count") {
-      DedupOps.rebuildWithoutCovered(
-        base1.join(touched1, Seq("id"), "left_semi"), covered1, idCol)
-        .count() }
-    val out = t("out rebuild + localCheckpoint") {
-      DedupOps.rebuildWithoutCovered(base2, covered2, idCol)
-        .unionByName(DedupOps.rebuildWithoutCovered(
-          base1.join(touched1, Seq("id"), "left_semi"), covered1, idCol))
-        .localCheckpoint(true)
-    }
-    t("posts2 append") {
-      posts2.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(s"$indexDir/postings")
-    }
-    t("coveredNew count again (cache-hot)") { coveredNew.count() }
-    println(s"[probe] coveredNew rows=${coveredNew.count()} parts=${coveredNew.rdd.getNumPartitions}")
-    t("coveredNew write FRESH dir") {
-      coveredNew.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$root/scratch_cov")
-    }
-    t("coveredNew localCheckpoint then append") {
-      coveredNew.localCheckpoint(true)
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(s"$root/scratch_cov2")
-    }
-    t("coveredNew append") {
-      coveredNew.write.mode(org.apache.spark.sql.SaveMode.Append)
-        .parquet(s"$indexDir/covered")
-    }
-    t("refresh") {
-      s.catalog.refreshByPath(s"$indexDir/postings")
-      s.catalog.refreshByPath(s"$indexDir/covered")
-    }
-    println(s"[probe] out rows: ${out.count()}")
-    val p = new org.apache.hadoop.fs.Path(root)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
-  /** One Louvain round-2 plan: replicate the round body and print the
-    * physical plan to check for residual Exchanges. */
-  private def louvainPlan(s: SparkSession, d: String): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-    val edges = li.as("a").join(li.as("b"),
-        col("a.l_orderkey") === col("b.l_orderkey")
-          && col("a.l_partkey") < col("b.l_partkey"))
-      .select(col("a.l_partkey").as("id1"), col("b.l_partkey").as("id2"))
-      .distinct()
-    val sym = edges.select(col("id1").as("a"), col("id2").as("b"))
-      .union(edges.select(col("id2").as("a"), col("id1").as("b")))
-      .repartition(col("a"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy("a").agg(count(lit(1)).as("k"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val m2 = sym.count()
-    val labels = deg.select(col("a").as("id"), col("a").as("lbl"))
-      .localCheckpoint()
-    val idside = labels.join(broadcast(deg), col("id") === col("a"))
-      .select(col("id"), col("lbl").as("own"), col("k"))
-    val sigma = idside.groupBy(col("own").as("c")).agg(sum(col("k")).as("sig"))
-    val nbr = sym.join(
-      broadcast(labels.select(col("id").as("b"), col("lbl").as("c"))), "b")
-      .select(col("a"), col("c"))
-    val scored = nbr.groupBy(col("a"), col("c"))
-      .agg(count(lit(1)).as("kic"))
-      .join(broadcast(sigma), Seq("c"))
-      .join(broadcast(idside), col("a") === col("id"))
-      .withColumn("score", lit(m2) * col("kic") - col("k")
-        * (col("sig")
-          - when(col("c") === col("own"), col("k")).otherwise(0L)))
-    val best = scored.groupBy(col("a"))
-      .agg(max_by(col("c"), struct(col("score"), -col("c"))).as("bc"),
-        max(struct(col("score").as("s"), (-col("c")).as("n"))).as("bk"),
-        first(col("own")).as("own"), first(col("k")).as("k"))
-    val next = best
-      .join(broadcast(sigma.select(col("c").as("own"),
-        col("sig").as("sigo"))), Seq("own"))
-      .select(col("a").as("id"),
-        when(struct((-(col("k") * (col("sigo") - col("k")))).as("s"),
-            (-col("own")).as("n")) > col("bk"),
-          col("own")).otherwise(col("bc")).as("lbl"),
-        col("own").as("__old"))
-    println(next.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode).split("\n")
-      .filter(l => l.contains("Exchange") || l.contains("Join") ||
-        l.contains("HashAggregate") || l.contains("(")).take(60)
-      .mkString("\n"))
-  }
+  private def explain(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
 
   /** Dump the REAL per-round physical plans of the iterative graph ops
     * (via [[graft.PlanTap]] — the ops' own loops offer each round's
@@ -307,17 +49,11 @@ object Probe {
     * later round plans identically to round 2. */
   private def roundPlans(s: SparkSession, d: String, outDir: String): Unit = {
     import graft.ops.{DedupOps, GraphOps}
-    import java.nio.file.{Files, Paths}
-    Files.createDirectories(Paths.get(outDir))
     val plans = scala.collection.mutable.Map[String, String]()
-    PlanTap.install(Some((label, df) => plans(label) =
-      df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)))
-    def dump(label: String, file: String): Unit = {
-      Files.writeString(Paths.get(outDir, file), plans.getOrElse(label,
+    PlanTap.install(Some((label, df) => plans(label) = explain(df)))
+    def dump(label: String, file: String): Unit =
+      write(outDir, file, plans.getOrElse(label,
         sys.error(s"plan tap missed $label — op converged early?")))
-      println(s"[probe] wrote $outDir/$file")
-    }
     // d46/d53/d31 shape: lineitem co-purchase pair graph
     val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
     val pairs = graft.Caches.track(
@@ -327,41 +63,32 @@ object Probe {
         .select(col("a.l_partkey").as("id1"), col("b.l_partkey").as("id2"))
         .distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    t("louvainOneLevel") {
-      GraphOps.louvainOneLevel(pairs, "id1", "id2", iters = 4).count()
-    }
+    GraphOps.louvainOneLevel(pairs, "id1", "id2", iters = 4).count()
     dump("louvain_round2", "louvain_round2_after.txt")
-    t("labelPropagation") {
-      GraphOps.labelPropagation(pairs, "id1", "id2", iters = 4).count()
-    }
+    GraphOps.labelPropagation(pairs, "id1", "id2", iters = 4).count()
     dump("labelPropagation_round2", "lpa_round2_after.txt")
-    t("kCore") {
-      GraphOps.kCore(pairs, "id1", "id2", k = 80, rounds = 8).count()
-    }
+    GraphOps.kCore(pairs, "id1", "id2", k = 80, rounds = 8).count()
     dump("kCore_round2", "kcore_round2_after.txt")
     // d20 shape: jaccard pair graph over documents
     val jp = DedupOps.jaccardPairs(Tables.documents(s, d), "doc_id",
       "text", n = 3, threshold = 0.5)
-    t("pageRank") { GraphOps.pageRank(jp, "id1", "id2").count() }
+    GraphOps.pageRank(jp, "id1", "id2").count()
     dump("pageRank_round2", "pagerank_round2_after.txt")
     // kCore BEFORE: the identical loop with the partitioned checkpoint
     // disabled — every round re-plans the Exchange the bridge removes
     sys.props("graft.noPartitionedCheckpoint") = "1"
     try {
-      t("kCore (plain localCheckpoint)") {
-        GraphOps.kCore(pairs, "id1", "id2", k = 80, rounds = 8).count()
-      }
+      GraphOps.kCore(pairs, "id1", "id2", k = 80, rounds = 8).count()
       dump("kCore_round2", "kcore_round2_before.txt")
     } finally sys.props.remove("graft.noPartitionedCheckpoint")
-    // fallback evidence: force the |V| gate shut — every per-round join
-    // must fall back to the keyed shuffle, exactly the big-graph path
-    sys.props("graft.broadcastVertexLimit") = "0"
+    // fallback evidence: force the broadcast row gate shut — every
+    // per-round join must fall back to the keyed shuffle, exactly the
+    // big-graph path
+    sys.props("graft.broadcastRowLimit") = "0"
     try {
-      t("louvainOneLevel (broadcast gate shut)") {
-        GraphOps.louvainOneLevel(pairs, "id1", "id2", iters = 4).count()
-      }
+      GraphOps.louvainOneLevel(pairs, "id1", "id2", iters = 4).count()
       dump("louvain_round2", "louvain_round2_nobroadcast.txt")
-    } finally sys.props.remove("graft.broadcastVertexLimit")
+    } finally sys.props.remove("graft.broadcastRowLimit")
     PlanTap.install(None)
   }
 
@@ -371,253 +98,14 @@ object Probe {
     * one lazy frame — explain works directly, no tap needed. */
   private def knnPlans(s: SparkSession, d: String, outDir: String): Unit = {
     import graft.ops.SimilarityOps
-    import java.nio.file.{Files, Paths}
-    Files.createDirectories(Paths.get(outDir))
     def build() = SimilarityOps.knnGraphBuild(Tables.embeddings(s, d),
       "vec_id", "embedding", m = 4, tables = 8, bits = 4,
       planesFlat = Some(SimilarityOps.hyperplanesPortable(32, 64)))
-    def dump(df: DataFrame, file: String): Unit = {
-      Files.writeString(Paths.get(outDir, file),
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      println(s"[probe] wrote $outDir/$file")
-    }
     sys.props("graft.knnBlockedMinRows") = "0" // sf0.1 sits below the floor
-    try dump(build(), "v38_knn_graph_build_after.txt")
+    try write(outDir, "v38_knn_graph_build_after.txt", explain(build()))
     finally { sys.props.remove("graft.knnBlockedMinRows"); graft.Caches.clear() }
     sys.props("graft.knnBroadcastRows") = "0" // force the keyed path
-    try dump(build(), "v38_knn_graph_build_before.txt")
+    try write(outDir, "v38_knn_graph_build_before.txt", explain(build()))
     finally { sys.props.remove("graft.knnBroadcastRows"); graft.Caches.clear() }
-  }
-
-  /** d03 jaccardPairs step attribution + per-stage task maxima (the
-    * sf1 straggler hunt): posting build, occ, the chunked inter join,
-    * sizes, full gate. */
-  private def jaccardProbe(s: SparkSession, d: String): Unit = {
-    import graft.ops.DedupOps
-    import org.apache.spark.scheduler.{SparkListener,
-      SparkListenerStageCompleted, SparkListenerTaskEnd}
-    val stageMax = scala.collection.concurrent.TrieMap.empty[Int, (String, Long, Int)]
-    s.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskInfo != null && te.taskInfo.successful) {
-          val (n, mx, c) = stageMax.getOrElse(te.stageId, ("?", 0L, 0))
-          stageMax(te.stageId) =
-            (n, math.max(mx, te.taskInfo.duration), c + 1)
-        }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val (_, mx, c) = stageMax.getOrElse(si.stageId, ("?", 0L, 0))
-        stageMax(si.stageId) = (si.name.take(60), mx, c)
-      }
-    })
-    val docs = Tables.documents(s, d)
-    val sh = graft.Caches.track(
-      DedupOps.spread(docs.select(col("doc_id").as("id"),
-          col("text").as("__txt")), "id")
-        .select(col("id"), explode(
-          graft.functions.ShingleHashes.shingleHashes(col("__txt"), 3))
-          .as("sh"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    t("sh persist") { sh.count() }
-    t("occ over threshold") {
-      println("[probe] hot shingles: " + sh.groupBy("sh")
-        .agg(count(lit(1)).as("o")).filter(col("o") > 1024).count())
-    }
-    t("occ top5") {
-      sh.groupBy("sh").agg(count(lit(1)).as("o"))
-        .orderBy(col("o").desc).limit(5).collect()
-        .foreach(r => println(s"[probe]   sh=${r.getLong(0)} occ=${r.getLong(1)}"))
-    }
-    t("full d03 gate") {
-      SparkEntry.queries("d03_jaccard_pairs")(s, d).count()
-    }
-    println("[probe] stages by MAX task duration (ms):")
-    stageMax.toSeq.sortBy(-_._2._2).take(10).foreach {
-      case (id, (n, ms, c)) =>
-        println(f"[probe]   stage $id%4d maxTask $ms%8d ms  tasks $c%4d  $n")
-    }
-  }
-
-  /** rebuildWithoutCovered micro-attribution: times each piece of the
-    * r17 touched/untouched split over the d50 wave-2 shapes and dumps
-    * the executed plan of the output frame. */
-  private def rebuildProbe(s: SparkSession, d: String): Unit = {
-    import graft.ops.{DedupOps, TextOps}
-    import org.apache.spark.storage.StorageLevel
-    val docs = Tables.documents(s, d)
-    val w2 = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-    val (idCol, textCol, k) = ("doc_id", "text", 50)
-    val base2 = graft.Caches.track(
-      DedupOps.spread(w2.select(col(idCol).as("id"),
-          col(textCol).as("__txt")), "id")
-        .select(col("id"),
-          graft.functions.NgramText.ngramText(col("__txt"), k).as("__gs"),
-          TextOps.tokens(col("__txt")).as("__ts"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    t("base2 persist") { base2.count() }
-    val posts2 = base2
-      .select(col("id"), posexplode(col("__gs")))
-      .select(col("id"), col("pos").cast("long").as("pos"),
-        DedupOps.portableHash60(col("col")).as("h"))
-    val cand = posts2.groupBy("h")
-      .agg(count_distinct(col("id")).as("__cd"))
-      .filter(col("__cd") >= 2).select("h")
-    val grams = graft.Caches.track(base2
-      .select(col("id"), posexplode(col("__gs")))
-      .select(col("id"), col("pos").cast("long").as("pos"),
-        col("col").as("g"), DedupOps.portableHash60(col("col")).as("h"))
-      .join(cand, Seq("h"), "left_semi")
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val verified = grams.groupBy("h", "g")
-      .agg(count_distinct(col("id")).as("__cd"))
-      .filter(col("__cd") >= 2).select("h", "g")
-    val covered2 = graft.Caches.track(
-      grams.join(verified, Seq("h", "g"), "left_semi")
-        .select(col("id"),
-          explode(sequence(col("pos"), col("pos") + (k - 1))).as("p"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    t("covered2 persist") { covered2.count() }
-    // === the rebuild body, piece by piece ===
-    val covIds = graft.Caches.track(covered2.select(col("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val nCov = t("covIds count") { covIds.count() }
-    println(s"[probe] nCov=$nCov")
-    val touched = base2.join(broadcast(covIds), Seq("id"), "left_semi")
-    t("touched count") { touched.count() }
-    val untouchedOut = base2.join(broadcast(covIds), Seq("id"), "left_anti")
-      .select(col("id").as(idCol),
-        size(col("__ts")).cast("long").as("n_tokens"),
-        size(col("__ts")).cast("long").as("kept"),
-        array_join(col("__ts"), " ").as("clean_text"))
-    t("untouched projection count") { untouchedOut.count() }
-    val toks = touched.select(col("id"), posexplode(col("__ts")))
-      .select(col("id"), col("pos").cast("long").as("p"),
-        col("col").as("tok"))
-    t("toks count") { toks.count() }
-    val kept = toks.join(covered2, Seq("id", "p"), "left_anti")
-      .groupBy("id")
-      .agg(count(lit(1)).as("kept"),
-        array_join(transform(
-          array_sort(collect_list(struct(col("p"), col("tok")))),
-          x => x.getField("tok")), " ").as("clean_text"))
-    t("kept agg count") { kept.count() }
-    val touchedOut = touched
-      .select(col("id"), size(col("__ts")).cast("long").as("n_tokens"))
-      .join(kept, Seq("id"), "left")
-      .select(col("id").as(idCol), col("n_tokens"),
-        coalesce(col("kept"), lit(0L)).as("kept"),
-        coalesce(col("clean_text"), lit("")).as("clean_text"))
-    val full = touchedOut.unionByName(untouchedOut)
-    t("full union count") { full.count() }
-    t("full union localCheckpoint") { full.localCheckpoint(true) }
-    t("op rebuild call count") {
-      DedupOps.rebuildWithoutCovered(base2, covered2, idCol).count() }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/tmp/rebuild_plan.txt"),
-      full.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    println("[probe] wrote /tmp/rebuild_plan.txt")
-  }
-
-  /** knnGraphBuild duplicate-pair factor + step attribution: how many
-    * pair-occurrences does the blocked path score (Σ_{t,b} occ·(occ−1))
-    * vs the DISTINCT colliding pairs the keyed path dedups first
-    * (HLL over the pair key — no occ²-row shuffle). A factor ≫1 means
-    * the blocked path re-scores the same pair once per shared table
-    * and a first-shared-table filter is worth building. */
-  private def knnDup(s: SparkSession, d: String): Unit = {
-    import graft.ops.{DedupOps, SimilarityOps}
-    val c = DedupOps.withNorm(Tables.embeddings(s, d), "vec_id",
-      "embedding", "id", "e", "n")
-    val posts = graft.Caches.track(c
-      .select(col("id"), SimilarityOps.lshBuckets(col("e"), 8, 4, 64,
-        Some(SimilarityOps.hyperplanesPortable(32, 64))).as("__bkts"))
-      .select(col("id"), posexplode(col("__bkts")))
-      .toDF("id", "table", "bucket")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val occ = t("occ: pair occurrences = sum occ*(occ-1)") {
-      posts.groupBy("table", "bucket").agg(count(lit(1)).as("o"))
-        .agg(sum(col("o") * (col("o") - 1))).head().getLong(0)
-    }
-    val dis = t("distinct pairs (approx HLL, map-side only)") {
-      posts.as("a").join(posts.as("b"),
-          col("a.table") === col("b.table")
-            && col("a.bucket") === col("b.bucket")
-            && col("a.id") =!= col("b.id"))
-        .agg(approx_count_distinct(
-          col("a.id") * lit(1000000007L) + col("b.id"), 0.02))
-        .head().getLong(0)
-    }
-    println(f"[probe] occurrences=$occ distinct~$dis dupFactor=${occ.toDouble / math.max(1L, dis)}%.2f")
-  }
-
-  /** v19 IVF-PQ append gate, step by step. */
-  private def ivfpq(s: SparkSession, d: String): Unit = {
-    import graft.ops.SimilarityOps
-    val Grid = 0.5 / (1 << 20)
-    val e = Tables.embeddings(s, d)
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_probe_v19").toString
-    val train = e.filter(pmod(col("vec_id"), lit(10)) =!= 0)
-    val batch = e.filter(pmod(col("vec_id"), lit(10)) === 0)
-    t("ivfPqBuild") {
-      SimilarityOps.ivfPqBuild(train, "vec_id", "embedding",
-        outDir = idx, nClusters = 16, m = 8, codebook = 16,
-        kmeansIters = 3, grid = Some(Grid), cacheKey = Some(s"$d:train90"))
-    }
-    t("ivfPqAppend") {
-      SimilarityOps.ivfPqAppend(idx, batch, "vec_id", "embedding",
-        grid = Some(Grid))
-    }
-    t("ivfPqProbe + checkpoint") {
-      SimilarityOps.ivfPqProbe(idx,
-          e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 5,
-          nProbe = 4, grid = Some(Grid))
-        .orderBy("qid", "rk")
-        .localCheckpoint(true)
-    }
-    val nf = {
-      val p = new org.apache.hadoop.fs.Path(s"$idx/postings")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val it = fs.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.startsWith("part-")) n += 1 }
-      n
-    }
-    println(s"[probe] postings part files: $nf")
-    val p = new org.apache.hadoop.fs.Path(idx)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
-  /** d46 Louvain gate, step by step. */
-  private def louvain(s: SparkSession, d: String): Unit = {
-    import graft.ops.GraphOps
-    val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-    val pairs = t("pairs build (self-join + distinct)") {
-      val p = graft.Caches.track(
-        li.as("a").join(li.as("b"),
-            col("a.l_orderkey") === col("b.l_orderkey")
-              && col("a.l_partkey") < col("b.l_partkey"))
-          .select(col("a.l_partkey").as("id1"),
-            col("b.l_partkey").as("id2"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      println(s"[probe] pairs rows: ${p.count()}")
-      p
-    }
-    val lou = t("louvainOneLevel (4 rounds)") {
-      val l = GraphOps.louvainOneLevel(pairs, "id1", "id2", iters = 4)
-      l.count(); l
-    }
-    val lpa = t("labelPropagation (4 rounds)") {
-      val l = GraphOps.labelPropagation(pairs, "id1", "id2", iters = 4)
-      l.count(); l
-    }
-    t("modularityQ (both partitions)") {
-      GraphOps.modularityQ(pairs, "id1", "id2",
-        Seq(("lou", lou, "id", "lbl"), ("lpa", lpa, "id", "lbl")))
-    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
@@ -16,7 +17,7 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Usage: runMain graft.Rehearsal <sfDir> <name,name,...>
   * One JSON line per query + a final `{"rehearsal":...}` summary line
-  * (same tail-parse discipline as Bench). */
+  * (same tail-parse discipline as Bench) with a `"failed"` list. */
 object Rehearsal {
   private class SkewListener extends SparkListener {
     val stages = TrieMap.empty[Int, ArrayBuffer[Long]]
@@ -28,56 +29,50 @@ object Rehearsal {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val spark =
-      Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-        "graft-rehearsal")
+    val gates = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      .map(n => n -> SparkEntry.queries(n))
+    Harness.report("graft-rehearsal", "32") { spark =>
+      Harness.warm(spark, sfDir, Seq(SparkEntry.queries(Harness.warmUpGate)))
+      rehearse(spark, sfDir, gates)
+    }
+  }
+
+  /** Run each gate once with the skew listener attached, printing one line
+    * per gate, and return the summary line. A gate that throws prints its
+    * error and is listed under "failed", outside the total, so a rehearsal
+    * with a failed gate cannot pass as a faster one. */
+  private[graft] def rehearse(spark: SparkSession, sfDir: String,
+      gates: Seq[(String, Harness.Gate)]): String = {
+    import Harness.r3
     val listener = new SkewListener
     spark.sparkContext.addSparkListener(listener)
-    def r3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // one fixed warm-up absorbs JVM/codegen startup (the Canary recipe)
-    try SparkEntry.queries("f03_q1_agg")(spark, sfDir).count()
-    catch { case _: Throwable => () }
-    finally Caches.clear()
-    val out = names.map { n =>
+    val runs = try gates.map { case (n, gate) =>
       listener.stages.clear()
-      val t0 = System.nanoTime()
-      val rows =
-        try SparkEntry.queries(n)(spark, sfDir).count()
-        catch { case e: Throwable =>
+      n -> (Harness.run(spark, sfDir, gate) match {
+        case Left(e) =>
           println(s"""{"q":"$n","error":"${e.getClass.getSimpleName}"}""")
-          -1L }
-        finally Caches.clear()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // worst straggler ratio over stages large enough to mean anything
-      val (skew, skewTasks, maxTaskSec) = {
-        val sts = listener.stages.values.map(_.toSeq).filter(_.size >= 8)
-        val maxT = listener.stages.values
-          .flatMap(_.toSeq).foldLeft(0L)(math.max) / 1e3
-        if (sts.isEmpty) (1.0, 0, maxT)
-        else {
-          val worst = sts.maxBy(d => d.max.toDouble /
-            math.max(1L, d.sorted.apply(d.size / 2)))
-          (worst.max.toDouble / math.max(1L, worst.sorted.apply(worst.size / 2)),
-            worst.size, maxT)
-        }
-      }
-      println(s"""{"q":"$n","sec":${r3(sec)},"rows":$rows,""" +
-        s""""skew":${r3(skew)},"skewStageTasks":$skewTasks,""" +
-        s""""maxTaskSec":${r3(maxTaskSec)}}""")
-      (n, sec, skew)
-    }
-    try {
-      spark.streams.active.foreach(q => try q.stop() catch {
-        case _: Throwable => () })
-      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    } catch { case _: Throwable => () }
-    println(s"""{"rehearsal":"$sfDir","queries":""" +
-      out.map { case (n, s, _) => s""""$n":${r3(s)}""" }
-        .mkString("{", ",", "}") +
-      s""","total":${r3(out.map(_._2).sum)},""" +
-      s""""worstSkew":${r3(out.map(_._3).foldLeft(1.0)(math.max))}}""")
-    spark.stop()
+          None
+        case Right(sample) =>
+          // worst straggler ratio over stages large enough to mean anything
+          val sts = listener.stages.values.map(_.toSeq).filter(_.size >= 8)
+          val maxTaskSec = listener.stages.values
+            .flatMap(_.toSeq).foldLeft(0L)(math.max) / 1e3
+          val (skew, skewTasks) =
+            if (sts.isEmpty) (1.0, 0)
+            else sts.map(d => (d.max.toDouble /
+              math.max(1L, d.sorted.apply(d.size / 2)), d.size)).maxBy(_._1)
+          println(s"""{"q":"$n","sec":${r3(sample.sec)},"rows":${sample.rows},""" +
+            s""""skew":${r3(skew)},"skewStageTasks":$skewTasks,""" +
+            s""""maxTaskSec":${r3(maxTaskSec)}}""")
+          Some((sample.sec, skew))
+      })
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val timed = runs.collect { case (n, Some((sec, skew))) => (n, sec, skew) }
+    val failed = runs.collect { case (n, None) => n }
+    s"""{"rehearsal":"$sfDir","queries":""" +
+      Harness.js(timed.map(t => t._1 -> t._2)) +
+      s""","total":${r3(timed.map(_._2).sum)},""" +
+      s""""worstSkew":${r3(timed.map(_._3).foldLeft(1.0)(math.max))},""" +
+      s""""failed":${Harness.jsNames(failed)}}"""
   }
 }

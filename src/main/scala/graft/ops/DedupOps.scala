@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import GraphOps.hintIfSmall
+
 /** Deduplication for large-scale training-data pipelines: exact (hash
   * groupBy), n-gram Jaccard near-dup (inverted shingle index), MinHash+LSH
   * banding, SimHash, and embedding-cosine near-dup.
@@ -30,16 +32,6 @@ object DedupOps {
     * when the scan already splits wider than the session width the
     * exchange is a cheap rebalance and AQE coalesces it, and keying by id
     * lets the id-keyed aggregations downstream reuse the partitioning. */
-  /** Measured-row broadcast gate (the GraphOps hintIfSmall doctrine for
-    * the dedup ops): hint only when the MEASURED row count fits; above
-    * the limit the caller's keyed join plans unchanged. 4M rows of
-    * 8-byte keys is the same envelope the graph ops use.
-    * -Dgraft.broadcastRowLimit=N to retune for a cluster. */
-  private def hintRows(df: DataFrame, measuredRows: Long): DataFrame =
-    if (measuredRows <= sys.props.get("graft.broadcastRowLimit")
-        .map(_.toLong).getOrElse(4L * 1024 * 1024)) broadcast(df)
-    else df
-
   private[graft] def spread(df: DataFrame, key: String): DataFrame = {
     val width = df.sparkSession.sessionState.conf.numShufflePartitions
     df.repartition(width, col(key))
@@ -618,7 +610,7 @@ object DedupOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val intra = hagg.filter(col("__cd") >= 2).select("h")
     val cross = idxPosts
-      .join(hintRows(hagg.select("h"), nPosts2), Seq("h"), "left_semi")
+      .join(hintIfSmall(hagg.select("h"), nPosts2), Seq("h"), "left_semi")
       .select("h").distinct()
     val cand = graft.Caches.track(intra.unionByName(cross).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -634,17 +626,17 @@ object DedupOps {
     // nearly the whole postings artifact, so the cache write dwarfed
     // the saved scan; two map-only broadcast-probe scans are cheaper.)
     val touchedScan = graft.Caches.track(
-      idxPosts.join(hintRows(hagg.select("h"), nPosts2), Seq("h"), "left_semi")
+      idxPosts.join(hintIfSmall(hagg.select("h"), nPosts2), Seq("h"), "left_semi")
         .select(col("id")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val nTouched = touchedScan.count() // |touched indexed docs|
     val base1 = substrBase(
       indexed.join(
-        hintRows(touchedScan.withColumnRenamed("id", idCol), nTouched),
+        hintIfSmall(touchedScan.withColumnRenamed("id", idCol), nTouched),
         Seq(idCol), "left_semi"), idCol, textCol, k)
     val grams = graft.Caches.track(
-      substrGrams(base2, hintRows(cand, nPosts2))
-        .unionByName(substrGrams(base1, hintRows(cand, nPosts2)))
+      substrGrams(base2, hintIfSmall(cand, nPosts2))
+        .unionByName(substrGrams(base1, hintIfSmall(cand, nPosts2)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val verified = grams.groupBy("h", "g")
       .agg(count_distinct(col("id")).as("__cd"))
@@ -680,9 +672,9 @@ object DedupOps {
     val coveredOld = spark.read.parquet(s"$indexDir/covered")
     val out = rebuildWithoutCovered(
       base2.unionByName(
-        base1.join(hintRows(touched1, nTouched), Seq("id"), "left_semi")),
+        base1.join(hintIfSmall(touched1, nTouched), Seq("id"), "left_semi")),
       coveredNew.unionByName(
-        coveredOld.join(hintRows(touched1, nTouched), Seq("id"), "left_semi")),
+        coveredOld.join(hintIfSmall(touched1, nTouched), Seq("id"), "left_semi")),
       idCol).localCheckpoint(true) // pin BEFORE the artifact append below
     // postings/covered delta → the artifact absorbs the shard.
     // ORDER MATTERS (r16, measured −8 s/wave at sf0.1): a write to a live

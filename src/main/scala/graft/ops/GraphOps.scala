@@ -15,25 +15,24 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraphOps {
 
-  /** Row-count gate for the community ops' label/σ/degree frames: these
-    * are |vertices|-bounded, which is SMALL on the gate fixtures (~20k —
-    * broadcasting them measured faster than shuffling the edge frame)
-    * but grows linearly with the graph — on a 10⁸–10⁹-vertex pair graph
-    * a forced `broadcast()` collects gigabytes to the driver and OOMs
-    * where a keyed shuffle join (pageRank's shape) degrades gracefully.
-    * So the hint is applied only below a measured row count: 4M rows ≈
-    * ~100 MB broadcast at 24 B/row, inside ordinary executor budgets.
-    * The caller measures |V| ONCE (outside its round loop — vertex sets
-    * are fixed across rounds) and passes it here; above the limit the
-    * frame is returned unhinted and AQE/stats pick the join strategy. */
-  // Parameterised for cluster deployments (and for the Probe's
-  // above-limit plan dumps): -Dgraft.broadcastVertexLimit=N. The local
-  // default stays 4M — the measured sweet spot on the gate fixtures.
-  private def broadcastVertexLimit: Long =
-    sys.props.get("graft.broadcastVertexLimit").map(_.toLong)
-      .getOrElse(4L * 1024 * 1024)
-  private def hintIfSmall(df: DataFrame, measuredRows: Long): DataFrame =
-    if (measuredRows <= broadcastVertexLimit) broadcast(df) else df
+  /** Measured-row broadcast gate for narrow key frames (~24 B/row): the
+    * graph ops' label/σ/degree frames and the dedup ops' screens and
+    * touched-id sets. These are SMALL on the gate fixtures (~20k rows —
+    * broadcasting them measured faster than shuffling the edge or
+    * posting frame) but grow linearly with the data — on a
+    * 10⁸–10⁹-vertex pair graph a forced `broadcast()` collects gigabytes
+    * to the driver and OOMs where a keyed shuffle join (pageRank's shape)
+    * degrades gracefully. So the hint is applied only below a measured
+    * row count: 4M rows ≈ ~100 MB broadcast, inside ordinary executor
+    * budgets. The caller measures the rows ONCE (outside any round loop)
+    * and passes them here; above the limit the frame is returned
+    * unhinted and AQE/stats pick the join strategy.
+    * -Dgraft.broadcastRowLimit=N retunes it for a cluster (and shuts it
+    * for the Probe's above-limit plan dumps). */
+  private[ops] def hintIfSmall(df: DataFrame, measuredRows: Long): DataFrame =
+    if (measuredRows <= sys.props.get("graft.broadcastRowLimit")
+        .map(_.toLong).getOrElse(4L * 1024 * 1024)) broadcast(df)
+    else df
 
   /** The iterative ops' shared symmetric edge frame: both orientations,
     * hash-partitioned by the scoring vertex `a` ONCE (guide §2.4 — the
@@ -75,11 +74,7 @@ object GraphOps {
     // init aggregation and every round's hash-to-min group by `a` and
     // ride this one exchange; the label joins below are size-gated
     // broadcasts — zero exchanges per round below the limit
-    val sym = graft.Caches.track(
-      edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-        .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-        .repartition(col("a"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val sym = symmetrize(edges, srcCol, dstCol)
 
     // Lineage MUST be cut every iteration (localCheckpoint, eager):
     // persist alone keeps the logical plan, and each round references the

@@ -251,15 +251,6 @@ class CollectLintSpec extends AnyFunSuite {
     "SparkEntry.scala" -> Map(
       "val maxI = o.agg(max(col(\"o_orderkey\"))).head().getLong(0) // 1-row probe" ->
         "s105 checkpoint width: 1-row max probe"),
-    // Probe is the measurement scratch main (never on the bench/verify
-    // path); its driver pulls are diagnostic scalars/top-5 rows
-    "Probe.scala" -> Map(
-      ".orderBy(col(\"o\").desc).limit(5).collect()" ->
-        "knn_dup occupancy diagnostic: limit(5) rows",
-      ".agg(sum(col(\"o\") * (col(\"o\") - 1))).head().getLong(0)" ->
-        "knn_dup pair-occurrence total: 1-row aggregate",
-      ".head().getLong(0)" ->
-        "knn_dup HLL distinct-pairs estimate: 1-row aggregate"),
     "SimilarityQueries.scala" -> Map(
       ".collect().map(_.getSeq[Double](1).toArray) // k x dim driver state" ->
         "v29 centroid artifact reload: k × dim",

@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards on the measurement/memo harness itself: the bench final-line
-  * parse budget (the driver reads one ~2000-char stdout tail) and the
-  * session-lifetime training memo semantics. */
+  * parse budget (the driver reads one ~2000-char stdout tail), failed
+  * gates never counted as samples, and the session-lifetime training memo
+  * semantics. */
 class HarnessSpec extends AnyFunSuite with SparkFixture {
 
   test("Bench final line stays under the driver parse budget even with " +
@@ -30,6 +31,36 @@ class HarnessSpec extends AnyFunSuite with SparkFixture {
     val line = Bench.renderFinal(med, Seq.empty, 1.75, "/tmp/sf")
     assert(line.contains(""""f03_q1_agg":0.500"""))
     assert(line.contains(""""d01_exact_dedup":1.250"""))
+  }
+
+  private val ok: Harness.Gate = (s, _) => s.range(10).toDF()
+  private val boom: Harness.Gate =
+    (_, _) => throw new IllegalStateException("gate failed")
+  private def field(line: String, key: String): String =
+    ("\"" + key + "\":([0-9.]+)").r.findFirstMatchIn(line).get.group(1)
+
+  test("a gate that throws yields its failure, not a sample") {
+    assert(Harness.run(spark, "/tmp/sf", boom).isLeft)
+    assert(Harness.run(spark, "/tmp/sf", ok).map(_.rows) == Right(10L))
+  }
+
+  test("Bench lists a throwing gate as failed, outside medians, total " +
+    "and n_queries") {
+    val (detail, last) =
+      Bench.bench(spark, "/tmp/sf", Seq("ok_gate" -> ok, "boom_gate" -> boom))
+    assert(detail.contains(""""failed":["boom_gate"]"""))
+    assert(!detail.contains(""""boom_gate":"""))
+    assert(last.startsWith("""{"metric":"total","value":"""))
+    assert(last.contains(""""n_queries":1,"""))
+    assert(field(last, "value") == field(detail, "ok_gate"))
+  }
+
+  test("Rehearsal lists a throwing gate as failed, outside its total") {
+    val line = Rehearsal.rehearse(spark, "/tmp/sf",
+      Seq("ok_gate" -> ok, "boom_gate" -> boom))
+    assert(line.contains(""""failed":["boom_gate"]"""))
+    assert(!line.contains(""""boom_gate":"""))
+    assert(field(line, "total") == field(line, "ok_gate"))
   }
 
   test("Caches.memo computes once per key and isolates keys") {
