@@ -26,9 +26,13 @@ object Caches {
   /** Number of currently-tracked cache entries (for specs/monitoring). */
   def size: Int = synchronized(tracked.size)
 
-  /** Unpersist (non-blocking) and forget every tracked Dataset. */
+  /** Unpersist (non-blocking) and forget every tracked Dataset, newest
+    * first. A frame is tracked after the frames it is built from, and
+    * `unpersist` does not cascade: releasing a parent while a dependent
+    * is still cached makes the CacheManager re-plan that dependent
+    * against the uncached parent, work thrown away one call later. */
   def clear(): Unit = synchronized {
-    tracked.foreach(_.unpersist(blocking = false))
+    tracked.reverseIterator.foreach(_.unpersist(blocking = false))
     tracked.clear()
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import GraphOps.hintIfSmall
+import org.apache.spark.sql.graftbridge.CheckpointBridge.pin
 
 /** Deduplication for large-scale training-data pipelines: exact (hash
   * groupBy), n-gram Jaccard near-dup (inverted shingle index), MinHash+LSH
@@ -453,14 +454,19 @@ object DedupOps {
 
   /** Staged (id, k-token windows, tokens) frame of [[exactSubstrDedup]]
     * and its incremental siblings — heavy arrays materialized in a
-    * Project before any Generate consumes them. */
+    * Project before any Generate consumes them. Persisted for the batch
+    * callers; [[exactSubstrIncremental]] pins the plan instead. */
   private def substrBase(df: DataFrame, idCol: String, textCol: String,
                          k: Int): DataFrame = graft.Caches.track(
+    substrBasePlan(df, idCol, textCol, k)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  private def substrBasePlan(df: DataFrame, idCol: String, textCol: String,
+                             k: Int): DataFrame =
     spread(df.select(col(idCol).as("id"), col(textCol).as("__txt")), "id")
       .select(col("id"),
         graft.functions.NgramText.ngramText(col("__txt"), k).as("__gs"),
         TextOps.tokens(col("__txt")).as("__ts"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** (id, pos, h) window-hash postings — 8-byte fingerprints only, the
     * screen-pass payload (and the INDEX artifact's rows). */
@@ -494,12 +500,15 @@ object DedupOps {
     * on a second codegen'd scan and semi-joined down BEFORE any string
     * shuffles. Persisted — the verify pass reads it twice (group + semi). */
   private def substrGrams(base: DataFrame, cand: DataFrame): DataFrame =
-    graft.Caches.track(base
+    graft.Caches.track(substrGramsPlan(base, cand)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  private def substrGramsPlan(base: DataFrame, cand: DataFrame): DataFrame =
+    base
       .select(col("id"), posexplode(col("__gs")))
       .select(col("id"), col("pos").cast("long").as("pos"),
         col("col").as("g"), portableHash60(col("col")).as("h"))
       .join(cand, Seq("h"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Verified-window positional union: every token position inside a
     * verified window, as a bounded ×k explode + distinct. */
@@ -572,6 +581,13 @@ object DedupOps {
     * BEFORE the heavy arrays). Returns (id, n_tokens, kept, clean_text)
     * for shard docs ∪ touched indexed docs.
     *
+    * A wave leaves NO `CacheManager` entries and no [[graft.Caches]]
+    * registrations: every intermediate, and the returned frame, is an
+    * eager bridge checkpoint ([[org.apache.spark.sql.graftbridge.CheckpointBridge.pin]])
+    * sized by the shard or its touched docs. The returned rows are
+    * fixed before the artifact append, so the caller may read them
+    * after it and more than once.
+    *
     * Caller contract (the applyCdc discipline): shard ids are NEW —
     * disjoint from the indexed ids. A re-crawled doc (same id, new
     * text) must be retired from the artifact first (drop its postings
@@ -582,9 +598,16 @@ object DedupOps {
                              arriving: DataFrame, idCol: String,
                              textCol: String, k: Int): DataFrame = {
     val spark = arriving.sparkSession
-    val base2 = substrBase(arriving, idCol, textCol, k)
-    val posts2 = graft.Caches.track(substrPosts(base2)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // Every intermediate below is PINNED (eager, constraint-free local
+    // checkpoint), never persisted: each is consumed before this call
+    // returns, and cand/touchedScan/base1/grams/coveredNew read the
+    // `postings` or `corpus` path this wave appends to, so a persisted
+    // copy would be re-planned by the CacheManager on every append,
+    // on every unpersist of a frame it was built from, and nested into
+    // every downstream plan AQE re-renders. Each pinned frame is
+    // shard-sized or touched-docs-sized, never index-sized.
+    val base2 = pin(substrBasePlan(arriving, idCol, textCol, k))
+    val posts2 = pin(substrPosts(base2))
     // r17: every screen-side semi-join below builds against a frame
     // that is SHARD-sized (shard hashes, candidate hashes, touched doc
     // ids) while its probe side is index/corpus-sized. Size-gate each
@@ -593,8 +616,8 @@ object DedupOps {
     // indexed corpus are SCANNED IN PLACE instead of shuffled by h/id —
     // the per-wave shuffle payload drops to the verified sliver only.
     // Above the limit everything falls back to the keyed joins
-    // unchanged. Counts come from frames that are persisted anyway.
-    val nPosts2 = posts2.count() // materializes the persist — 1 scalar
+    // unchanged. Counts come from frames that are pinned anyway.
+    val nPosts2 = posts2.count() // 1 scalar over the pinned blocks
     val idxPosts = spark.read.parquet(s"$indexDir/postings")
     // 1 — screen: intra-shard collisions + shard∩index hash hits, from
     // ONE shard aggregation (r17 §1.2 — the old shape aggregated posts2
@@ -605,15 +628,13 @@ object DedupOps {
     // The shuffle payload is the SHARD's 8-byte postings; the index
     // side stays a keyed semi-join (bucketed-by-h artifact co-locates
     // it at scale).
-    val hagg = graft.Caches.track(posts2.groupBy("h")
-      .agg(count_distinct(col("id")).as("__cd"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val hagg = pin(posts2.groupBy("h")
+      .agg(count_distinct(col("id")).as("__cd")))
     val intra = hagg.filter(col("__cd") >= 2).select("h")
     val cross = idxPosts
       .join(hintIfSmall(hagg.select("h"), nPosts2), Seq("h"), "left_semi")
       .select("h").distinct()
-    val cand = graft.Caches.track(intra.unionByName(cross).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cand = pin(intra.unionByName(cross).distinct())
     // 2 — verify over the union sliver: indexed docs surface via the
     // artifact (never a corpus scan), and only THEIR text re-tokenizes.
     // Probe by the SHARD hashes directly, not by cand: an index row
@@ -625,26 +646,23 @@ object DedupOps {
     // SLOWER at sf0.1 — on a near-dup-heavy corpus the matched set is
     // nearly the whole postings artifact, so the cache write dwarfed
     // the saved scan; two map-only broadcast-probe scans are cheaper.)
-    val touchedScan = graft.Caches.track(
+    val touchedScan = pin(
       idxPosts.join(hintIfSmall(hagg.select("h"), nPosts2), Seq("h"), "left_semi")
-        .select(col("id")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col("id")).distinct())
     val nTouched = touchedScan.count() // |touched indexed docs|
-    val base1 = substrBase(
+    val base1 = pin(substrBasePlan(
       indexed.join(
         hintIfSmall(touchedScan.withColumnRenamed("id", idCol), nTouched),
-        Seq(idCol), "left_semi"), idCol, textCol, k)
-    val grams = graft.Caches.track(
-      substrGrams(base2, hintIfSmall(cand, nPosts2))
-        .unionByName(substrGrams(base1, hintIfSmall(cand, nPosts2)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        Seq(idCol), "left_semi"), idCol, textCol, k))
+    // read twice below (verify group + coverage semi-join)
+    val grams = pin(
+      substrGramsPlan(base2, hintIfSmall(cand, nPosts2))
+        .unionByName(substrGramsPlan(base1, hintIfSmall(cand, nPosts2))))
     val verified = grams.groupBy("h", "g")
       .agg(count_distinct(col("id")).as("__cd"))
       .filter(col("__cd") >= 2)
       .select("h", "g")
-    val coveredNew = graft.Caches.track(
-      substrCoverage(grams, verified, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val coveredNew = pin(substrCoverage(grams, verified, k))
     // 3 — rebuild: shard docs under their new coverage; touched indexed
     // docs under archived ∪ new coverage.
     // rebuild ONLY verified-touched indexed docs: a doc the scan pulled
@@ -661,32 +679,23 @@ object DedupOps {
     // positions, and the anti-join is insensitive to duplicate (id, p)
     // rows — so coveredNew ∪ (coveredOld ⋉ touched1) is the whole set.
     val shardIds = base2.select(col("id"))
-    // touched1 feeds TWO semi-joins below — persist the frame; its
-    // broadcast gates ride nTouched (touched1 = verified-touched
-    // indexed docs ⊆ touchedScan, so the already-measured count is a
-    // sound bound and no extra count job is needed — r17 §1.2)
-    val touched1 = graft.Caches.track(
+    // touched1 feeds TWO semi-joins below; its broadcast gates ride
+    // nTouched (touched1 = verified-touched indexed docs ⊆ touchedScan,
+    // so the already-measured count is a sound bound and no extra count
+    // job is needed — r17 §1.2)
+    val touched1 = pin(
       coveredNew.join(shardIds, Seq("id"), "left_anti")
-        .select("id").distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select("id").distinct())
     val coveredOld = spark.read.parquet(s"$indexDir/covered")
-    val out = rebuildWithoutCovered(
+    val out = pin(rebuildWithoutCovered(
       base2.unionByName(
         base1.join(hintIfSmall(touched1, nTouched), Seq("id"), "left_semi")),
       coveredNew.unionByName(
         coveredOld.join(hintIfSmall(touched1, nTouched), Seq("id"), "left_semi")),
-      idCol).localCheckpoint(true) // pin BEFORE the artifact append below
-    // postings/covered delta → the artifact absorbs the shard.
-    // ORDER MATTERS (r16, measured −8 s/wave at sf0.1): a write to a live
-    // path makes the CacheManager recache every persisted plan READING
-    // that path — and cand/grams/coveredNew all read `postings` (via
-    // idxPosts). Appending postings FIRST therefore dropped coveredNew's
-    // cache, and its write recomputed the whole screen against the
-    // now-inflated index (cross = idxPosts ⋉ posts2 matches EVERY shard
-    // hash once the shard's own postings are in the dir). Write the
-    // covered delta first (cache-hot; nothing downstream reads `covered`
-    // after `out` is pinned), then the postings delta (posts2's own
-    // cache reads no artifact path).
+      idCol))
+    // postings/covered delta → the artifact absorbs the shard. Nothing
+    // above is cached, so neither append re-plans anything and their
+    // order is free.
     coveredNew.write.mode(org.apache.spark.sql.SaveMode.Append)
       .parquet(s"$indexDir/covered")
     posts2.write.mode(org.apache.spark.sql.SaveMode.Append)

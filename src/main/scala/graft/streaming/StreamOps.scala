@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge.pin
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming twins of the batch event operators in
@@ -238,6 +239,13 @@ object StreamOps {
     * batch (screen = its 8-byte postings; verify = its collision
     * sliver), never the corpus.
     *
+    * `sink` receives a pinned frame (an eager bridge checkpoint, see
+    * [[org.apache.spark.sql.graftbridge.CheckpointBridge.pin]]) that it
+    * may read more than once. Every wave after the first leaves no
+    * `CacheManager` entries, so the corpus and artifact appends re-plan
+    * nothing; the first wave's index build leaves its persisted staging
+    * frame in [[graft.Caches]] for the caller's `clear()`.
+    *
     * Replay caveat (the cdcCommitIngest contrast): batches are applied
     * at-most-once per RUN — a foreachBatch epoch re-executed after a
     * mid-batch failure would double-append postings + corpus. Restart
@@ -249,23 +257,21 @@ object StreamOps {
       (sink: DataFrame => Unit): StreamingQuery = {
     stream.writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val b = batch.toDF().localCheckpoint(true) // consumed twice: pass + sink append
+        // consumed twice (pass + sink append); bridge pins carry no
+        // origin constraints, so a sink may reference `out` twice (the
+        // accumulation union) without failing attribute-dedup analysis
+        val b = pin(batch.toDF())
         if (!b.isEmpty) {
           val spark = b.sparkSession
           val corpusDir = s"$indexDir/corpus"
           val out =
             if (!hasPartFiles(spark, corpusDir))
-              graft.ops.DedupOps.exactSubstrIndex(b, idCol, textCol, k,
-                indexDir)
+              pin(graft.ops.DedupOps.exactSubstrIndex(b, idCol, textCol, k,
+                indexDir))
             else // prior waves re-read from the durable sink, never held
-              graft.ops.DedupOps.exactSubstrIncremental(
+              graft.ops.DedupOps.exactSubstrIncremental( // returns pinned
                 spark.read.parquet(corpusDir), indexDir, b, idCol, textCol, k)
-          // defensive re-wrap: a checkpointed LogicalRDD preserves its
-          // ORIGIN constraints, which survive attribute-dedup un-remapped
-          // — a sink that references the frame twice (the accumulation
-          // union) then fails analysis with "key not found: <attr>".
-          // Fresh RDD-backed attributes carry no preserved constraints.
-          sink(spark.createDataFrame(out.rdd, out.schema))
+          sink(out)
           b.select(col(idCol), col(textCol)).write
             .mode(org.apache.spark.sql.SaveMode.Append).parquet(corpusDir)
           spark.catalog.refreshByPath(corpusDir)

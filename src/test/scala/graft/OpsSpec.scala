@@ -659,11 +659,7 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
     // wave 2: doc 9 shares that run with doc 1 — the incremental pass
     // must cut it from doc 9 AND re-cut doc 1 as archived ∪ new
     // coverage; untouched doc 2 must NOT be re-emitted.
-    val w1 = Seq(
-      (1L, "j k l m n o p q r s t u"),
-      (2L, "two p q r s t u a b c d e")).toDF("doc_id", "text")
-    val w2 = Seq(
-      (9L, "nine j k l m n o ends here x")).toDF("doc_id", "text")
+    val (w1, w2) = (d50Wave1, d50Wave2)
     val dir = java.nio.file.Files
       .createTempDirectory("graft_esi").toString
     val prior = DedupOps.exactSubstrIndex(w1, "doc_id", "text", 6,
@@ -691,6 +687,40 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
     val p = new org.apache.hadoop.fs.Path(dir)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     Caches.clear()
+  }
+
+  private lazy val d50Wave1 = Seq(
+    (1L, "j k l m n o p q r s t u"),
+    (2L, "two p q r s t u a b c d e")).toDF("doc_id", "text")
+  private lazy val d50Wave2 = Seq(
+    (9L, "nine j k l m n o ends here x")).toDF("doc_id", "text")
+
+  test("exactSubstrIncremental leaves no cache behind: no CacheManager " +
+      "entry, no Caches registration, no InMemoryRelation in its plan") {
+    // a persisted intermediate reading the postings/corpus path is
+    // re-planned by the CacheManager on every append and unpersist;
+    // the wave must pin its intermediates instead
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_esi_nocache").toString
+    DedupOps.exactSubstrIndex(d50Wave1, "doc_id", "text", 6, s"$dir/idx")
+      .count()
+    import org.apache.spark.sql.graftbridge.CacheEntries
+    val (entries0, tracked0) = (CacheEntries.count(spark), Caches.size)
+    val inc = DedupOps.exactSubstrIncremental(d50Wave1, s"$dir/idx",
+      d50Wave2, "doc_id", "text", 6)
+    val (entries1, tracked1) = (CacheEntries.count(spark), Caches.size)
+    val cached = inc.queryExecution.withCachedData
+      .collect { case r: InMemoryRelation => r }
+    val n = inc.count()
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    Caches.clear()
+    assert(n == 2L)
+    assert(entries1 == entries0,
+      s"CacheManager entries $entries0 -> $entries1")
+    assert(tracked1 == tracked0, s"Caches.size $tracked0 -> $tracked1")
+    assert(cached.isEmpty, s"returned plan reads cached relations: $cached")
   }
 
   test("rebuildWithoutCovered covered-side aggregation + graft_cut == " +
