@@ -92,8 +92,8 @@ object Probe {
     PlanTap.install(None)
   }
 
-  /** v37/v38 knnGraphBuild BEFORE/AFTER plans: the r17 blocked
-    * broadcast-scored path vs the keyed-join path it replaces
+  /** v37/v38 knnGraphBuild BEFORE/AFTER plans: the default blocked
+    * broadcast-scored plan vs the keyed-join plan it replaces
     * (prop-forced, the same fallback big corpora take). The build is
     * one lazy frame — explain works directly, no tap needed. */
   private def knnPlans(s: SparkSession, d: String, outDir: String): Unit = {
@@ -101,9 +101,8 @@ object Probe {
     def build() = SimilarityOps.knnGraphBuild(Tables.embeddings(s, d),
       "vec_id", "embedding", m = 4, tables = 8, bits = 4,
       planesFlat = Some(SimilarityOps.hyperplanesPortable(32, 64)))
-    sys.props("graft.knnBlockedMinRows") = "0" // sf0.1 sits below the floor
     try write(outDir, "v38_knn_graph_build_after.txt", explain(build()))
-    finally { sys.props.remove("graft.knnBlockedMinRows"); graft.Caches.clear() }
+    finally graft.Caches.clear()
     sys.props("graft.knnBroadcastRows") = "0" // force the keyed path
     try write(outDir, "v38_knn_graph_build_before.txt", explain(build()))
     finally { sys.props.remove("graft.knnBroadcastRows"); graft.Caches.clear() }

@@ -1356,13 +1356,17 @@ object DedupOps {
           .as(outNorm))
 
   /** Embedding near-dup: pairs with cosine ≥ threshold, via hyperplane-LSH
-    * band candidates + exact re-rank (NO driver state, NO corpus broadcast —
-    * the previous brute-force collected the corpus to the driver, which OOMs
-    * at scale). Each vector lands in one sign-bit bucket per table
-    * ([[SimilarityOps.lshBuckets]], deterministic hyperplanes); candidate
-    * pairs come from a self-equi-join keyed by (table, bucket) — shuffle
-    * partitions by bucket, never all-pairs — then get an exact codegen'd
-    * dot-product re-rank, so precision is 1.
+    * band candidates + exact re-rank (no driver state; the corpus is never
+    * collected to the driver, which OOMs at scale). Each vector lands in
+    * one sign-bit bucket per table ([[SimilarityOps.lshBuckets]],
+    * deterministic hyperplanes); candidate pairs (id1 < id2) come from
+    * [[SimilarityOps.lshPairs]], the (table, bucket) pair generator it
+    * shares with [[SimilarityOps.knnGraphBuild]] — never all-pairs. Up to
+    * `knnBroadcastRows` vectors the normalized vectors broadcast, pairs
+    * are scored in place per block and only pairs at or above the
+    * threshold shuffle; above it the keyed plan dedups candidate ids and
+    * rejoins vectors by key. The re-rank is an exact codegen'd dot
+    * product, so precision is 1.
     *
     * Recall: a pair at cosine t collides per table with prob p^bits where
     * p = 1 − arccos(t)/π; overall 1 − (1 − p^bits)^tables. At the defaults
@@ -1377,101 +1381,17 @@ object DedupOps {
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
                        threshold: Double, tables: Int = 32, bits: Int = 4,
                        dim: Int = 64, scoreBlockRows: Int = 1024): DataFrame = {
-    // one raw+norm projection feeds the posting join (both sides) and the
-    // re-rank (both sides): persist so the scan runs once. Buckets come
-    // from the raw vector (scaling preserves hyperplane signs); cosine is
-    // dot/(n1*n2) — dot-then-divide, DuckDB's exact formula.
-    val v = graft.Caches.track(
-      withNorm(spread(df.select(col(idCol), col(vecCol)), idCol),
-          idCol, vecCol, "id", "e", "n")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // buckets staged as a materialized column (codegen'd Project, not
-    // interpreted inside Generate), and the postings persisted — the
-    // self-join below would otherwise evaluate the tables×bits hyperplane
-    // dots TWICE per corpus row.
-    val posts = graft.Caches.track(v
-      .select(col("id"),
-        SimilarityOps.lshBuckets(col("e"), tables, bits, dim).as("__bkts"))
-      .select(col("id"), posexplode(col("__bkts")))
-      .toDF("id", "table", "bucket")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val nV = v.count() // 1 driver scalar — gates the broadcast path
-    // two-sided gate: the blocked plan pays a constant ~4-exchange +
-    // occupancy-agg overhead that only amortizes once the candidate
-    // volume Σocc² ≈ n²·tables/2^bits is macroscopic — below the floor
-    // (measured: +1.0-1.6 s on the 2k-vector fixture, where the whole
-    // keyed join is <2 s) the r16 keyed path stays; above the broadcast
-    // limit the keyed path is also the only one that fits. Both knobs
-    // parameterised: -Dgraft.knnBlockedMinRows / -Dgraft.knnBroadcastRows.
-    if (nV >= SimilarityOps.knnBlockedMinRows
-        && nV <= SimilarityOps.knnBroadcastRows) {
-      // r17 skew-safe pair scoring (§2.5 — knnGraphBuild's blocked plan
-      // applied to the THRESHOLD filter): the keyed self-join emits occ²
-      // rows per (table, bucket) into ONE task and shuffles all of them
-      // into the candidate distinct (measured at the sf1 rehearsal:
-      // d12_semdedup 400 s with a 338 s straggler task at tables=32).
-      // Instead pin pair generation to a fixed-width exchange of the src
-      // postings (×blocks, chunked on BOTH sides — every task group is
-      // ≤ scoreBlockRows² pairs at any occupancy), score in place
-      // against the broadcast vectors, filter sim ≥ threshold BEFORE
-      // anything shuffles, and dedup only the surviving near-dup pairs.
-      // OUTPUT-PRESERVING: each colliding (id1 < id2) pair is generated
-      // exactly once per shared (table, bucket) — dst lands in one block
-      // per bucket, src is replicated to all of them — and its sim is
-      // the identical fixed-order dot every time, so dropDuplicates
-      // keeps the same (id1, id2, sim) row the keyed path's
-      // distinct-then-score produced.
-      val nPart = df.sparkSession.sessionState.conf.numShufflePartitions
-      val occ = posts.groupBy("table", "bucket")
-        .agg(count(lit(1)).as("__occ"))
-        .select(col("table"), col("bucket"),
-          ceil(col("__occ") / lit(scoreBlockRows.toDouble)).cast("int")
-            .as("__nb"))
-      val srcX = posts.join(broadcast(occ), Seq("table", "bucket"))
-        .select(col("id"), col("table"), col("bucket"),
-          pmod(xxhash64(col("id"), lit(1)), col("__nb").cast("long"))
-            .cast("int").as("__sc"),
-          explode(sequence(lit(0), col("__nb") - 1)).as("__blk"))
-        .repartition(nPart, col("table"), col("bucket"), col("__blk"),
-          col("__sc"))
-      val dstB = posts.join(broadcast(occ), Seq("table", "bucket"))
-        .select(col("id"), col("table"), col("bucket"),
-          pmod(xxhash64(col("id")), col("__nb").cast("long")).cast("int")
-            .as("__blk"))
-      srcX.as("a").join(broadcast(dstB).as("b"),
-          col("a.table") === col("b.table")
-            && col("a.bucket") === col("b.bucket")
-            && col("a.__blk") === col("b.__blk")
-            && col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"))
-        .join(broadcast(v.select(col("id").as("id1"), col("e").as("e1"),
-          col("n").as("n1"))), "id1")
-        .join(broadcast(v.select(col("id").as("id2"), col("e").as("e2"),
-          col("n").as("n2"))), "id2")
-        .withColumn("sim",
-          graft.functions.DotProduct.dotNative(col("e1"), col("e2"))
-            / (col("n1") * col("n2")))
-        .filter(col("sim") >= threshold) // survivors only shuffle below
-        .dropDuplicates("id1", "id2")
-        .select(col("id1"), col("id2"), col("sim"))
-    } else {
-      // corpus too wide to broadcast: the keyed-join path — candidate
-      // pairs dedup by id before vectors rejoin by key
-      val cand = posts.as("a").join(posts.as("b"),
-          col("a.table") === col("b.table")
-            && col("a.bucket") === col("b.bucket")
-            && col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"))
-        .distinct()
-      cand
-        .join(v.select(col("id").as("id1"), col("e").as("e1"), col("n").as("n1")), "id1")
-        .join(v.select(col("id").as("id2"), col("e").as("e2"), col("n").as("n2")), "id2")
-        .withColumn("sim",
-          graft.functions.DotProduct.dotNative(col("e1"), col("e2"))
-            / (col("n1") * col("n2")))
-        .filter(col("sim") >= threshold)
-        .select(col("id1"), col("id2"), col("sim"))
-    }
+    // each colliding (id1 < id2) pair is scored once per shared (table,
+    // bucket) with the identical fixed-order dot, so filtering before the
+    // dedup keeps exactly the pairs filtering after it would
+    val similar = col("sim") >= threshold
+    SimilarityOps.lshPairs(
+        withNorm(spread(df.select(col(idCol), col(vecCol)), idCol),
+          idCol, vecCol, "id", "e", "n"),
+        tables, bits, dim, planesFlat = None, bucketCap = None,
+        scoreBlockRows)(_ < _, (p, _) => p.filter(similar))
+      .filter(similar)
+      .select(col("src").as("id1"), col("dst").as("id2"), col("sim"))
   }
 
   /** Jaro–Winkler blocked linkage: probe records against a reference

@@ -179,12 +179,11 @@ object GraphOps {
     // by `b` and rides this one exchange; rank/degree joins are
     // size-gated broadcasts — zero exchanges per iteration below the
     // limit. On a symmetric frame degree-by-b equals degree-by-a, so
-    // the degree count rides the same partitioning too.
-    val sym = graft.Caches.track(
-      pairs.select(col(id1).as("a"), col(id2).as("b"))
-        .union(pairs.select(col(id2).as("a"), col(id1).as("b")))
-        .repartition(col("b"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    // the degree count rides the same partitioning too. [[symmetrize]]
+    // partitions by `a`; swapping the columns of its symmetric frame
+    // keeps the rows and turns that into hash(b).
+    val sym = symmetrize(pairs, id1, id2)
+      .select(col("b").as("a"), col("a").as("b"))
     val deg = graft.Caches.track(
       sym.groupBy(col("b")).agg(count(lit(1)).as("deg"))
         .select(col("b").as("a"), col("deg"))
@@ -231,12 +230,10 @@ object GraphOps {
                            iters: Int = 5): DataFrame = {
     require(iters >= 1, "personalizedPageRank needs at least one iteration")
     // same r16 pre-partitioned shape as [[pageRank]]: one exchange at
-    // build (by destination `b`), size-gated broadcast joins per round
-    val sym = graft.Caches.track(
-      pairs.select(col(id1).as("a"), col(id2).as("b"))
-        .union(pairs.select(col(id2).as("a"), col(id1).as("b")))
-        .repartition(col("b"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    // build (by destination `b`, via the same swap), size-gated
+    // broadcast joins per round
+    val sym = symmetrize(pairs, id1, id2)
+      .select(col("b").as("a"), col("a").as("b"))
     val deg = graft.Caches.track(
       sym.groupBy(col("b")).agg(count(lit(1)).as("deg"))
         .select(col("b").as("a"), col("deg"))

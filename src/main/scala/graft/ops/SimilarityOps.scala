@@ -26,26 +26,16 @@ import org.apache.spark.sql.functions._
   */
 object SimilarityOps {
 
-  /** Row-count gate for [[knnGraphBuild]]'s broadcast-scored skew-safe
-    * path: below this many corpus vectors the normalized vector frame
-    * broadcasts (~(dim·8+32) B/row — the 512k default is ~280 MB at
-    * dim 64) and pair generation scores + pre-prunes in place; above it
-    * the build falls back to the keyed-join path, which degrades
-    * gracefully at any size. -Dgraft.knnBroadcastRows=N to retune. */
+  /** Row-count gate between the two plans of [[lshPairs]], the pair
+    * generator of [[knnGraphBuild]] and [[DedupOps.embeddingNearDup]]: up
+    * to this many corpus vectors the normalized vector frame broadcasts
+    * (~(dim·8+32) B/row — the 512k default is ~280 MB at dim 64) and the
+    * blocked plan scores and prunes pairs in place; above it the keyed
+    * plan runs, which degrades gracefully at any size.
+    * -Dgraft.knnBroadcastRows=N retunes it (0 forces the keyed plan). */
   private[graft] def knnBroadcastRows: Long =
     sys.props.get("graft.knnBroadcastRows").map(_.toLong)
       .getOrElse(512L * 1024)
-
-  /** Work floor for the blocked path (r17): its constant overhead (an
-    * occupancy aggregation, the block replication, two extra broadcast
-    * builds) only amortizes once the keyed path's candidate volume
-    * Σocc² ≈ n²·tables/2^bits is macroscopic — measured +0.3-1.6 s on
-    * the 2k-vector fixture where the whole keyed join is <2 s. Below
-    * the floor the pre-r17 keyed plan runs untouched.
-    * -Dgraft.knnBlockedMinRows=N to retune. */
-  private[graft] def knnBlockedMinRows: Long =
-    sys.props.get("graft.knnBlockedMinRows").map(_.toLong)
-      .getOrElse(4096L)
 
   /** Exact cosine top-k of `queries` against `corpus` (self-matches
     * excluded when ids collide). Output: qid, rk (1..k), nid, sim. */
@@ -695,9 +685,9 @@ object SimilarityOps {
     * DuckDB (gate v37). Returns (src, rk, dst, sim) edges.
     *
     * Scale shape: candidate volume per node is bucket occupancy ×
-    * tables — tuned by `bits` (each +1 halves buckets' size); pair
-    * dedup shuffles 16-byte id pairs only, vectors rejoin by id after;
-    * the top-m heap is a WindowGroupLimit, no global sort. The
+    * tables — tuned by `bits` (each +1 halves buckets' size); pairs come
+    * from [[lshPairs]], pruned per block to the top-m before they
+    * shuffle; the top-m heap is a WindowGroupLimit, no global sort. The
     * long-range navigability HNSW gets from its layer hierarchy comes
     * here from multi-table LSH diversity (independent tables collide
     * distant-but-still-similar pairs), which keeps construction one
@@ -721,121 +711,126 @@ object SimilarityOps {
                     planesFlat: Option[Array[Double]] = None,
                     bucketCap: Option[Int] = None,
                     scoreBlockRows: Int = 1024): DataFrame = {
-    val c = graft.Caches.track(
-      DedupOps.withNorm(corpus, idCol, vecCol, "id", "e", "n")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    def topM(df: DataFrame, keys: Seq[Column]): DataFrame = df
+      .withColumn("rk", row_number().over(Window.partitionBy(keys: _*)
+        .orderBy(col("sim").desc, col("dst").asc)))
+      .filter(col("rk") <= m)
+    // per-block pre-prune to the SAME top-m criterion: a pair outranked by
+    // m better pairs within one block it belongs to is outranked by those
+    // same m pairs globally (they survive their block's top-m by
+    // construction and the order (sim DESC, dst ASC) is total), so it can
+    // never enter the global per-src top-m (OpsSpec proves equality to
+    // the keyed plan)
+    val pairs = lshPairs(
+      DedupOps.withNorm(corpus, idCol, vecCol, "id", "e", "n"), tables, bits,
+      dim, planesFlat, bucketCap, scoreBlockRows)(
+      _ =!= _, (p, block) => topM(p, block :+ col("src")))
+    topM(pairs, Seq(col("src")))
+      .select(col("src"), col("rk"), col("dst"), col("sim"))
+  }
+
+  /** The LSH candidate pairs of a vector frame `v` (id, e, n), scored:
+    * every (src, dst) that shares at least one (table, bucket) and
+    * satisfies `pair(src, dst)`, once, with its cosine `sim`
+    * (dot-then-divide, DuckDB's formula). Returns (src, dst, sim). The one
+    * pair generator of [[knnGraphBuild]] and
+    * [[DedupOps.embeddingNearDup]]; each applies its own final selection
+    * (per-src top-m, sim ≥ threshold) to the result.
+    *
+    * `bucketCap` keeps only the `cap` smallest ids per (table, bucket) as
+    * destinations (every id still sources pairs). `keep` is a prune the
+    * caller's final selection implies — it may drop only pairs that
+    * selection would drop; it gets the scored pairs of the blocked plan
+    * and the columns that name one block of them.
+    *
+    * Two plans; `nV <= knnBroadcastRows` picks one:
+    *  - blocked (the vectors broadcast): every bucket's dst side splits
+    *    into ⌈occ/scoreBlockRows⌉ blocks and its src side into as many
+    *    chunks (`__sc`, a per-src hash — a pure grouping tag), so each
+    *    (block, chunk) group is ≤ scoreBlockRows² pairs at any occupancy.
+    *    Only the src postings shuffle (×blocks); pairs are generated
+    *    against the broadcast dst postings, scored in place against the
+    *    broadcast vectors and pruned by `keep` before anything wide
+    *    shuffles. Shuffled rows are |posts|×blocks + the survivors, not
+    *    Σocc² pairs (measured at the sf1 rehearsal: the keyed join's
+    *    occ²-row candidate distinct ran a 55 s straggler task for v37 and
+    *    338 s for d12).
+    *  - keyed (above the limit, where only this plan fits): the (table,
+    *    bucket) self-join, candidate pairs deduplicated by id before the
+    *    vectors rejoin by key. OpsSpec proves the blocked plan against it.
+    *
+    * The blocked plan scores a pair once per (table, bucket) it shares;
+    * every copy carries the identical fixed-order dot, so its dedup
+    * keeps the row the keyed plan's distinct-then-score produces. */
+  private[ops] def lshPairs(v: DataFrame, tables: Int, bits: Int, dim: Int,
+                            planesFlat: Option[Array[Double]],
+                            bucketCap: Option[Int], scoreBlockRows: Int)(
+                            pair: (Column, Column) => Column,
+                            keep: (DataFrame, Seq[Column]) => DataFrame)
+      : DataFrame = {
+    val vs = graft.Caches.track(
+      v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // buckets staged as a materialized column (codegen'd Project, not
-    // interpreted inside Generate); postings persisted — the self-join
-    // reads them twice
-    val posts = graft.Caches.track(c
+    // interpreted inside Generate); the occupancy rides the same pass as
+    // a window count over one (table, bucket) exchange of the postings,
+    // which persist — both pair sides read them
+    val bucket = Window.partitionBy("table", "bucket")
+    val posts = graft.Caches.track(vs
       .select(col("id"),
         lshBuckets(col("e"), tables, bits, dim, planesFlat).as("__bkts"))
       .select(col("id"), posexplode(col("__bkts")))
       .toDF("id", "table", "bucket")
+      .withColumn("__nb", ceil(count(lit(1)).over(bucket)
+        / lit(scoreBlockRows.toDouble)).cast("int"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // dst side optionally capped per (table, bucket) — every node still
-    // sources edges (the uncapped a side), so nobody is orphaned
     val dstPosts = bucketCap.fold(posts)(cap => posts
-      .withColumn("__or", row_number().over(
-        Window.partitionBy("table", "bucket").orderBy("id")))
+      .withColumn("__or", row_number().over(bucket.orderBy("id")))
       .filter(col("__or") <= cap).drop("__or"))
-    val nV = c.count() // 1 driver scalar — gates the broadcast path
-    if (nV >= knnBlockedMinRows && nV <= knnBroadcastRows) {
-      // r17 skew-safe build (§2.5): the naive self-join emits occ² rows
-      // per (table, bucket) into ONE task and shuffles them all into the
-      // candidate distinct (measured at the sf1 rehearsal: 20.5× wall
-      // for 10× vectors, a 55 s pair-generation straggler). Instead:
-      // split every bucket's dst side into blocks of ≤ scoreBlockRows,
-      // pin pair generation to a fixed-width hash exchange of the
-      // SRC POSTINGS ONLY (×blocks), score each pair in place against
-      // the broadcast vectors, and pre-prune per (block, src) to the
-      // SAME top-m criterion before anything wide shuffles.
-      // OUTPUT-PRESERVING: a pair outranked by m better pairs within
-      // one sub-block it belongs to is outranked by those same m pairs
-      // globally (they survive their block's top-m by construction and
-      // the order (sim DESC, dst ASC) is total), so it can never enter
-      // the global per-src top-m; every global top-m pair survives
-      // every block it appears in (OpsSpec proves equality to the
-      // unblocked join path). Shuffled bytes drop from Σocc² id-pairs
-      // to |posts|×blocks + |survivors| ≤ |V|·tables·blocks·m rows.
-      val nPart = corpus.sparkSession.sessionState.conf.numShufflePartitions
-      val occ = posts.groupBy("table", "bucket")
-        .agg(count(lit(1)).as("__occ"))
-        .select(col("table"), col("bucket"),
-          ceil(col("__occ") / lit(scoreBlockRows.toDouble)).cast("int")
-            .as("__nb"))
-      // src side is chunked too (__sc, a per-src hash mod __nb — a pure
-      // grouping tag, it filters nothing): without it a hot bucket's
-      // (blk) task still scored occ×blockRows pairs (measured: 19–35 s
-      // straggler tasks at the sf1 rehearsal, occ ≈ 10k); with it every
-      // (blk, sc) group is ≤ blockRows² pairs no matter the occupancy.
-      // DIFFERENT hash seed than __blk so the pairing is unbiased.
-      val srcX = posts.join(broadcast(occ), Seq("table", "bucket"))
-        .select(col("id"), col("table"), col("bucket"),
+    def vecs(id: String, e: String, n: String): DataFrame =
+      vs.select(col("id").as(id), col("e").as(e), col("n").as(n))
+    val sim = graft.functions.DotProduct.dotNative(col("se"), col("de")) /
+      (col("sn") * col("dn"))
+    val nPart = v.sparkSession.sessionState.conf.numShufflePartitions
+    val nV = vs.count() // 1 driver scalar — gates the broadcast plan
+    if (nV <= knnBroadcastRows) {
+      // one pair-stage task per ~scoreBlockRows src postings: each pairs
+      // with at most one block of dst rows, so a task sorts ≤ about one
+      // block group of pairs however few shuffle partitions there are
+      val width = math.max(nPart,
+        math.ceil(nV.toDouble * tables / scoreBlockRows).toInt)
+      val block = Seq(col("table"), col("bucket"), col("__blk"), col("__sc"))
+      val srcX = posts
+        .select(col("id").as("src"), col("table"), col("bucket"),
           pmod(xxhash64(col("id"), lit(1)), col("__nb").cast("long"))
-            .cast("int").as("__sc"),
+            .cast("int").as("__sc"), // seed ≠ __blk's: unbiased pairing
           explode(sequence(lit(0), col("__nb") - 1)).as("__blk"))
-        .repartition(nPart, col("table"), col("bucket"), col("__blk"),
-          col("__sc"))
-      val dstB = dstPosts.join(broadcast(occ), Seq("table", "bucket"))
-        .select(col("id"), col("table"), col("bucket"),
-          pmod(xxhash64(col("id")), col("__nb").cast("long")).cast("int")
-            .as("__blk"))
-      val pruned = srcX.as("a").join(broadcast(dstB).as("b"),
-          col("a.table") === col("b.table")
-            && col("a.bucket") === col("b.bucket")
-            && col("a.__blk") === col("b.__blk")
-            && col("a.id") =!= col("b.id"))
-        .select(col("a.table").as("table"), col("a.bucket").as("bucket"),
-          col("a.__blk").as("__blk"), col("a.__sc").as("__sc"),
-          col("a.id").as("src"), col("b.id").as("dst"))
-        .join(broadcast(c.select(col("id").as("src"), col("e").as("se"),
-          col("n").as("sn"))), "src")
-        .join(broadcast(c.select(col("id").as("dst"), col("e").as("de"),
-          col("n").as("dn"))), "dst")
-        .withColumn("sim",
-          graft.functions.DotProduct.dotNative(col("se"), col("de"))
-            / (col("sn") * col("dn")))
-        // rides the srcX exchange: HashPartitioning(t, b, blk, sc)
-        // satisfies the window's clustering (sc is constant per src, so
-        // the groups equal per-(blk, src)) — no occ²-row shuffle ever
-        .withColumn("__pr", row_number().over(
-          Window.partitionBy("table", "bucket", "__blk", "__sc", "src")
-            .orderBy(col("sim").desc, col("dst").asc)))
-        .filter(col("__pr") <= m)
+        .repartition(width, block: _*)
+        .join(broadcast(vecs("src", "se", "sn")), "src")
+      val dstB = dstPosts.select(col("id").as("dst"), col("table"),
+        col("bucket"),
+        pmod(xxhash64(col("id")), col("__nb").cast("long")).cast("int")
+          .as("__blk"))
+      // keep rides the srcX exchange: HashPartitioning(block) clusters
+      // every (block, src) group — no occ²-row shuffle ever
+      keep(srcX.join(broadcast(dstB), Seq("table", "bucket", "__blk"))
+          .filter(pair(col("src"), col("dst")))
+          .join(broadcast(vecs("dst", "de", "dn")), "dst")
+          .withColumn("sim", sim), block)
         .select(col("src"), col("dst"), col("sim"))
-      // cross-table dedup + final top-m share ONE src-keyed exchange
-      // (hash(src) clusters (src, dst) too); sims of duplicate pairs are
-      // bit-identical (same fixed-order dot), so any survivor's row wins
-      pruned.repartition(nPart, col("src"))
+        // the dedup and any src-keyed selection after it share ONE
+        // exchange: hash(src) clusters (src, dst) too
+        .repartition(nPart, col("src"))
         .dropDuplicates("src", "dst")
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("src")
-            .orderBy(col("sim").desc, col("dst").asc)))
-        .filter(col("rk") <= m)
-        .select(col("src"), col("rk"), col("dst"), col("sim"))
     } else {
-      // corpus too wide to broadcast: the pre-r17 keyed-join path —
-      // candidate pairs dedup by id before vectors rejoin by key
-      val cand = posts.as("a").join(dstPosts.as("b"),
+      posts.as("a").join(dstPosts.as("b"),
           col("a.table") === col("b.table")
             && col("a.bucket") === col("b.bucket")
-            && col("a.id") =!= col("b.id"))
+            && pair(col("a.id"), col("b.id")))
         .select(col("a.id").as("src"), col("b.id").as("dst"))
         .distinct()
-      cand
-        .join(c.select(col("id").as("src"), col("e").as("se"),
-          col("n").as("sn")), "src")
-        .join(c.select(col("id").as("dst"), col("e").as("de"),
-          col("n").as("dn")), "dst")
-        .withColumn("sim",
-          graft.functions.DotProduct.dotNative(col("se"), col("de"))
-            / (col("sn") * col("dn")))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("src")
-            .orderBy(col("sim").desc, col("dst").asc)))
-        .filter(col("rk") <= m)
-        .select(col("src"), col("rk"), col("dst"), col("sim"))
+        .join(vecs("src", "se", "sn"), "src")
+        .join(vecs("dst", "de", "dn"), "dst")
+        .select(col("src"), col("dst"), sim.as("sim"))
     }
   }
 

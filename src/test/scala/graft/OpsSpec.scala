@@ -2147,37 +2147,35 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
       s"missing, ${(a diff f).size} extra")
   }
 
-  test("knnGraphBuild blocked pre-pruned scoring == keyed-join path, " +
-    "exactly (capped and uncapped)") {
-    // the r17 skew-safe path splits every bucket's dst side into blocks
-    // and pre-prunes per (block, src) with the final top-m criterion; a
-    // pair outranked by m better pairs inside one of its blocks is
-    // outranked by those pairs globally, so the global top-m is
-    // unchanged. scoreBlockRows = 4 forces many blocks per bucket
-    // (occupancies here are ~10-40), exercising the prune hard.
-    import spark.implicits._
+  /** 15 planted clusters × 22 16-d vectors: bucket occupancies ~10-40
+    * under 8 tables × 4 bits. */
+  private lazy val knnClusters = {
     val rnd = new scala.util.Random(47L)
-    val dim = 16
-    val vecs = (0 until 15).flatMap { cl =>
-      val center = Array.fill(dim)(rnd.nextGaussian())
+    (0 until 15).flatMap { cl =>
+      val center = Array.fill(16)(rnd.nextGaussian())
       (0 until 22).map { i =>
         val v = center.map(x => (x + rnd.nextGaussian() * 0.5).toFloat)
         ((cl * 22 + i).toLong, v)
       }
     }.toDF("vec_id", "embedding")
+  }
+
+  test("knnGraphBuild blocked pre-pruned scoring == keyed-join path, " +
+    "exactly (capped and uncapped)") {
+    // the blocked plan splits every bucket's dst side into blocks and
+    // pre-prunes per (block, src) with the final top-m criterion; a
+    // pair outranked by m better pairs inside one of its blocks is
+    // outranked by those pairs globally, so the global top-m is
+    // unchanged. scoreBlockRows = 4 forces many blocks per bucket,
+    // exercising the prune hard.
+    val dim = 16
     val pls = Some(SimilarityOps.hyperplanesPortable(32, dim))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("src", "rk", "dst", "sim").collect().map(_.toSeq).toSet
-    def build(cap: Option[Int]) = {
-      // the corpus sits below the r17 work floor — force the blocked
-      // path so the equivalence is actually exercised
-      sys.props("graft.knnBlockedMinRows") = "0"
-      try SimilarityOps.knnGraphBuild(vecs,
-        "vec_id", "embedding", m = 5, tables = 8, bits = 4, dim = dim,
-        planesFlat = pls, bucketCap = cap, scoreBlockRows = 4)
-        .localCheckpoint(true)
-      finally sys.props.remove("graft.knnBlockedMinRows")
-    }
+    def build(cap: Option[Int]) = SimilarityOps.knnGraphBuild(knnClusters,
+      "vec_id", "embedding", m = 5, tables = 8, bits = 4, dim = dim,
+      planesFlat = pls, bucketCap = cap, scoreBlockRows = 4)
+      .localCheckpoint(true)
     def reference(cap: Option[Int]) = {
       sys.props("graft.knnBroadcastRows") = "0" // force the keyed path
       try build(cap) finally sys.props.remove("graft.knnBroadcastRows")
@@ -2189,6 +2187,33 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
         s"${(keyed diff blocked).size} missing, " +
         s"${(blocked diff keyed).size} extra")
     }
+  }
+
+  test("knnGraphBuild shuffles no (src, dst) pair exchange at default " +
+    "properties") {
+    // the keyed plan's candidate distinct() hash-partitions every
+    // occupancy-squared pair on (src, dst); the blocked plan shuffles
+    // src postings and per-block survivors, keyed by block or by src
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val g = SimilarityOps.knnGraphBuild(knnClusters, "vec_id", "embedding",
+      m = 5, tables = 8, bits = 4, dim = 16,
+      planesFlat = Some(SimilarityOps.hyperplanesPortable(32, 16)))
+    g.collect()
+    val keys = new AdaptiveSparkPlanHelper {}.collect(
+        g.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.collect { case a: Attribute => a.name }
+        case _ => Nil
+      }
+    }
+    Caches.clear()
+    assert(keys.nonEmpty, "no shuffle exchange found in the build")
+    assert(!keys.contains(Seq("src", "dst")),
+      s"(src, dst) exchange in the build; exchange keys: $keys")
   }
 
   test("embeddingNearDup blocked threshold scoring == keyed-join path, " +
@@ -2210,13 +2235,9 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
     }.toDF("vec_id", "embedding")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("id1", "id2", "sim").collect().map(_.toSeq).toSet
-    def build() = {
-      sys.props("graft.knnBlockedMinRows") = "0" // force the blocked path
-      try DedupOps.embeddingNearDup(vecs, "vec_id", "embedding",
-        threshold = 0.6, tables = 8, bits = 4, dim = dim,
-        scoreBlockRows = 4).localCheckpoint(true)
-      finally sys.props.remove("graft.knnBlockedMinRows")
-    }
+    def build() = DedupOps.embeddingNearDup(vecs, "vec_id", "embedding",
+      threshold = 0.6, tables = 8, bits = 4, dim = dim,
+      scoreBlockRows = 4).localCheckpoint(true)
     def reference() = {
       sys.props("graft.knnBroadcastRows") = "0" // force the keyed path
       try build() finally sys.props.remove("graft.knnBroadcastRows")
