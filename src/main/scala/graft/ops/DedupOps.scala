@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import GraphOps.hintIfSmall
-import org.apache.spark.sql.graftbridge.CheckpointBridge.pin
+import org.apache.spark.sql.graftbridge.CheckpointBridge.{checkpoint, pin}
 
 /** Deduplication for large-scale training-data pipelines: exact (hash
   * groupBy), n-gram Jaccard near-dup (inverted shingle index), MinHash+LSH
@@ -607,7 +607,8 @@ object DedupOps {
     // every downstream plan AQE re-renders. Each pinned frame is
     // shard-sized or touched-docs-sized, never index-sized.
     val base2 = pin(substrBasePlan(arriving, idCol, textCol, k))
-    val posts2 = pin(substrPosts(base2))
+    val posts2Ck = checkpoint(substrPosts(base2))
+    val posts2 = posts2Ck.df
     // r17: every screen-side semi-join below builds against a frame
     // that is SHARD-sized (shard hashes, candidate hashes, touched doc
     // ids) while its probe side is index/corpus-sized. Size-gate each
@@ -616,8 +617,8 @@ object DedupOps {
     // indexed corpus are SCANNED IN PLACE instead of shuffled by h/id —
     // the per-wave shuffle payload drops to the verified sliver only.
     // Above the limit everything falls back to the keyed joins
-    // unchanged. Counts come from frames that are pinned anyway.
-    val nPosts2 = posts2.count() // 1 scalar over the pinned blocks
+    // unchanged. Counts come from the jobs that pinned the frames.
+    val nPosts2 = posts2Ck.rows
     val idxPosts = spark.read.parquet(s"$indexDir/postings")
     // 1 — screen: intra-shard collisions + shard∩index hash hits, from
     // ONE shard aggregation (r17 §1.2 — the old shape aggregated posts2
@@ -646,10 +647,11 @@ object DedupOps {
     // SLOWER at sf0.1 — on a near-dup-heavy corpus the matched set is
     // nearly the whole postings artifact, so the cache write dwarfed
     // the saved scan; two map-only broadcast-probe scans are cheaper.)
-    val touchedScan = pin(
+    val touchedCk = checkpoint(
       idxPosts.join(hintIfSmall(hagg.select("h"), nPosts2), Seq("h"), "left_semi")
         .select(col("id")).distinct())
-    val nTouched = touchedScan.count() // |touched indexed docs|
+    val touchedScan = touchedCk.df
+    val nTouched = touchedCk.rows // |touched indexed docs|
     val base1 = pin(substrBasePlan(
       indexed.join(
         hintIfSmall(touchedScan.withColumnRenamed("id", idCol), nTouched),

@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge.{Checkpoint,
+  checkpoint}
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph primitives for dedup pipelines.
@@ -24,15 +26,69 @@ object GraphOps {
     * to the driver and OOMs where a keyed shuffle join (pageRank's shape)
     * degrades gracefully. So the hint is applied only below a measured
     * row count: 4M rows ≈ ~100 MB broadcast, inside ordinary executor
-    * budgets. The caller measures the rows ONCE (outside any round loop)
-    * and passes them here; above the limit the frame is returned
-    * unhinted and AQE/stats pick the join strategy.
-    * -Dgraft.broadcastRowLimit=N retunes it for a cluster (and shuts it
-    * for the Probe's above-limit plan dumps). */
+    * budgets. The rows are an exact count bounding the frame, in the
+    * iterative ops the one its checkpoint job took ([[checkpoint]]);
+    * above the limit the frame is returned unhinted and AQE/stats pick
+    * the join strategy. -Dgraft.broadcastRowLimit=N retunes it for a
+    * cluster (and `=0` forces the keyed fallback for its checks). */
   private[ops] def hintIfSmall(df: DataFrame, measuredRows: Long): DataFrame =
     if (measuredRows <= sys.props.get("graft.broadcastRowLimit")
         .map(_.toLong).getOrElse(4L * 1024 * 1024)) broadcast(df)
     else df
+
+  /** How [[iterate]] knows its last round. */
+  private[ops] sealed trait Until
+  private[ops] object Until {
+    /** after a round in which no row satisfies `changed` */
+    final case class NoneChanged(changed: Column) extends Until
+    /** after a round that kept the previous round's row count */
+    case object SameRows extends Until
+    /** never: every round runs */
+    case object Never extends Until
+  }
+
+  /** The round loop of every iterative graph op. Round r (from 1) builds
+    * its frame from the previous round's checkpoint and that
+    * checkpoint's exact row count; the loop offers the frame to
+    * [[graft.PlanTap]] as `<op>_round<r>`, cuts its lineage with one
+    * counted [[checkpoint]] (keeping the rows' partitioning when
+    * `keepPartitioning`), frees the previous round's blocks and applies
+    * the stop rule, whose counts come from the same job. Lineage MUST be
+    * cut every round: persist alone keeps
+    * the logical plan, each round reads the previous frame several
+    * times, and an un-truncated plan grows geometrically until the
+    * driver dies re-analyzing it (the d08 rationale). `mustConverge`
+    * throws when `rounds` end before the stop rule fires (a silent
+    * partial answer would be WRONG, not slow). Returns the last round's
+    * frame. */
+  private[ops] def iterate(op: String, init: Checkpoint, rounds: Int,
+      until: Until = Until.Never, keepPartitioning: Boolean = false,
+      mustConverge: Boolean = false)(
+      round: (DataFrame, Long, Int) => DataFrame): DataFrame = {
+    val changed = until match {
+      case Until.NoneChanged(c) => Some(c)
+      case _ => None
+    }
+    var cur = init
+    var r = 0
+    var done = false
+    while (!done && r < rounds) {
+      r += 1
+      val pre = round(cur.df, cur.rows, r)
+      graft.PlanTap.tap(s"${op}_round$r", pre)
+      val next = checkpoint(pre, changed, keepPartitioning)
+      done = until match {
+        case Until.NoneChanged(_) => next.changed == 0
+        case Until.SameRows => next.rows == cur.rows
+        case Until.Never => false
+      }
+      cur.release()
+      cur = next
+    }
+    require(done || !mustConverge,
+      s"$op did not converge in $rounds iterations")
+    cur.df
+  }
 
   /** The iterative ops' shared symmetric edge frame: both orientations,
     * hash-partitioned by the scoring vertex `a` ONCE (guide §2.4 — the
@@ -62,8 +118,9 @@ object GraphOps {
     * O(diameter); near-dup graphs are dense clusters with tiny diameter,
     * where this converges in 2–3 rounds. Every step is an equi-join or
     * keyed aggregation — no driver-side graph state, no all-pairs.
-    * Iterations persist their label frame (via [[graft.Caches]]) and the
-    * loop's only driver values are the per-iteration convergence counts.
+    * Each iteration is one [[iterate]] round: its label frame is
+    * checkpointed, and the job that stores it also counts the changed
+    * labels — the loop's only driver values.
     *
     * Throws if `maxIter` rounds don't reach a fixed point (a silent
     * partial merge would be a WRONG answer, not a slow one).
@@ -76,30 +133,18 @@ object GraphOps {
     // broadcasts — zero exchanges per round below the limit
     val sym = symmetrize(edges, srcCol, dstCol)
 
-    // Lineage MUST be cut every iteration (localCheckpoint, eager):
-    // persist alone keeps the logical plan, and each round references the
-    // previous labels several times (neighbor pull, pointer jumps,
-    // convergence diff) — an un-truncated plan grows geometrically and the
-    // driver dies re-analyzing it long before the data is a problem. On a
-    // production cluster with external storage, reliable checkpoint()
-    // every few rounds is the fault-tolerant variant of the same cut.
-    //
     // Init fuses round 1's hash-to-min: comp₀ = min(self, neighbors) falls
     // out of ONE keyed aggregation over sym (the symmetrized edges already
     // carry every incident vertex as `a`), replacing the distinct() pass
     // AND the first join round — one whole iteration of joins + checkpoint
-    // + convergence check gone.
-    var labels = graft.Caches.track(
-      sym.groupBy("a")
-        .agg(least(col("a"), min(col("b"))).as("comp"))
-        .select(col("a").as("id"), col("comp"))
-        .localCheckpoint())
-    // |V| measured once over the checkpointed init frame — gates the
-    // per-round broadcast hints (labels and neigh are |V|-bounded)
-    val nV = labels.count()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    // + convergence check gone. Its row count is |V|, which gates the
+    // per-round broadcast hints (labels and neigh are |V|-bounded).
+    val init = checkpoint(sym.groupBy("a")
+      .agg(least(col("a"), min(col("b"))).as("comp"))
+      .select(col("a").as("id"), col("comp")))
+    iterate("connectedComponents", init, maxIter,
+        Until.NoneChanged(col("comp") =!= col("__old")),
+        mustConverge = true) { (labels, nV, _) =>
       // hash-to-min: min label over self + neighbors
       val neigh = sym
         .join(hintIfSmall(
@@ -114,31 +159,21 @@ object GraphOps {
       // halving it, one extra stage inside the SAME job (labels only ever
       // decrease within the component, so any composition of neighbor-min
       // and parent-jump stays correct). The previous label rides along as
-      // __old so convergence is a short-circuiting scan of the
-      // checkpointed frame, not another join.
+      // __old so convergence is counted by the checkpoint job, not
+      // another join.
       val jump1 = pulled
         .join(hintIfSmall(
           labels.select(col("id").as("comp"), col("comp").as("cc")), nV),
           Seq("comp"), "left")
         .select(col("id"), col("__old"),
           least(col("comp"), coalesce(col("cc"), col("comp"))).as("comp"))
-      val next = graft.Caches.track(jump1
+      jump1
         .join(hintIfSmall(
           labels.select(col("id").as("comp"), col("comp").as("cc")), nV),
           Seq("comp"), "left")
         .select(col("id"), col("__old"),
           least(col("comp"), coalesce(col("cc"), col("comp"))).as("comp"))
-        .localCheckpoint())
-      // take(1) over cached blocks — early rounds hit a changed row in the
-      // first partitions; the converged round scans only cached data.
-      converged = next.filter(col("comp") =!= col("__old")).isEmpty
-      labels.unpersist(blocking = false)
-      labels = next
-      iter += 1
-    }
-    require(converged,
-      s"connectedComponents did not converge in $maxIter iterations")
-    labels.select("id", "comp")
+    }.select("id", "comp")
   }
 
   /** Canonical-survivor selection over near-dup pairs: cluster the pairs,
@@ -165,8 +200,9 @@ object GraphOps {
     *
     * Scale shape: per iteration ONE vertex-keyed join (ranks onto
     * edges) + one partial+final aggregation keyed by the destination —
-    * the d08 loop shape, lineage cut per round with localCheckpoint.
-    * Driver state: the vertex count (one scalar). Determinism: each
+    * the d08 loop shape, one [[iterate]] round each.
+    * Driver state: the vertex count (one scalar, counted by the
+    * degree frame's checkpoint job). Determinism: each
     * iteration's rank snaps to the 1e-9 floor grid on BOTH engine
     * sides, so the parallel-sum association drift (~1e-17 on ~1e-2
     * ranks) can never compound across iterations; products of the
@@ -184,26 +220,24 @@ object GraphOps {
     // keeps the rows and turns that into hash(b).
     val sym = symmetrize(pairs, id1, id2)
       .select(col("b").as("a"), col("a").as("b"))
-    val deg = graft.Caches.track(
-      sym.groupBy(col("b")).agg(count(lit(1)).as("deg"))
-        .select(col("b").as("a"), col("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val n = deg.count() // |vertices| — one driver scalar
+    val deg = checkpoint(sym.groupBy(col("b")).agg(count(lit(1)).as("deg"))
+      .select(col("b").as("a"), col("deg")))
+    val n = deg.rows // |vertices|
     require(n > 0, "pageRank needs at least one edge")
     val base = (1 - damping) / n
-    var rank = deg.select(col("a").as("id"), lit(1.0 / n).as("r"))
-    for (i <- 1 to iters) {
-      val pre = sym
+    val rank = iterate("pageRank",
+        checkpoint(deg.df.select(col("a").as("id"), lit(1.0 / n).as("r"))),
+        iters) { (rank, _, _) =>
+      sym
         .join(hintIfSmall(rank.select(col("id").as("a"), col("r")), n), "a")
-        .join(hintIfSmall(deg, n), "a")
+        .join(hintIfSmall(deg.df, n), "a")
         .groupBy(col("b"))
         .agg(sum(col("r") / col("deg")).as("__s"))
         .select(col("b").as("id"),
           (floor((lit(base) + lit(damping) * col("__s")) * 1e9 + 0.5)
             / 1e9).as("r"))
-      graft.PlanTap.tap(s"pageRank_round$i", pre)
-      rank = pre.localCheckpoint() // lineage cut — the d08 rationale
     }
+    deg.release() // the last round's checkpoint no longer reads it
     rank.select(col("id"), col("r").as("rank"))
   }
 
@@ -223,7 +257,8 @@ object GraphOps {
     * association cannot compound, lineage cut per round. Every vertex
     * is emitted every round (zero-mass rows ride along — the frame
     * stays |V|, and the oracle's LEFT JOIN spelling matches). Driver
-    * state: the in-graph seed count (one scalar). */
+    * state: the vertex and in-graph seed counts (two scalars, each
+    * counted by its frame's checkpoint job). */
   def personalizedPageRank(pairs: DataFrame, id1: String, id2: String,
                            seeds: DataFrame, seedCol: String,
                            damping: Double = 0.85,
@@ -234,45 +269,41 @@ object GraphOps {
     // broadcast joins per round
     val sym = symmetrize(pairs, id1, id2)
       .select(col("b").as("a"), col("a").as("b"))
-    val deg = graft.Caches.track(
-      sym.groupBy(col("b")).agg(count(lit(1)).as("deg"))
-        .select(col("b").as("a"), col("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val nV = deg.count() // |vertices| — gates the broadcast hints
+    val deg = checkpoint(sym.groupBy(col("b")).agg(count(lit(1)).as("deg"))
+      .select(col("b").as("a"), col("deg")))
+    val nV = deg.rows // |vertices| — gates the broadcast hints
     // in-graph seeds only: teleport mass must land on walkable vertices
-    val seedFlag = graft.Caches.track(
-      deg.select(col("a").as("id"))
-        .join(seeds.select(col(seedCol).as("id")).distinct(),
-          Seq("id"), "left_semi")
-        .withColumn("__seed", lit(1))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val ns = seedFlag.count() // |in-graph seeds| — one driver scalar
+    val seedFlag = checkpoint(deg.df.select(col("a").as("id"))
+      .join(seeds.select(col(seedCol).as("id")).distinct(),
+        Seq("id"), "left_semi")
+      .withColumn("__seed", lit(1)))
+    val ns = seedFlag.rows // |in-graph seeds|
     require(ns > 0, "personalizedPageRank needs at least one in-graph seed")
     val base = (1 - damping) / ns
-    var rank = deg.select(col("a").as("id"))
-      .join(hintIfSmall(seedFlag, nV), Seq("id"), "left")
+    val init = checkpoint(deg.df.select(col("a").as("id"))
+      .join(hintIfSmall(seedFlag.df, nV), Seq("id"), "left")
       .select(col("id"),
         when(col("__seed").isNotNull, lit(1.0 / ns)).otherwise(lit(0.0))
-          .as("r"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
+          .as("r")))
+    val rank = iterate("personalizedPageRank", init, iters) { (rank, _, _) =>
       val in = sym
         .join(hintIfSmall(rank.select(col("id").as("a"), col("r")), nV),
           "a")
-        .join(hintIfSmall(deg, nV), "a")
+        .join(hintIfSmall(deg.df, nV), "a")
         .groupBy(col("b")) // rides sym's hash(b) — no exchange
         .agg(sum(col("r") / col("deg")).as("__s"))
         .select(col("b").as("id"), col("__s"))
-      rank = deg.select(col("a").as("id"))
+      deg.df.select(col("a").as("id"))
         .join(hintIfSmall(in, nV), Seq("id"), "left")
-        .join(hintIfSmall(seedFlag, nV), Seq("id"), "left")
+        .join(hintIfSmall(seedFlag.df, nV), Seq("id"), "left")
         .select(col("id"),
           (floor((when(col("__seed").isNotNull, lit(base))
               .otherwise(lit(0.0))
             + lit(damping) * coalesce(col("__s"), lit(0.0))) * 1e9 + 0.5)
             / 1e9).as("r"))
-        .localCheckpoint() // lineage cut — the d08 rationale
     }
+    deg.release()
+    seedFlag.release()
     rank.select(col("id"), col("r").as("rank"))
   }
 
@@ -286,8 +317,9 @@ object GraphOps {
     * drift at all, a stronger contract than pageRank's 1e-9 grid floors)
     * and the per-round normalization is one per-row double division
     * snapped back to the integer grid. Scale shape: two keyed equi-joins
-    * + two keyed sums per round, per-round `localCheckpoint` lineage
-    * cuts, two 1-value max probes per round (bounded driver scalars).
+    * + two keyed sums per round, a counted [[checkpoint]] per half-round
+    * (the hub half is the [[iterate]] round), and the per-round max
+    * normalization inside the plan — no probe job.
     * Returns (role ∈ hub|authority, id, score_u) with max score = 1e9. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 4): DataFrame = {
@@ -297,7 +329,7 @@ object GraphOps {
     // the authority aggregation groups by `s` and reads eByS, the hub
     // aggregation groups by `c` and reads eByC — each rides its copy's
     // hash partitioning, and the score joins are size-gated broadcasts
-    // (|h|/|a| ≤ |edges| = the measured gate), so a half-round plans
+    // (each gated on its checkpoint's row count), so a half-round plans
     // ZERO exchanges below the broadcast limit. 2× the edge storage;
     // the former per-half-round shuffle of the joined edge frame is
     // gone.
@@ -308,15 +340,13 @@ object GraphOps {
     val eByS = graft.Caches.track(
       eByC.repartition(col("s"))
         .persist(StorageLevel.MEMORY_AND_DISK))
-    val nE = eByC.count() // one probe: |edges| ≥ |hubs|, |authorities|
-    val e = eByC
     val unit = 1000000000L
     // per-round L∞ normalization stays INSIDE the plan (the 1-row max
     // broadcast-joins back on a constant key; Catalyst folds the
     // constant predicate away and plans a broadcast loop over the
     // 1-ROW build side — cost-identical to a hash join here, and never
     // a driver probe job); each half-round then
-    // cuts lineage with ONE localCheckpoint. Without the cut the
+    // cuts lineage with ONE checkpoint. Without the cut the
     // double consumption (max branch + join left, next round + output)
     // recomputes the chain exponentially — measured 97 s; with it the
     // round is one |vertices|-sized job (6.8 s with probe jobs → ~3 s).
@@ -332,25 +362,26 @@ object GraphOps {
         .select(col("id"),
           floor(col("raw").cast("double") / col("__mx") * 1e9 + 0.5)
             .as("u"))
-        .localCheckpoint() // lineage cut — the d08 rationale
     }
-    var h = e.select(col("c").as("id")).distinct()
-      .withColumn("u", lit(unit))
-    var a: DataFrame = h.limit(0)
-    for (_ <- 1 to iters) {
+    var a = Option.empty[Checkpoint]
+    val h = iterate("hits", checkpoint(eByC.select(col("c").as("id"))
+        .distinct().withColumn("u", lit(unit))), iters) { (h, nH, _) =>
       // groupBy the RAW partition column (an alias in the grouping key
       // can defeat the distribution match), rename after
-      a = normalized(eByS
-        .join(hintIfSmall(h.select(col("id").as("c"), col("u")), nE), "c")
+      val next = checkpoint(normalized(eByS
+        .join(hintIfSmall(h.select(col("id").as("c"), col("u")), nH), "c")
         .groupBy(col("s")).agg(sum(col("u")).as("raw"))
-        .select(col("s").as("id"), col("raw")))
-      h = normalized(eByC
-        .join(hintIfSmall(a.select(col("id").as("s"), col("u")), nE), "s")
+        .select(col("s").as("id"), col("raw"))))
+      a.foreach(_.release())
+      a = Some(next)
+      normalized(eByC
+        .join(hintIfSmall(next.df.select(col("id").as("s"), col("u")),
+          next.rows), "s")
         .groupBy(col("c")).agg(sum(col("u")).as("raw"))
         .select(col("c").as("id"), col("raw")))
     }
     h.select(lit("hub").as("role"), col("id"), col("u").as("score_u"))
-      .unionByName(a.select(lit("authority").as("role"), col("id"),
+      .unionByName(a.get.df.select(lit("authority").as("role"), col("id"),
         col("u").as("score_u")))
   }
 
@@ -452,9 +483,8 @@ object GraphOps {
     *
     * Scale shape: per round, ONE vertex-keyed equi-join pulls neighbor
     * labels, one (vertex, label) count aggregate, and one keyed
-    * WindowGroupLimit picks the arg-max — lineage cut per round (the
-    * d08 discipline). Exact integer logic end-to-end: no floats
-    * anywhere. */
+    * WindowGroupLimit picks the arg-max — one [[iterate]] round each.
+    * Exact integer logic end-to-end: no floats anywhere. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 4,
                        preSym: Option[DataFrame] = None): DataFrame = {
@@ -466,25 +496,21 @@ object GraphOps {
     // the symmetrize exchange + persist (see [[symmetrize]]) instead of
     // rebuilding it per op — d46 built the identical 2·|E| frame twice.
     val sym = preSym.getOrElse(symmetrize(edges, srcCol, dstCol))
-    var labels = graft.Caches.track(
-      sym.select(col("a")).distinct()
-        .select(col("a").as("id"), col("a").as("lbl"))
-        .localCheckpoint())
-    // |V| measured ONCE over the checkpointed init frame (cached blocks,
-    // a cheap count; the vertex set never changes across rounds) — gates
-    // the per-round broadcast hint, see [[hintIfSmall]].
-    val nV = labels.count()
+    // the init frame's row count is |V| (the vertex set never changes
+    // across rounds) — gates the per-round broadcast hint, see
+    // [[hintIfSmall]].
+    val init = checkpoint(sym.select(col("a")).distinct()
+      .select(col("a").as("id"), col("a").as("lbl")))
     // convergence early-exit: a round with zero label changes is a fixed
     // point of the synchronous update (every later round replays it), so
     // the fixed-round oracle stays hash-identical while the engine stops
     // paying for post-convergence rounds. Detection = one |V|-keyed join
-    // of the old labels (broadcast when small) + a short-circuiting
-    // isEmpty over the checkpointed frame. NOTE: synchronous LPA can
-    // 2-CYCLE instead of converging (label oscillation) — the exit then
-    // simply never fires and all `iters` rounds run, as before.
-    var converged = false
-    var it = 1
-    while (!converged && it <= iters) {
+    // of the old labels (broadcast when small), counted by the round's
+    // checkpoint job. NOTE: synchronous LPA can 2-CYCLE instead of
+    // converging (label oscillation) — the exit then simply never fires
+    // and all `iters` rounds run, as before.
+    iterate("labelPropagation", init, iters,
+        Until.NoneChanged(col("lbl") =!= col("__old"))) { (labels, nV, _) =>
       // label side is |vertices|-bounded → broadcast WHEN SMALL (the
       // edge frame then never shuffles; above the measured limit the
       // join falls back to a keyed shuffle, pageRank's shape); arg-max
@@ -493,24 +519,17 @@ object GraphOps {
       // (vertex, label) counts to ≤|vertices| rows before the exchange,
       // where the window sorted the full count frame. Tie rule
       // unchanged: max (cnt, −label) == (cnt DESC, label ASC) rank 1.
-      val pre =
-        sym.join(hintIfSmall(
-            labels.select(col("id").as("b"), col("lbl").as("nl")), nV), "b")
-          .groupBy("a", "nl").agg(count(lit(1)).as("cnt"))
-          .groupBy(col("a")) // both groupBys ride sym's hash(a)
-          .agg(max_by(col("nl"),
-            struct(col("cnt"), -col("nl"))).as("lbl"))
-          .join(hintIfSmall(
-            labels.select(col("id"), col("lbl").as("__old")), nV),
-            col("a") === col("id"))
-          .select(col("id"), col("lbl"), col("__old"))
-      graft.PlanTap.tap(s"labelPropagation_round$it", pre)
-      labels = graft.Caches.track(
-        pre.localCheckpoint()) // lineage cut — the d08 rationale
-      converged = labels.filter(col("lbl") =!= col("__old")).isEmpty
-      it += 1
-    }
-    labels.select("id", "lbl")
+      sym.join(hintIfSmall(
+          labels.select(col("id").as("b"), col("lbl").as("nl")), nV), "b")
+        .groupBy("a", "nl").agg(count(lit(1)).as("cnt"))
+        .groupBy(col("a")) // both groupBys ride sym's hash(a)
+        .agg(max_by(col("nl"),
+          struct(col("cnt"), -col("nl"))).as("lbl"))
+        .join(hintIfSmall(
+          labels.select(col("id"), col("lbl").as("__old")), nV),
+          col("a") === col("id"))
+        .select(col("id"), col("lbl"), col("__old"))
+    }.select("id", "lbl")
   }
 
   /** One-level Louvain (Blondel et al. 2008 §2, first level) under the
@@ -552,21 +571,17 @@ object GraphOps {
         .persist(StorageLevel.MEMORY_AND_DISK))
     val m2 = sym.count() // 1-value probe: 2m (each edge counted twice)
     require(m2 > 0, "louvain needs edges")
-    // |V| measured ONCE (deg is persisted; the vertex set is fixed
-    // across rounds) — gates the per-round broadcast hints.
-    val nV = deg.count()
-    var labels = graft.Caches.track(
-      deg.select(col("a").as("id"), col("a").as("lbl")).localCheckpoint())
+    // the label frame's row count is |V| (the vertex set is fixed across
+    // rounds) — gates the per-round broadcast hints.
+    val init = checkpoint(deg.select(col("a").as("id"), col("a").as("lbl")))
     // CONVERGENCE EARLY-EXIT (the monotone test components/k-core already
     // use): synchronous rounds are a pure function of the previous
     // labeling, so zero accepted moves in a round is a FIXED POINT —
     // every later round is a no-op and the fixed-round oracle replays the
     // identical labels. The own label already rides the move join, so
-    // detecting it costs one short-circuiting isEmpty scan over the
-    // round's checkpointed frame, no extra join.
-    var converged = false
-    var r = 1
-    while (!converged && r <= iters) {
+    // the round's checkpoint job counts the moves; no extra join or job.
+    iterate("louvain", init, iters,
+        Until.NoneChanged(col("lbl") =!= col("__old"))) { (labels, nV, r) =>
       // round 1 runs on the identity labeling — the label/degree joins
       // simplify away (lbl == id, Σtot(c) == k_c), saving three joins
       val idside = // (id, own, k) — the per-vertex broadcast frame
@@ -602,7 +617,7 @@ object GraphOps {
         .agg(max_by(col("c"), struct(col("score"), -col("c"))).as("bc"),
           max(struct(col("score").as("s"), (-col("c")).as("n"))).as("bk"),
           first(col("own")).as("own"), first(col("k")).as("k"))
-      val pre = best
+      best
         .join(hintIfSmall(sigma.select(col("c").as("own"),
           col("sig").as("sigo")), nV), Seq("own"))
         .select(col("a").as("id"),
@@ -610,15 +625,7 @@ object GraphOps {
               (-col("own")).as("n")) > col("bk"),
             col("own")).otherwise(col("bc")).as("lbl"),
           col("own").as("__old"))
-      graft.PlanTap.tap(s"louvain_round$r", pre)
-      labels = graft.Caches.track(
-        pre.localCheckpoint()) // lineage cut — the d08 rationale
-      // take(1) over the cached blocks — the converged round scans only
-      // cached data, earlier rounds hit a moved vertex fast
-      converged = labels.filter(col("lbl") =!= col("__old")).isEmpty
-      r += 1
-    }
-    labels.select("id", "lbl")
+    }.select("id", "lbl")
   }
 
   /** WEIGHTED one-level Louvain — the engine [[louvainLevels]] runs on
@@ -657,12 +664,9 @@ object GraphOps {
         .persist(StorageLevel.MEMORY_AND_DISK))
     val m2 = deg.agg(sum(col("k"))).head().getLong(0) // 1-row probe: 2m
     require(m2 > 0, "weighted louvain needs edges")
-    val nV = deg.count()
-    var labels = graft.Caches.track(
-      deg.select(col("id"), col("id").as("lbl")).localCheckpoint())
-    var converged = false
-    var r = 1
-    while (!converged && r <= iters) {
+    val init = checkpoint(deg.select(col("id"), col("id").as("lbl")))
+    iterate("louvainWeighted", init, iters,
+        Until.NoneChanged(col("lbl") =!= col("__old"))) { (labels, nV, r) =>
       val idside = // (id, own, k) — per-vertex broadcast frame
         if (r == 1) deg.select(col("id"), col("id").as("own"), col("k"))
         else labels.join(hintIfSmall(deg, nV), Seq("id"))
@@ -698,16 +702,12 @@ object GraphOps {
       // filtered), so they have no neighbor candidates: re-attach them
       // with their own label — exactly the old zero-row union's single
       // stay-put candidate for such a vertex
-      labels = graft.Caches.track(labels
+      labels
         .select(col("id"), col("lbl").as("__old"))
         .join(hintIfSmall(moved, nV), Seq("id"), "left")
         .select(col("id"),
           coalesce(col("mv"), col("__old")).as("lbl"), col("__old"))
-        .localCheckpoint())
-      converged = labels.filter(col("lbl") =!= col("__old")).isEmpty
-      r += 1
-    }
-    labels.select("id", "lbl")
+    }.select("id", "lbl")
   }
 
   /** MULTI-LEVEL Louvain — the FULL Blondel et al. 2008 algorithm:
@@ -946,44 +946,31 @@ object GraphOps {
     // rows of the one-row-per-edge variant, but the former per-round
     // degree shuffle (2·|alive| union rows) is gone and each vertex's
     // count is identical (one row per incident edge either way).
-    // Iteration stays on the SHRINKING frame; localCheckpoint is eager
-    // → the surviving-row count is a cheap follow-up job; peeling is
-    // monotone, so an unchanged count means convergence — break.
-    // r17: localCheckpoint drops the partitioning metadata
-    // (UnknownPartitioning on the LogicalRDD), so the per-round degree
-    // count was re-shuffling `alive` every round despite the build-time
-    // repartition. The bridge checkpoint re-declares hash(w) — the rows
-    // really are laid out that way (repartition + broadcast semi-joins
-    // and projections only), so each peel round now truly plans zero
-    // exchanges below the broadcast limit.
-    import org.apache.spark.sql.graftbridge.CheckpointBridge.{
-      localCheckpointHashPartitioned => ckptByW}
-    var alive = ckptByW(
+    // Iteration stays on the SHRINKING frame; each round's checkpoint
+    // job counts the surviving rows — peeling is monotone, so an
+    // unchanged count means convergence.
+    // The cut keeps the rows' real layout: below the broadcast limit
+    // that is hash(w) (repartition, then broadcast semi-joins and
+    // projections only), so the degree count rides it and a peel round
+    // plans zero exchanges; above it the shuffled semi-join re-lays the
+    // rows out by `u`, and the next degree count shuffles by `w` again.
+    val init = checkpoint(
       e.select(col("lo").as("w"), col("hi").as("u"))
         .unionByName(e.select(col("hi").as("w"), col("lo").as("u")))
-        .repartition(col("w")), Seq("w"))
-    var nAlive = alive.count() // 2·|edges| — the convergence counter
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
+        .repartition(col("w")), keepPartitioning = true)
+    iterate("kCore", init, rounds, Until.SameRows,
+        keepPartitioning = true) { (alive, nAlive, _) =>
       val keep = alive.groupBy("w").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("w").as("v"))
-      // |keep| ≤ |alive vertices| ≤ nAlive — gate on the tracked count
-      val pre = alive
+      // |keep| ≤ |alive vertices| ≤ nAlive — gate on the previous count
+      alive
         .join(hintIfSmall(keep.withColumnRenamed("v", "w"), nAlive),
           Seq("w"), "left_semi")
         .join(hintIfSmall(keep.withColumnRenamed("v", "u"), nAlive),
           Seq("u"), "left_semi")
         .select(col("w"), col("u")) // (w, u) order for the next round
-      graft.PlanTap.tap(s"kCore_round${r + 1}", pre)
-      alive = ckptByW(pre, Seq("w")) // lineage cut — the d08 rationale
-      val n = alive.count()
-      converged = n == nAlive
-      nAlive = n
-      r += 1
-    }
-    alive.groupBy(col("w").as("node")).agg(count(lit(1)).as("deg"))
+    }.groupBy(col("w").as("node")).agg(count(lit(1)).as("deg"))
   }
 
   /** Adamic–Adar link prediction over an undirected edge set: for every

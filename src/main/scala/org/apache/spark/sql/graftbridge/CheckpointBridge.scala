@@ -1,29 +1,117 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, Predicate}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning,
+  PartitioningCollection}
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Eager local checkpoints rebuilt as FRESH `LogicalRDD` leaves.
+/** The one lineage cut: an eager local checkpoint, counted by the job
+  * that stores it, rebuilt as a FRESH `LogicalRDD` leaf.
   *
-  * `Dataset.localCheckpoint()` wraps the checkpointed rows in a
-  * `LogicalRDD` that carries its origin plan's statistics and
-  * constraints. Two problems follow, and both helpers here share one fix:
-  * rebuild the leaf over the same checkpointed RDD and output
-  * attributes, with no origin stats or constraints and no ordering.
+  * `Dataset.localCheckpoint` runs its plan, then a job that counts
+  * every partition and drops the counts, and wraps the rows in a leaf
+  * that carries its origin plan's statistics and constraints. Callers
+  * that need the row count (a broadcast gate, a convergence test) then
+  * pay one more job, and `Dataset.unpersist` on the result frees
+  * nothing: no `CacheManager` entry owns the blocks. [[checkpoint]]
+  * fixes all three:
   *
-  *  - The preserved origin constraints survive attribute-dedup
-  *    un-remapped, so a frame read twice in one plan (a self-join, or a
-  *    sink that unions it with a join against itself) fails analysis
-  *    with `key not found: <attr>#…`. The fresh leaf carries none.
-  *  - Under AQE the executed plan's final partitioning is not captured,
-  *    so the leaf reports `UnknownPartitioning` even when the rows are
-  *    clustered by key; [[localCheckpointHashPartitioned]] re-declares it.
+  *  - its one job over the checkpointed RDD both stores the blocks and
+  *    returns per-partition `(rows, changed)` counts as the action's
+  *    result — never an accumulator, which a retried task would apply
+  *    twice;
+  *  - the leaf is rebuilt over the same RDD and output attributes with
+  *    no origin stats, constraints or ordering. Preserved origin
+  *    constraints survive attribute-dedup un-remapped, so a frame read
+  *    twice in one plan (a self-join, or a sink that unions it with a
+  *    join against itself) failed analysis with `key not found: <attr>#…`;
+  *  - [[Checkpoint.release]] frees the blocks through the RDD that owns
+  *    them.
   *
-  * [[pin]] is the per-call intermediate store for operators whose
-  * intermediates must not enter the `CacheManager` (see its Scaladoc).
+  * Under AQE the executed plan's final partitioning is not captured, so
+  * the leaf reports `UnknownPartitioning` even when the rows are
+  * clustered by key; `keepPartitioning` keeps it. [[pin]] is the per-call
+  * intermediate store for operators whose intermediates must not enter
+  * the `CacheManager` (see its Scaladoc).
   */
 object CheckpointBridge {
+
+  /** A lineage-cut frame, with the counts its checkpoint job returned. */
+  final class Checkpoint private[CheckpointBridge] (val df: DataFrame,
+      val rows: Long, val changed: Long, rdd: RDD[InternalRow]) {
+    /** Free the stored blocks now rather than at the next driver GC. The
+      * frame, and any frame still reading it lazily, must not run again. */
+    def release(): Unit = rdd.unpersist(blocking = false)
+  }
+
+  /** Eagerly materialize `df` into executor block storage and return it
+    * as a fresh, constraint-free `LogicalRDD` with its exact row count
+    * and the number of rows satisfying `changed` (0 without one).
+    *
+    * The count job runs inside `df`'s own SQL execution, as
+    * `Dataset.checkpoint` does, so AQE, the event log and listeners see
+    * one execution: the plan's shuffle stages, then the one job.
+    *
+    * `keepPartitioning` declares the partitioning of the executed
+    * plan's FINAL physical plan — the layout the rows really have (an
+    * exact or AQE-coalesced hash, or whatever a shuffled join left).
+    * An iterative op that cuts lineage every round otherwise loses its
+    * build-time `repartition(key)` and every per-round keyed aggregation
+    * re-shuffles (measured on kCore: one full exchange of the surviving
+    * edge frame per peel round). Never declare a layout by hand: the
+    * planner trusts it for keyed aggregations and may shuffle only the
+    * OTHER side of a join to match it (observed: kCore above the
+    * broadcast limit declared hash(w) on rows a shuffled semi-join had
+    * laid out by `u`, and returned 0 rows at sf0.01). */
+  def checkpoint(df: DataFrame, changed: Option[Column] = None,
+                 keepPartitioning: Boolean = false): Checkpoint = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val session = ds.sparkSession
+    val qe = ds.queryExecution
+    val output = qe.analyzed.output
+    val test = changed.map(c =>
+      ds.select(c).queryExecution.analyzed.expressions.head match {
+        case a: Alias => a.child
+        case e => e
+      })
+    val (rdd, counts, partitioning) =
+      SQLExecution.withNewExecutionId(qe, Some("localCheckpoint")) {
+        val plan = qe.executedPlan
+        plan.resetMetrics()
+        val rdd = plan.execute().map(_.copy())
+        rdd.localCheckpoint()
+        val attrs = plan.output
+        // every partition is computed (and so stored) here; the
+        // checkpoint SparkContext.runJob completes afterwards finds no
+        // missing block and runs no job of its own
+        val counts = session.sparkContext.runJob(rdd,
+          (tc: TaskContext, it: Iterator[InternalRow]) => {
+            val p = test.map { e =>
+              val p = Predicate.create(e, attrs)
+              p.initialize(tc.partitionId())
+              p
+            }
+            var n, c = 0L
+            it.foreach { r => n += 1; if (p.exists(_.eval(r))) c += 1 }
+            (n, c)
+          })
+        val layout = plan match {
+          case a: AdaptiveSparkPlanExec if keepPartitioning => a.executedPlan
+          case p => p
+        }
+        (rdd, counts, firstLeaf(layout.outputPartitioning))
+      }
+    val leaf = LogicalRDD(output, rdd, partitioning, Nil, ds.isStreaming,
+      None)(session, None, None)
+    new Checkpoint(classic.Dataset.ofRows(session, leaf),
+      counts.iterator.map(_._1).sum, counts.iterator.map(_._2).sum, rdd)
+  }
 
   /** Eagerly materialize `df` into executor block storage and return it
     * as a fresh, constraint-free `LogicalRDD`.
@@ -34,61 +122,14 @@ object CheckpointBridge {
     * unpersist of a cached frame it was built from, or AQE re-rendering
     * a downstream plan that would otherwise nest its cached subtree.
     * The pinned rows are a snapshot taken now; the blocks are freed when
-    * the frame is garbage-collected (the ContextCleaner), like any
-    * `localCheckpoint`. */
-  def pin(df: DataFrame): DataFrame =
-    fresh(df.localCheckpoint(), "pin")(_.outputPartitioning)
+    * the frame is garbage-collected (the ContextCleaner). */
+  def pin(df: DataFrame): DataFrame = checkpoint(df).df
 
-  /** `localCheckpoint` that keeps a hash partitioning visible to the
-    * planner.
-    *
-    * An iterative op that cuts lineage every round otherwise loses its
-    * build-time `repartition(key)` and every per-round keyed aggregation
-    * re-shuffles — measured on kCore (graft.ops.GraphOps): one full
-    * exchange of the surviving edge frame per peel round that the op's
-    * pre-partitioning was supposed to remove. This helper checkpoints
-    * eagerly and then re-declares `HashPartitioning(keys,
-    * rdd.partitions)` on the fresh leaf — nothing about the data moves;
-    * only the metadata the checkpoint dropped is restored.
-    *
-    * CALLER CONTRACT: the frame's rows must ACTUALLY be clustered by
-    * `keys` (each key value entirely inside one partition), i.e. the
-    * frame derives from a `repartition(keys)` (or a keyed shuffle) via
-    * partition-PRESERVING ops only (projections, filters, broadcast-hash
-    * joins, in-partition aggregations). The declaration is only ever
-    * consumed as a ClusteredDistribution (keyed groupBy / window), and a
-    * co-partition match against a DIFFERENT frame is impossible by
-    * construction: the partitioning's attribute ids are unique to this
-    * frame, so the planner can never pair it with some other relation's
-    * hash partitioning.
-    */
-  def localCheckpointHashPartitioned(df: DataFrame,
-                                     keys: Seq[String]): DataFrame = {
-    val ck = df.localCheckpoint() // eager — the lineage cut
-    // probe-only escape hatch: -Dgraft.noPartitionedCheckpoint=1 keeps
-    // the plain checkpoint (UnknownPartitioning) so the BEFORE round
-    // plans can be dumped from the identical code path
-    if (sys.props.contains("graft.noPartitionedCheckpoint")) return ck
-    fresh(ck, "localCheckpointHashPartitioned") { lr =>
-      val attrs = keys.map(k => lr.output.find(_.name == k).getOrElse(
-        sys.error(s"localCheckpointHashPartitioned: no column $k in " +
-          lr.output.map(_.name).mkString(", "))))
-      HashPartitioning(attrs, lr.rdd.getNumPartitions)
-    }
+  /** The partitioning `Dataset.checkpoint` declares: the first leaf of a
+    * `PartitioningCollection`, which otherwise grows with join depth. */
+  @scala.annotation.tailrec
+  private def firstLeaf(p: Partitioning): Partitioning = p match {
+    case c: PartitioningCollection => firstLeaf(c.partitionings.head)
+    case other => other
   }
-
-  /** Rebuild a checkpointed frame's `LogicalRDD` over the same RDD and
-    * attributes, declaring `partitioning(leaf)` and nothing else. */
-  private def fresh(ck: DataFrame, caller: String)(
-      partitioning: LogicalRDD => Partitioning): DataFrame =
-    ck.queryExecution.logical match {
-      case lr: LogicalRDD =>
-        val session = ck.sparkSession.asInstanceOf[
-          org.apache.spark.sql.classic.SparkSession]
-        org.apache.spark.sql.classic.Dataset.ofRows(session,
-          LogicalRDD(lr.output, lr.rdd, partitioning(lr), Nil,
-            lr.isStreaming, lr.stream)(session, None, None))
-      case other => sys.error(
-        s"$caller: expected LogicalRDD, got " + other.getClass.getName)
-    }
 }

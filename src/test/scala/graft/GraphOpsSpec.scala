@@ -1,6 +1,17 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec,
+  ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.ops.{GraphOps, PipelineOps}
 
@@ -10,12 +21,133 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
 
   import spark.implicits._
 
+  // shared graph fixtures
+  private def chainTrianglePair = Seq((1L, 2L), (2L, 3L), (3L, 4L),
+    (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)).toDF("a", "b")
+  /** two K4 cliques {1..4} and {5..8} joined by the single bridge 4–5 */
+  private def barbell = {
+    val k4a = for (i <- 1L to 4L; j <- (i + 1) to 4L) yield (i, j)
+    val k4b = for (i <- 5L to 8L; j <- (i + 1) to 8L) yield (i, j)
+    (k4a ++ k4b :+ (4L, 5L)).toDF("id1", "id2")
+  }
+  /** triangle 1-2-3 with the pendant 3-4: kCore(k = 2) peels 4 in round 1 */
+  private def trianglePendant =
+    Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("s", "t")
+  /** buyers 1..4 → suppliers 10..12 */
+  private def bipartite = Seq((1L, 10L), (2L, 10L), (3L, 10L), (4L, 10L),
+    (1L, 11L), (2L, 11L), (1L, 12L)).toDF("c", "s")
+
+  /** The physical plan each iterative op offers [[PlanTap]] per round,
+    * keyed `<op>_round<r>`, while `run` runs. */
+  private def roundPlans(run: => Unit): Map[String, SparkPlan] = {
+    val plans = mutable.Map[String, SparkPlan]()
+    PlanTap.install(Some((label, df) =>
+      plans(label) = df.queryExecution.executedPlan))
+    try run finally PlanTap.install(None)
+    Caches.clear()
+    plans.toMap
+  }
+
+  /** The hash-partitioned shuffles of a plan, each flagged true when a
+    * broadcast sits above it (it moves a frame the broadcast then ships). */
+  private def keyedExchanges(p: SparkPlan,
+                             inBroadcast: Boolean = false): Seq[Boolean] =
+    p match {
+      case a: AdaptiveSparkPlanExec => keyedExchanges(a.initialPlan, inBroadcast)
+      case b: BroadcastExchangeExec => keyedExchanges(b.child, true)
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[HashPartitioning] =>
+        inBroadcast +: keyedExchanges(e.child, inBroadcast)
+      case other => other.children.flatMap(keyedExchanges(_, inBroadcast))
+    }
+
+  test("iterative ops plan round 2 with no keyed exchange below the " +
+      "broadcast limit; louvain's keyed fallback engages above it") {
+    val plans = roundPlans {
+      GraphOps.connectedComponents(chainTrianglePair, "a", "b").count()
+      GraphOps.labelPropagation(barbell, "id1", "id2", iters = 4).count()
+      GraphOps.louvainOneLevel(barbell, "id1", "id2", iters = 4).count()
+      GraphOps.kCore(trianglePendant, "s", "t", k = 2, rounds = 4).count()
+      GraphOps.pageRank(barbell, "id1", "id2").count()
+      GraphOps.hits(bipartite, "c", "s").count()
+    }
+    // keyed shuffles under a broadcast are allowed only where the op
+    // aggregates a vertex-sized side frame by a new key: louvain's
+    // per-community Σtot. Any other one re-shuffles the round's own
+    // frame (kCore's degree count feeds the broadcast `keep` side, so a
+    // lost hash(w) declaration on its cut would show up only there).
+    val underBroadcast = Map("louvain" -> 2).withDefaultValue(0)
+    for (op <- Seq("connectedComponents", "labelPropagation", "louvain",
+        "kCore", "pageRank", "hits")) {
+      val plan = plans.getOrElse(s"${op}_round2",
+        fail(s"$op ran no round 2: ${plans.keys.toSeq.sorted}"))
+      val (inside, outside) = keyedExchanges(plan).partition(identity)
+      assert(outside.isEmpty && inside.size == underBroadcast(op),
+        s"$op round 2 plans ${outside.size} keyed exchanges outside a " +
+          s"broadcast and ${inside.size} under one:\n$plan")
+    }
+    sys.props("graft.broadcastRowLimit") = "0"
+    val keyed = try roundPlans {
+      GraphOps.louvainOneLevel(barbell, "id1", "id2", iters = 4).count()
+    } finally sys.props.remove("graft.broadcastRowLimit")
+    assert(keyedExchanges(keyed("louvain_round2")).exists(!_),
+      "louvain above the broadcast limit planned no keyed exchange")
+  }
+
+  /** Spark jobs started by `f` on this thread (and the threads it hands
+    * its local properties to, such as broadcast builds). */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobs"
+    val tag = s"call-${System.nanoTime()}"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(`tag`) => jobs.incrementAndGet()
+          case Some(t) if t == s"$tag.drain" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try f finally sc.setLocalProperty(key, s"$tag.drain")
+      // the bus delivers events in order: once this job's start arrives,
+      // every job `f` started has been counted
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus stalled")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("iterative ops stay under their job-count ceilings") {
+    val got = Seq(
+      "connectedComponents" -> jobsOf(
+        GraphOps.connectedComponents(chainTrianglePair, "a", "b")),
+      "labelPropagation" -> jobsOf(
+        GraphOps.labelPropagation(barbell, "id1", "id2", iters = 4)),
+      "louvainOneLevel" -> jobsOf(
+        GraphOps.louvainOneLevel(barbell, "id1", "id2", iters = 4)),
+      "kCore" -> jobsOf(
+        GraphOps.kCore(trianglePendant, "s", "t", k = 2, rounds = 4)))
+    Caches.clear()
+    info(got.map { case (op, n) => s"$op=$n" }.mkString(" "))
+    // one counted checkpoint per round: no separate count or isEmpty job
+    // (before it: 13, 17, 33 and 12 jobs)
+    val ceiling = Map("connectedComponents" -> 9, "labelPropagation" -> 12,
+      "louvainOneLevel" -> 28, "kCore" -> 9)
+    for ((op, n) <- got)
+      assert(n <= ceiling(op), s"$op ran $n jobs, ceiling ${ceiling(op)}")
+  }
+
   test("connectedComponents labels a chain, a triangle and a pair") {
     // components: {1..4} chain, {10,11,12} triangle, {20,21} pair
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L),
-      (10L, 11L), (11L, 12L), (10L, 12L),
-      (20L, 21L)).toDF("a", "b")
-    val got = GraphOps.connectedComponents(edges, "a", "b")
+    val got = GraphOps.connectedComponents(chainTrianglePair, "a", "b")
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
     Caches.clear()
     assert(got.toSeq == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
@@ -212,10 +344,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     // the supergraph (two supernodes, self-loop 6 each, bridge 1) must
     // NOT merge (ΔQ numerator 2m·1 − 13·13 < 0 vs 0 for staying), so
     // lbl2 == lbl1 through the map-back join
-    val k4a = for (i <- 1L to 4L; j <- (i + 1) to 4L) yield (i, j)
-    val k4b = for (i <- 5L to 8L; j <- (i + 1) to 8L) yield (i, j)
-    val pairs = (k4a ++ k4b :+ (4L, 5L)).toDF("id1", "id2")
-    val lev = GraphOps.louvainLevels(pairs, "id1", "id2", iters = 4)
+    val lev = GraphOps.louvainLevels(barbell, "id1", "id2", iters = 4)
       .orderBy("id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     Caches.clear()
@@ -227,12 +356,8 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
 
   test("louvainOneLevel: barbell K4s split at the bridge, deterministic " +
       "(d46 gate; cross-checked against the unrolled DuckDB replay)") {
-    // two K4 cliques {1..4} and {5..8} joined by the single bridge 4–5;
     // expected labels computed by the d46 oracle's round unroll
-    val k4a = for (i <- 1L to 4L; j <- (i + 1) to 4L) yield (i, j)
-    val k4b = for (i <- 5L to 8L; j <- (i + 1) to 8L) yield (i, j)
-    val pairs = (k4a ++ k4b :+ (4L, 5L)).toDF("id1", "id2")
-    def run() = GraphOps.louvainOneLevel(pairs, "id1", "id2", iters = 4)
+    def run() = GraphOps.louvainOneLevel(barbell, "id1", "id2", iters = 4)
       .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val got = run()
     assert(got == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
@@ -284,8 +409,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     import graft.ops.GraphOps
     // triangle 1-2-3 + pendant 3-4 at k=2: round 1 peels 4, the
     // triangle survives with in-core degree 2 each
-    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("s", "t")
-    val core = GraphOps.kCore(g, "s", "t", k = 2, rounds = 4)
+    val core = GraphOps.kCore(trianglePendant, "s", "t", k = 2, rounds = 4)
       .orderBy("node").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     Caches.clear()
@@ -294,6 +418,33 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("s", "t")
     assert(GraphOps.kCore(path, "s", "t", k = 2, rounds = 4).count() == 0L)
     Caches.clear()
+  }
+
+  test("kCore above the broadcast limit peels exactly as below it " +
+      "(the shuffled semi-join re-lays the cut out by u, not w)") {
+    // a ring of 60 K4 cliques, each bridged to the next, plus one pendant
+    // per clique: k = 3 peels the pendants and keeps every clique
+    val cliques = for (c <- 0L until 60L; i <- 0L until 4L;
+                       j <- (i + 1) until 4L) yield (c * 4 + i, c * 4 + j)
+    val bridges = (0L until 60L).map(c => (c * 4 + 3, (c + 1) % 60 * 4))
+    val pendants = (0L until 60L).map(c => (c * 4 + 1, 1000L + c))
+    val g = (cliques ++ bridges ++ pendants).toDF("s", "t")
+    def run() = GraphOps.kCore(g, "s", "t", k = 3, rounds = 6)
+      .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val below = run()
+    Caches.clear()
+    assert(below.size == 240 && below.forall(_._1 < 1000L))
+    // keep every shuffle partition, as at scale: AQE would merge this
+    // fixture's into one, where any declared layout is trivially true
+    val noCoalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(noCoalesce, "false")
+    sys.props("graft.broadcastRowLimit") = "0"
+    val above = try run() finally {
+      sys.props.remove("graft.broadcastRowLimit")
+      spark.conf.unset(noCoalesce)
+      Caches.clear()
+    }
+    assert(above == below)
   }
 
   test("modularity: two bridged triangles under the natural split score " +
@@ -425,9 +576,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     // bipartite: buyers 1..4 all buy from supplier 10; buyer 1 also buys
     // 11 and 12; buyer 2 buys 11 — 10 must top authorities, 1 must top
     // hubs, and each side's max normalizes to exactly 1e9
-    val e = Seq((1L, 10L), (2L, 10L), (3L, 10L), (4L, 10L),
-      (1L, 11L), (2L, 11L), (1L, 12L)).toDF("c", "s")
-    val out = graft.ops.GraphOps.hits(e, "c", "s", iters = 4)
+    val out = GraphOps.hits(bipartite, "c", "s", iters = 4)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val auth = out.filter(_._1 == "authority").sortBy(-_._3)
     val hubs = out.filter(_._1 == "hub").sortBy(-_._3)
