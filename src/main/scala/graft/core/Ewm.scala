@@ -56,18 +56,14 @@ final class Ewm private[graft] (s: Series, alpha: Double, buckets: Int,
 
   import Ewm._
 
-  /** One-pass (idx, ewm_mean, ewm_var) frame — the shared plan behind
-    * [[mean]] / [[varUnbiased]] / [[std]]. */
+  /** One-pass (idx, ewm_mean, ewm_var) frame — the plan behind
+    * [[mean]]. */
   lazy val stats: DataFrame = {
     val d = s.base.select(s.index.as(idxName),
       s.values.cast("double").as(valName))
     val idxDt = d.schema(idxName).dataType
-    val bounds = d.agg(min(col(idxName)), max(col(idxName))).head()
-    val (coord, lo, hi) = GlobalWindows.indexCoord(idxDt, col(idxName), bounds)
-    val bkt =
-      if (lo.isNaN || hi.isNaN || !(hi > lo)) lit(0L)
-      else GlobalWindows.bucketExpr(col(idxName), coord, lo, hi, buckets)
-    val keyed = d.withColumn(BktCol, bkt)
+    val keyed = d.withColumn(BktCol,
+      GlobalWindows.bucketing(d, idxName, buckets)._1)
 
     // one keyed exchange; each bucket lands whole in one partition, rows
     // stream through the external sort in (bucket, index) order
@@ -214,14 +210,6 @@ final class Ewm private[graft] (s: Series, alpha: Double, buckets: Int,
 
   def mean(): Series = Series.fromKeyed(
     stats.select(col(idxName), col(MeanCol).as(valName)), valName, idxName)
-
-  /** pandas ewm().var(bias=False). */
-  def varUnbiased(): Series = Series.fromKeyed(
-    stats.select(col(idxName), col(VarCol).as(valName)), valName, idxName)
-
-  def std(): Series = Series.fromKeyed(
-    stats.select(col(idxName), sqrt(col(VarCol)).as(valName)),
-    valName, idxName)
 }
 
 /** Distributed exponentially-weighted PAIRWISE moving aggregates
@@ -258,12 +246,8 @@ final class EwmPair private[graft] (s: Series, y0: Column, alpha: Double,
     val d = s.base.select(s.index.as(idxName),
       s.values.cast("double").as("__ew_x"), y0.cast("double").as("__ew_y"))
     val idxDt = d.schema(idxName).dataType
-    val bounds = d.agg(min(col(idxName)), max(col(idxName))).head()
-    val (coord, lo, hi) = GlobalWindows.indexCoord(idxDt, col(idxName), bounds)
-    val bkt =
-      if (lo.isNaN || hi.isNaN || !(hi > lo)) lit(0L)
-      else GlobalWindows.bucketExpr(col(idxName), coord, lo, hi, buckets)
-    val keyed = d.withColumn(BktCol, bkt)
+    val keyed = d.withColumn(BktCol,
+      GlobalWindows.bucketing(d, idxName, buckets)._1)
     val width = d.sparkSession.sessionState.conf.numShufflePartitions
     val sorted = keyed.repartition(width, col(BktCol))
       .sortWithinPartitions(col(BktCol).asc, col(idxName).asc_nulls_first)

@@ -76,9 +76,6 @@ final class GFrame private[graft] (val df: DataFrame, val indexName: String)
     new GFrame(renamed, newIdx)
   }
 
-  /** Re-key the frame on a different column. */
-  def setIndex(col: String): GFrame = new GFrame(df, col)
-
   def sortValues(cols: Column*): GFrame = new GFrame(df.orderBy(cols: _*), indexName)
   def head(n: Int): GFrame =
     new GFrame(df.orderBy(df(indexName).asc).limit(n), indexName)
@@ -360,12 +357,6 @@ final class GFrame private[graft] (val df: DataFrame, val indexName: String)
     new GFrame(df.unpivot(ids.toArray, valueCols.map(df(_)).toArray,
       varName, valueName), indexName)
   }
-
-  /** Pre-partition on join/agg keys so downstream stages reuse the
-    * partitioning instead of re-shuffling (pair with Sources.writeBucketed
-    * for the on-disk equivalent). */
-  def repartitionBy(cols: Column*): GFrame =
-    new GFrame(df.repartition(cols: _*), indexName)
 
   // ------------------------------------------------------------------ pivot
 
@@ -909,7 +900,6 @@ final class GFrame private[graft] (val df: DataFrame, val indexName: String)
   }
 
   def count(): Long = df.count()
-  def show(n: Int = 20): Unit = df.show(n)
   def toDF: DataFrame = df
 }
 

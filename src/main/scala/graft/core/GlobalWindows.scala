@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed global-order window engine: the shared range-bucket two-pass
   * machinery behind the pandas-parity global window family (cumsum / cummax /
@@ -52,10 +53,13 @@ import org.apache.spark.storage.StorageLevel
   * same min/max agg that numeric bounds use — "Customer#000..." fixtures
   * would otherwise collapse into one bucket). Null index labels ride in
   * bucket 0 where ascending nulls-first ordering puts them exactly where
-  * the global window had them. A skewed index degrades bucket balance, not
-  * correctness. Association of parallel-summed doubles differs from the
-  * sequential window in the last ulps — round money results (the
-  * DuckDB-oracle tolerance, same as s18/s29).
+  * the global window had them. Any other index dtype (boolean, binary, …)
+  * has no coordinate and runs as ONE bucket — the single-task ordered
+  * window, so every global-order op has this one plan for every index
+  * dtype. A skewed index degrades bucket balance, not correctness.
+  * Association of parallel-summed doubles differs from the sequential
+  * window in the last ulps — round money results (the DuckDB-oracle
+  * tolerance, same as s18/s29).
   */
 final class GlobalWindows private[graft] (
     s: Series, buckets: Int, carry: Int, extra: Seq[(String, Column)],
@@ -76,47 +80,9 @@ final class GlobalWindows private[graft] (
     s.index.as(idxName) +: s.values.as(valName) +:
       extra.map { case (n, c) => c.as(n) }: _*)
 
-  // ---- pass 1: index range (near-free off parquet footer stats — min/max
-  // of the RAW column so footer pruning applies; coordinate conversion
-  // happens driver-side / per-row below)
-  private val bounds = d.agg(
-    F.min(col(idxName)), F.max(col(idxName))).head()
-
-  /** (per-row monotone double coordinate, lo, hi) for the index dtype. */
-  private val (coordExpr, coordLo, coordHi): (Column, Double, Double) =
-    indexCoord(d.schema(idxName).dataType, col(idxName), bounds)
-
-  private val degenerate =
-    coordLo.isNaN || coordHi.isNaN || !(coordHi > coordLo)
-
-  private val bktExpr: Column =
-    if (degenerate) lit(0L)
-    else if (balanced) {
-      // BALANCED bucketing for skewed indexes: equal-width buckets are
-      // balance-only-under-uniformity (a power-law index collapses ~all
-      // rows into one bucket = one straggler task). Opt-in alternative:
-      // bucket boundaries are the coordinate's approximate quantiles —
-      // `buckets − 1` bounded driver doubles from ONE percentile_approx
-      // agg — and the bucket id is the count of boundaries strictly below
-      // the coordinate (a codegen'd when-fold, monotone in the
-      // coordinate, so range order and every carry/offset invariant hold
-      // unchanged). Sketch error skews bucket SIZES a little, never
-      // correctness. Duplicate cuts (a heavy single value) just leave
-      // some bucket ids empty.
-      val qs = (1 until buckets).map(_.toDouble / buckets)
-      val cuts =
-        if (qs.isEmpty) Seq.empty[Double]
-        else {
-          val row = d.select(percentile_approx(coordExpr.cast("double"),
-            typedlit(qs), lit(10000)).as("c")).head()
-          if (row.isNullAt(0)) Seq.empty[Double]
-          else row.getSeq[Double](0).distinct.sorted
-        }
-      when(col(idxName).isNull, lit(0L)).otherwise(
-        cuts.foldLeft(lit(0L)) { (acc, c) =>
-          acc + when(coordExpr > lit(c), 1L).otherwise(0L)
-        })
-    } else bucketExpr(col(idxName), coordExpr, coordLo, coordHi, buckets)
+  /** Bucket id per row and the index coordinate ([[bucketing]]). */
+  private val (bktExpr, coordExpr): (Column, Option[Column]) =
+    bucketing(d, idxName, buckets, balanced)
 
   /** Real rows, bucketed; persisted — consumed by the stats/carry jobs AND
     * the returned windowed plan (tracked in [[graft.Caches]]). */
@@ -457,7 +423,13 @@ final class GlobalWindows private[graft] (
     when(pairs === n, f(col(valName), col(other), _.over(rw)))
   }
 
-  private def rollingCenteredF(n: Int)(f: Column => Column): Column = {
+  /** CENTERED rolling mean (pandas rolling(n, center=True).mean(): the
+    * label sits mid-window — frame [−⌊n/2⌋, +⌊(n−1)/2⌋]); needs
+    * carry ≥ ⌊n/2⌋ AND fcarry ≥ ⌊(n−1)/2⌋ so both edges of every bucket
+    * see their true global neighbors (the lag carries feed the trailing
+    * half, the new lead carries the leading half). pandas
+    * min_periods = n: null until the full frame is present. */
+  def rollingMeanCentered(n: Int): Column = {
     require(n >= 1, "rolling window size must be >= 1")
     val lo = n / 2
     val hi = (n - 1) / 2
@@ -466,20 +438,8 @@ final class GlobalWindows private[graft] (
     require(hi <= fcarry,
       s"rollingCentered($n) needs a builder with fcarry >= $hi (have $fcarry)")
     val rw = w.rowsBetween(-lo, hi)
-    when(F.count(col(valName)).over(rw) === n, f(col(valName)).over(rw))
+    when(F.count(col(valName)).over(rw) === n, avg(col(valName)).over(rw))
   }
-
-  /** CENTERED rolling aggregates (pandas rolling(n, center=True): the
-    * label sits mid-window — frame [−⌊n/2⌋, +⌊(n−1)/2⌋]); needs
-    * carry ≥ ⌊n/2⌋ AND fcarry ≥ ⌊(n−1)/2⌋ so both edges of every bucket
-    * see their true global neighbors (the lag carries feed the trailing
-    * half, the new lead carries the leading half). pandas
-    * min_periods = n: null until the full frame is present. */
-  def rollingMeanCentered(n: Int): Column = rollingCenteredF(n)(avg)
-  def rollingSumCentered(n: Int): Column = rollingCenteredF(n)(F.sum(_))
-  def rollingMinCentered(n: Int): Column = rollingCenteredF(n)(F.min(_))
-  def rollingMaxCentered(n: Int): Column = rollingCenteredF(n)(F.max(_))
-  def rollingStdCentered(n: Int): Column = rollingCenteredF(n)(stddev_samp)
 
   /** 1-based global ordinal position: within-bucket real-row count +
     * exclusive bucket count offset. */
@@ -524,7 +484,9 @@ final class GlobalWindows private[graft] (
       val key = n.getOrElse(IdxCoordKey)
       n.foreach(e => require(extra.exists(_._1 == e),
         s"interpolate coordinate '$e' is not a declared extra column"))
-      val c = n.map(col).getOrElse(coordExpr).cast("double")
+      require(n.isDefined || coordExpr.isDefined,
+        "method='index'/'nearest' needs an orderable (numeric/date/string) index")
+      val c = n.map(col).getOrElse(coordExpr.get).cast("double")
       interpCoords(key) = c
       (key, c)
     }
@@ -623,68 +585,111 @@ private[graft] object GlobalWindows {
   private def numAsDouble(a: Any): Double =
     a.asInstanceOf[java.lang.Number].doubleValue()
 
-  /** (per-row monotone double coordinate, lo, hi) of an orderable index
-    * dtype, from the raw min/max `bounds` row — shared by the window
-    * builder and the recurrence engine ([[Ewm]]). NaN lo/hi signals a
-    * degenerate (single-bucket) range. */
-  private[graft] def indexCoord(dt: DataType, idxCol: Column,
-      bounds: Row): (Column, Double, Double) = dt match {
-    case _: NumericType =>
-      val lo = if (bounds.isNullAt(0)) Double.NaN
-        else numAsDouble(bounds.get(0))
-      val hi = if (bounds.isNullAt(1)) Double.NaN
-        else numAsDouble(bounds.get(1))
-      (idxCol.cast("double"), lo, hi)
-    case DateType =>
-      def days(a: Any): Double = a match {
+  /** Range-bucket id of every row of `d` by its index column `idxName`,
+    * and the index's per-row monotone double coordinate (None for a dtype
+    * with none) — the prologue of every bucketed global-order plan: the
+    * window builder, the recurrence engine ([[Ewm]], [[EwmPair]]) and the
+    * global as-of join. Pass 1 is one min/max job over the RAW column
+    * (near-free off parquet footer stats, which prune on it); the two
+    * bounds convert to coordinates once, each row by expression. A
+    * degenerate range — one distinct label, an all-null index, or a dtype
+    * with no coordinate (boolean, binary, …) — is ONE bucket: the same
+    * single-task ordered window, with empty carries and offsets. */
+  private[graft] def bucketing(d: DataFrame, idxName: String, buckets: Int,
+      balanced: Boolean = false): (Column, Option[Column]) = {
+    val idx = col(idxName)
+    lazy val bounds = d.agg(min(idx), max(idx)).head()
+    indexCoord(d.schema(idxName).dataType, idx, bounds) match {
+      case Some((coord, lo, hi)) if lo < hi => // NaN compares false
+        val bkt =
+          if (!balanced) bucketExpr(idx, coord, lo, hi, buckets)
+          else {
+            // BALANCED bucketing for skewed indexes: equal-width buckets
+            // are balance-only-under-uniformity (a power-law index
+            // collapses ~all rows into one bucket = one straggler task).
+            // Opt-in alternative: bucket boundaries are the coordinate's
+            // approximate quantiles — `buckets − 1` bounded doubles collected
+            // from ONE percentile_approx agg — and the bucket id is the
+            // count of boundaries strictly below the coordinate (a
+            // codegen'd when-fold, monotone in the coordinate, so range
+            // order and every carry/offset invariant hold unchanged).
+            // Sketch error skews bucket SIZES a little, never correctness.
+            // Duplicate cuts (a heavy single value) just leave some bucket
+            // ids empty.
+            val qs = (1 until buckets).map(_.toDouble / buckets)
+            val cuts =
+              if (qs.isEmpty) Seq.empty[Double]
+              else {
+                val row = d.select(percentile_approx(coord.cast("double"),
+                  typedlit(qs), lit(10000)).as("c")).head()
+                if (row.isNullAt(0)) Seq.empty[Double]
+                else row.getSeq[Double](0).distinct.sorted
+              }
+            when(idx.isNull, lit(0L)).otherwise(
+              cuts.foldLeft(lit(0L)) { (acc, c) =>
+                acc + when(coord > lit(c), 1L).otherwise(0L)
+              })
+          }
+        (bkt, Some(coord))
+      case c => (lit(0L), c.map(_._1))
+    }
+  }
+
+  /** (per-row monotone double coordinate, lo, hi) of an index dtype that
+    * has one, from the raw min/max `bounds` row (read only for such
+    * dtypes). NaN lo/hi signals an all-null index. */
+  private def indexCoord(dt: DataType, idxCol: Column,
+      bounds: => Row): Option[(Column, Double, Double)] = {
+    def range(coord: Column)(toDouble: Any => Double) = {
+      def at(i: Int) =
+        if (bounds.isNullAt(i)) Double.NaN else toDouble(bounds.get(i))
+      Some((coord, at(0), at(1)))
+    }
+    dt match {
+      case _: NumericType => range(idxCol.cast("double"))(numAsDouble)
+      case DateType => range(unix_date(idxCol).cast("double")) {
         case dt: java.sql.Date => dt.toLocalDate.toEpochDay.toDouble
         case ld: java.time.LocalDate => ld.toEpochDay.toDouble
       }
-      val lo = if (bounds.isNullAt(0)) Double.NaN else days(bounds.get(0))
-      val hi = if (bounds.isNullAt(1)) Double.NaN else days(bounds.get(1))
-      (unix_date(idxCol).cast("double"), lo, hi)
-    case TimestampType | TimestampNTZType =>
-      def secs(a: Any): Double = a match {
+      // cast timestamp→double = epoch seconds; sub-second drift vs the
+      // ms conversion of the bounds is absorbed by the [0, buckets-1] clamp
+      case TimestampType | TimestampNTZType => range(idxCol.cast("double")) {
         case ts: java.sql.Timestamp =>
           ts.getTime / 1000.0 // ms precision is plenty for BUCKETING
         case i: java.time.Instant => i.toEpochMilli / 1000.0
         case l: java.time.LocalDateTime =>
           l.toEpochSecond(java.time.ZoneOffset.UTC).toDouble
       }
-      val lo = if (bounds.isNullAt(0)) Double.NaN else secs(bounds.get(0))
-      val hi = if (bounds.isNullAt(1)) Double.NaN else secs(bounds.get(1))
-      // cast timestamp→double = epoch seconds; sub-second drift vs the
-      // driver-side ms conversion is absorbed by the [0, buckets-1] clamp
-      (idxCol.cast("double"), lo, hi)
-    case StringType =>
-      if (bounds.isNullAt(0)) (lit(0.0), Double.NaN, Double.NaN)
-      else {
-        val mn = bounds.getString(0).getBytes("UTF-8")
-        val mx = bounds.getString(1).getBytes("UTF-8")
-        // common byte prefix of min&max == common prefix of ALL values
-        // under byte-wise (UTF8_BINARY) ordering
-        var p = 0
-        while (p < mn.length && p < mx.length && mn(p) == mx(p)) p += 1
-        def coordOf(b: Array[Byte]): Double = {
-          val sub = java.util.Arrays.copyOfRange(b, math.min(p, b.length),
-            math.min(p + 8, b.length))
-          // big-endian unsigned, right-padded with 0x00 to 8 bytes;
-          // BigInt→double is correctly rounded, matching Spark's
-          // string→double cast of conv()'s exact decimal rendering
-          BigInt(1, sub ++ Array.fill(8 - sub.length)(0.toByte)).toDouble
+      case StringType =>
+        if (bounds.isNullAt(0)) Some((lit(0.0), Double.NaN, Double.NaN))
+        else {
+          val mn = bounds.getString(0).getBytes("UTF-8")
+          val mx = bounds.getString(1).getBytes("UTF-8")
+          // common byte prefix of min&max == common prefix of ALL values
+          // under byte-wise (UTF8_BINARY) ordering
+          var p = 0
+          while (p < mn.length && p < mx.length && mn(p) == mx(p)) p += 1
+          def coordOf(b: Array[Byte]): Double = {
+            val sub = java.util.Arrays.copyOfRange(b, math.min(p, b.length),
+              math.min(p + 8, b.length))
+            // big-endian unsigned, right-padded with 0x00 to 8 bytes;
+            // BigInt→double is correctly rounded, matching Spark's
+            // string→double cast of conv()'s exact decimal rendering
+            BigInt(1, sub ++ Array.fill(8 - sub.length)(0.toByte)).toDouble
+          }
+          // first 8 bytes after the common prefix, big-endian unsigned —
+          // byte-wise monotone, so range buckets agree with string order
+          Some((conv(rpad(hex(substring(idxCol.cast("binary"),
+            p + 1, 8)), 16, "0"), 16, 10).cast("double"),
+            coordOf(mn), coordOf(mx)))
         }
-        // first 8 bytes after the common prefix, big-endian unsigned —
-        // byte-wise monotone, so range buckets agree with string order
-        (conv(rpad(hex(substring(idxCol.cast("binary"),
-          p + 1, 8)), 16, "0"), 16, 10).cast("double"),
-          coordOf(mn), coordOf(mx))
-      }
-    case _ => (lit(0.0), Double.NaN, Double.NaN) // unsupported → 1 bucket
+      case _ => None
+    }
   }
 
   /** Equal-width range-bucket id over a monotone coordinate, clamped to
     * [0, buckets-1]; null index labels ride in bucket 0. */
-  private[graft] def bucketExpr(idxCol: Column, coord: Column, lo: Double,
+  private def bucketExpr(idxCol: Column, coord: Column, lo: Double,
       hi: Double, buckets: Int): Column = {
     val width = (hi - lo) / buckets
     when(idxCol.isNull, lit(0L)).otherwise(
@@ -692,13 +697,21 @@ private[graft] object GlobalWindows {
         lit(buckets - 1.0)), lit(0.0)).cast("long"))
   }
 
-  /** Null-first comparable ordering over Spark external atomic values. */
+  /** Null-first ordering over Spark external atomic values, agreeing with
+    * Spark's own: strings by UTF-8 byte (`UTF8String`; java.lang.String
+    * compares UTF-16 code units, which disagrees past the BMP) and binary
+    * as unsigned lexicographic bytes (`Array[Byte]` is not Comparable). */
   val AnyOrd: Ordering[Any] = new Ordering[Any] {
-    def compare(a: Any, b: Any): Int =
-      if (a == null && b == null) 0
-      else if (a == null) -1
-      else if (b == null) 1
-      else a.asInstanceOf[Comparable[Any]].compareTo(b)
+    def compare(a: Any, b: Any): Int = (a, b) match {
+      case (null, null) => 0
+      case (null, _) => -1
+      case (_, null) => 1
+      case (x: String, y: String) =>
+        UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+      case (x: Array[Byte], y: Array[Byte]) =>
+        java.util.Arrays.compareUnsigned(x, y)
+      case _ => a.asInstanceOf[Comparable[Any]].compareTo(b)
+    }
   }
 
   private def pickBy(acc: Any, v: Any, gtr: Boolean): Any =

@@ -116,10 +116,6 @@ final class RangeWindows private[graft] (
         cols.map { case (n, c) => c.as(n) }: _*)
       .filter(!col(CarryCol))
       .drop(CarryCol)
-
-  /** Single-expression convenience → Series. */
-  private[graft] def series(expr: Column, n: String = valName): Series =
-    Series.fromKeyed(result(n -> expr), n, idxName)
 }
 
 private[graft] object RangeWindows {

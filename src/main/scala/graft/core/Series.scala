@@ -80,7 +80,6 @@ final class Series private[graft] (
   /** Sample stddev (ddof=1) — matches pandas and actual PySpark behavior
     * (the reference's docstring claims population, ref: series.py:159-165). */
   def std(): Any = aggScalar(stddev_samp(valueExpr))
-  def stdPop(): Any = aggScalar(stddev_pop(valueExpr))
   /** ref: series.py:167-169 degrades to rdd.max(); ours is agg(max) so
     * partial agg + parquet footer stats apply. */
   def max(): Any = aggScalar(F.max(valueExpr))
@@ -129,23 +128,12 @@ final class Series private[graft] (
     aggScalar(avg(F.abs(valueExpr.cast("double") - lit(m))))
   }
 
-  /** All scalar aggregations in one pass (single scan). */
-  def summary1: DataFrame = base.agg(
-    count(valueExpr).as("count"),
-    F.sum(valueExpr).as("sum"),
-    avg(valueExpr).as("mean"),
-    stddev_samp(valueExpr).as("std"),
-    F.min(valueExpr).as("min"),
-    F.max(valueExpr).as("max"))
-
   // ----------------------------------------------------------------- slicing
 
   /** First n elements in index order, as a Series (the reference's head only
     * show()s, ref: series.py:175-177; pandas returns a Series). */
   def head(n: Int = 5): Series = Series.fromKeyed(
     df.orderBy(col(indexName).asc).limit(n), name, indexName)
-
-  def show(n: Int = 5): Unit = head(n).df.show(n)
 
   /** Label lookup (the reference stubs this with NotImplementedError,
     * ref: series.py:257-262). */
@@ -580,24 +568,14 @@ final class Series private[graft] (
   /** Positional half-open slice [from, until) in index order (pandas
     * iloc[a:b]). Ordinal position = exclusive bucket-count offset +
     * within-bucket row_number over the range-bucketed index (see
-    * [[GlobalWindows]]) — no single-task global sort. Non-numeric indexes
-    * fall back to the global ordered row_number. */
+    * [[GlobalWindows]]) — no single-task global sort. */
   def iloc(from: Long, until: Long): Series = {
     require(from >= 0 && until >= from, "invalid positional range")
-    if (orderableIdx) {
-      val g = globalWindows()
-      val out = g.result(name -> g.value, "__pos" -> (g.position() - 1L))
-        .filter(col("__pos") >= from && col("__pos") < until)
-        .drop("__pos")
-      Series.fromKeyed(out, name, indexName)
-    } else {
-      val out = base
-        .select(indexExpr.as(indexName), valueExpr.as(name),
-          (row_number().over(ixWindow) - 1).as("__pos"))
-        .filter(col("__pos") >= from && col("__pos") < until)
-        .drop("__pos")
-      Series.fromKeyed(out, name, indexName)
-    }
+    val g = globalWindows()
+    val out = g.result(name -> g.value, "__pos" -> (g.position() - 1L))
+      .filter(col("__pos") >= from && col("__pos") < until)
+      .drop("__pos")
+    Series.fromKeyed(out, name, indexName)
   }
 
   /** Explode an array-valued Series into one row per element, repeating
@@ -738,17 +716,6 @@ final class Series private[graft] (
         lit(snap(qs(1))))))
   }
 
-  /** Does the index dtype have a monotone numeric bucketing coordinate —
-    * the precondition for the range-bucketed distributed global-window
-    * path ([[GlobalWindows]]): numeric (own value), date/timestamp (epoch
-    * days/seconds), string (first-8-bytes-after-common-prefix big-endian).
-    * Anything else falls back to the single-task global window. */
-  private def orderableIdx: Boolean = df.schema(indexName).dataType match {
-    case _: NumericType | StringType | DateType | TimestampType |
-         TimestampNTZType => true
-    case _ => false
-  }
-
   /** Shared range-bucket two-pass window builder over this Series — compose
     * several global-order window expressions on one bucketed scan (see
     * [[GlobalWindows]]). `carry` = max lag / rolling-width−1 needed;
@@ -762,23 +729,12 @@ final class Series private[graft] (
       balanced: Boolean = false): GlobalWindows =
     new GlobalWindows(this, buckets, carry, extra, fcarry, balanced)
 
-  /** Cumulative sum in index order (pandas cumsum). Numeric indexes run the
-    * distributed two-pass bucket plan ([[GlobalWindows]]); non-numeric fall
-    * back to the single-task global window. [[cumsumBy]] is the keyed
+  /** Cumulative sum in index order (pandas cumsum) on the distributed
+    * two-pass bucket plan ([[GlobalWindows]]). [[cumsumBy]] is the keyed
     * sibling. */
-  def cumsum(): Series =
-    if (orderableIdx) { val g = globalWindows(); g.series(g.cumsum(), name) }
-    else cumsumGlobalWindow
+  def cumsum(): Series = cumsumDistributed()
 
-  /** Single-task global-window cumsum — the non-numeric-index fallback. */
-  private def cumsumGlobalWindow: Series = withValue(F.sum(valueExpr).over(
-    org.apache.spark.sql.expressions.Window.orderBy(indexExpr)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)))
-
-  /** Distributed global cumulative sum via the shared range-bucket two-pass
-    * machinery — kept as an explicit entry point (s29 gate); [[cumsum]] now
-    * routes through the same plan for numeric indexes. See
+  /** [[cumsum]] with an explicit bucket count (s29 gate). See
     * [[GlobalWindows]] for the plan shape and float-association caveat. */
   def cumsumDistributed(buckets: Int = 32): Series = {
     val g = globalWindows(buckets)
@@ -841,26 +797,13 @@ final class Series private[graft] (
   def nsmallest(n: Int): Series = Series.fromKeyed(
     df.orderBy(col(name).asc, col(indexName).asc).limit(n), name, indexName)
 
-  private def ixWindow =
-    org.apache.spark.sql.expressions.Window.orderBy(indexExpr)
-
-  /** Cumulative max in index order (pandas cummax). Numeric indexes run the
-    * bucketed two-pass plan ([[GlobalWindows]]: within-bucket prefix max +
-    * exclusive bucket-max offsets); [[cummaxBy]] is the keyed variant. */
-  def cummax(): Series =
-    if (orderableIdx) { val g = globalWindows(); g.series(g.cummax(), name) }
-    else withValue(F.max(valueExpr).over(
-      org.apache.spark.sql.expressions.Window.orderBy(indexExpr)
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)))
+  /** Cumulative max in index order (pandas cummax) on the bucketed
+    * two-pass plan ([[GlobalWindows]]: within-bucket prefix max +
+    * exclusive bucket-max offsets). */
+  def cummax(): Series = { val g = globalWindows(); g.series(g.cummax(), name) }
 
   /** Cumulative min in index order (pandas cummin). */
-  def cummin(): Series =
-    if (orderableIdx) { val g = globalWindows(); g.series(g.cummin(), name) }
-    else withValue(F.min(valueExpr).over(
-      org.apache.spark.sql.expressions.Window.orderBy(indexExpr)
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)))
+  def cummin(): Series = { val g = globalWindows(); g.series(g.cummin(), name) }
 
   /** Cumulative product in index order (pandas cumprod), distributed in
     * the LOG DOMAIN: a product has no partial+final Spark aggregate, but
@@ -894,14 +837,11 @@ final class Series private[graft] (
   }
 
   /** Value shifted by `n` positions in index order (pandas shift) —
-    * null-padded. Orderable indexes run the bucketed plan with the global
-    * last-n (or, for negative n, FIRST-n-of-following) rows per bucket
-    * boundary as bounded carry rows ([[GlobalWindows]]); non-orderable
-    * indexes fall back to the single-task global window. [[shiftBy]] is
-    * the keyed sibling. */
+    * null-padded. The bucketed plan carries the global last-n (or, for
+    * negative n, FIRST-n-of-following) rows per bucket boundary as bounded
+    * carry rows ([[GlobalWindows]]). [[shiftBy]] is the keyed sibling. */
   def shift(n: Int = 1): Series =
-    if (!orderableIdx) withValue(lag(valueExpr, n).over(ixWindow))
-    else if (n >= 0) {
+    if (n >= 0) {
       val g = globalWindows(carry = n)
       g.series(g.shift(n), name)
     } else {
@@ -911,8 +851,7 @@ final class Series private[graft] (
 
   /** First discrete difference v - v.shift(n) (pandas diff). */
   def diff(n: Int = 1): Series =
-    if (!orderableIdx) withValue(valueExpr - lag(valueExpr, n).over(ixWindow))
-    else if (n >= 0) {
+    if (n >= 0) {
       val g = globalWindows(carry = n)
       g.series(g.diff(n), name)
     } else {
@@ -921,23 +860,12 @@ final class Series private[graft] (
     }
 
   /** pandas Series.is_monotonic_increasing: non-strict (equal neighbors
-    * allowed), any null value → false (pandas NaN behavior). One bucketed
-    * diff pass (no single-task window) closed by one scalar aggregate. */
-  def isMonotonicIncreasing: Boolean = monotonic(_ >= 0)
+    * allowed), any null value → false (pandas NaN behavior). Read from
+    * [[monotonicStats]]. */
+  def isMonotonicIncreasing: Boolean = monotonicStats().increasing
 
   /** pandas Series.is_monotonic_decreasing. */
-  def isMonotonicDecreasing: Boolean = monotonic(_ <= 0)
-
-  private def monotonic(ok: Column => Column): Boolean = {
-    val counts = base.agg(F.count(lit(1)), F.count(valueExpr)).head()
-    val n = counts.getLong(0)
-    if (counts.getLong(1) < n) return false // any null value → false (NaN)
-    if (n <= 1) return true
-    // null-free values: the only null diff is the first position
-    val d = diff(1)
-    d.base.agg(F.min(when(d.valueExpr.isNull || ok(d.valueExpr), 1L)
-      .otherwise(0L))).head().getLong(0) == 1L
-  }
+  def isMonotonicDecreasing: Boolean = monotonicStats().decreasing
 
   /** FUSED scalar probes — is_monotonic_increasing, is_monotonic_decreasing,
     * any(anyPred), all(allPred) — closed from ONE shared diff pass and ONE
@@ -950,14 +878,8 @@ final class Series private[graft] (
                      allPred: Column => Column = _ => lit(true))
       : Series.MonotonicStats = {
     // one frame carrying BOTH the raw value and its global diff(1)
-    val d =
-      if (!orderableIdx)
-        base.select(valueExpr.as("__v"),
-          (valueExpr - lag(valueExpr, 1).over(ixWindow)).as("__d"))
-      else {
-        val g = globalWindows(carry = 1)
-        g.result("__d" -> g.diff(1), "__v" -> col(name))
-      }
+    val g = globalWindows(carry = 1)
+    val d = g.result("__d" -> g.diff(1), "__v" -> col(name))
     val r = d.agg(
       F.count(lit(1)), F.count(col("__v")),
       F.min(when(col("__d").isNull || col("__d") >= 0, 1L).otherwise(0L)),
@@ -990,10 +912,7 @@ final class Series private[graft] (
     * abort under Spark 4's default ANSI mode. */
   def pctChange(periods: Int = 1): Series = {
     require(periods != 0, "pct_change periods must be non-zero")
-    if (!orderableIdx) {
-      val prev = lag(valueExpr, periods).over(ixWindow)
-      withValue(try_divide(valueExpr - prev, prev))
-    } else if (periods >= 1) {
+    if (periods >= 1) {
       val g = globalWindows(carry = periods)
       g.series(g.pctChange(periods), name)
     } else { // pandas pct_change(-n): change vs the FOLLOWING value
@@ -1315,9 +1234,10 @@ final class Series private[graft] (
     * the cumulative per-group frame — one shuffle on the key, per-group
     * ordered scan; the sort-based percentile re-evaluates per row (an
     * exact expanding order statistic has no incremental form — unlike
-    * mean/std it needs the whole prefix multiset, which is also why the
-    * GLOBAL [[expandingQuantile]] cannot ride the bucketed carry plan:
-    * a bounded carry cannot represent an unbounded prefix of values). */
+    * mean/std it needs the whole prefix multiset, which is also why no
+    * exact GLOBAL expanding quantile rides the bucketed carry plan: a
+    * bounded carry cannot represent an unbounded prefix of values; see
+    * [[expandingQuantileApprox]]). */
   def expandingQuantileBy(by: Column, q: Double): Series = {
     require(q >= 0.0 && q <= 1.0, s"quantile must be in [0, 1], got $q")
     val W = org.apache.spark.sql.expressions.Window
@@ -1328,25 +1248,8 @@ final class Series private[graft] (
   /** pandas groupby(by).expanding().median(). */
   def expandingMedianBy(by: Column): Series = expandingQuantileBy(by, 0.5)
 
-  /** pandas expanding().quantile(q), global index order. DELIBERATE
-    * single-task window: the exact expanding order statistic needs the
-    * full prefix multiset per row, so no bounded bucket-carry
-    * distribution exists (contrast [[expandingStats]], whose three
-    * prefix sums do factorize). Prefer [[expandingQuantileBy]] at scale,
-    * or a windowed approximation. */
-  def expandingQuantile(q: Double): Series = {
-    require(q >= 0.0 && q <= 1.0, s"quantile must be in [0, 1], got $q")
-    val W = org.apache.spark.sql.expressions.Window
-    withValue(percentile(valueExpr, lit(q)).over(
-      ixWindow.rowsBetween(W.unboundedPreceding, W.currentRow)))
-  }
-
-  /** pandas expanding().median(), global index order (see
-    * [[expandingQuantile]] for the single-task caveat). */
-  def expandingMedian(): Series = expandingQuantile(0.5)
-
-  /** The 100 TB sibling of [[expandingQuantile]]: APPROXIMATE global
-    * expanding quantile with fully distributed, bounded state, via
+  /** pandas expanding().quantile(q), global index order, APPROXIMATE:
+    * fully distributed, bounded state, via
     * mergeable Greenwald–Khanna sketches (the percentile_approx summary):
     *
     *   1. rows range-repartition + sort by index (`buckets` ordered
@@ -1361,9 +1264,9 @@ final class Series private[graft] (
     * Per-row rank error ≤ ε·n over each row's own prefix (spec-asserted).
     * This is genuine per-partition sequential-state logic, so it uses
     * mapPartitions deliberately — no SQL window exposes partial-sketch
-    * merge. Exact [[expandingQuantile]] stays the oracle path; it cannot
-    * distribute (an unbounded prefix multiset does not factorize into
-    * bounded carry). */
+    * merge. An exact global expanding quantile cannot distribute (an
+    * unbounded prefix multiset does not factorize into bounded carry);
+    * [[expandingQuantileBy]] is the exact keyed sibling. */
   def expandingQuantileApprox(q: Double, relativeError: Double = 0.01,
                               buckets: Int = 32): Series = {
     require(q >= 0.0 && q <= 1.0, s"quantile must be in [0, 1], got $q")
@@ -1419,22 +1322,12 @@ final class Series private[graft] (
     Series.fromKeyed(spark.createDataFrame(outRdd, schema), name, indexName)
   }
 
-  /** Approximate global expanding median — see
-    * [[expandingQuantileApprox]]. */
-  def expandingMedianApprox(relativeError: Double = 0.01): Series =
-    expandingQuantileApprox(0.5, relativeError)
-
   /** pandas groupby(by).ewm(alpha, adjust=, ignore_na=): (idx, key,
     * ewm_mean, ewm_var) — one keyed exchange + per-group streaming
     * recurrence ([[Ewm.statsBy]]). */
   def ewmStatsBy(by: Column, alpha: Double, adjust: Boolean = true,
       ignoreNa: Boolean = false): DataFrame =
     Ewm.statsBy(this, by, alpha, adjust, ignoreNa)
-
-  /** Keyed ewm mean as a Series. */
-  def ewmMeanBy(by: Column, alpha: Double): Series = Series.fromKeyed(
-    ewmStatsBy(by, alpha).select(col(indexName), col("ewm_mean").as(name)),
-    name, indexName)
 
   /** Cumulative product within each `by` group (pandas
     * groupby(by).cumprod()) — the keyed sibling of [[cumprod]]: the same
@@ -1459,44 +1352,28 @@ final class Series private[graft] (
   }
 
   /** Rolling mean over the trailing `n` values in index order (pandas
-    * rolling(n).mean() with min_periods=n → null until the window fills).
-    * Numeric indexes run the bucketed carry plan ([[GlobalWindows]]);
-    * non-numeric fall back to the single-task global window. */
-  def rollingMean(n: Int): Series = rollingGlobal(n, _.rollingMean(n),
-    rollingOver(ixWindow, n, avg(valueExpr)))
-  def rollingSum(n: Int): Series = rollingGlobal(n, _.rollingSum(n),
-    rollingOver(ixWindow, n, F.sum(valueExpr)))
-  def rollingMin(n: Int): Series = rollingGlobal(n, _.rollingMin(n),
-    rollingOver(ixWindow, n, F.min(valueExpr)))
-  def rollingMax(n: Int): Series = rollingGlobal(n, _.rollingMax(n),
-    rollingOver(ixWindow, n, F.max(valueExpr)))
-  def rollingStd(n: Int): Series = rollingGlobal(n, _.rollingStd(n),
-    rollingOver(ixWindow, n, stddev_samp(valueExpr)))
+    * rolling(n).mean() with min_periods=n → null until the window fills)
+    * on the bucketed carry plan ([[GlobalWindows]]). */
+  def rollingMean(n: Int): Series = rollingGlobal(n, _.rollingMean(n))
+  def rollingSum(n: Int): Series = rollingGlobal(n, _.rollingSum(n))
+  def rollingMin(n: Int): Series = rollingGlobal(n, _.rollingMin(n))
+  def rollingMax(n: Int): Series = rollingGlobal(n, _.rollingMax(n))
+  def rollingStd(n: Int): Series = rollingGlobal(n, _.rollingStd(n))
   /** pandas rolling(n).quantile(q) / .median() — exact linear
     * interpolation (percentile_cont), same carry-complete trailing frame
     * as the other rolling aggregates. */
   def rollingQuantile(n: Int, q: Double): Series =
-    rollingGlobal(n, _.rollingQuantile(n, q),
-      rollingOver(ixWindow, n, percentile(valueExpr, lit(q))))
+    rollingGlobal(n, _.rollingQuantile(n, q))
   def rollingMedian(n: Int): Series = rollingQuantile(n, 0.5)
-  /** Keyed sibling (pandas groupby(k).rolling(n).quantile(q)). */
-  def rollingQuantileBy(by: Column, n: Int, q: Double): Series =
-    rollingOver(keyedWindow(by), n, percentile(valueExpr, lit(q)))
-  def rollingMedianBy(by: Column, n: Int): Series =
-    rollingQuantileBy(by, n, 0.5)
 
   /** pandas rolling(n, win_type=...).mean() — weighted trailing window:
     * Σ wᵢ·v[t−n+1+i] / Σ wᵢ as a chain of n lag terms (deterministic
     * association order; null/missing values in the frame null the result,
-    * pandas' weighted-window semantics). Orderable indexes ride the
-    * bucketed carry plan; others fall back to the single-task window.
+    * pandas' weighted-window semantics) on the bucketed carry plan.
     * Weight shapes: [[Series.triangWeights]] (win_type='triang'),
     * [[Series.gaussianWeights]] (win_type='gaussian'). */
-  def rollingWeightedMean(weights: Seq[Double]): Series = {
-    val n = weights.length
-    rollingGlobal(n, _.rollingWeightedMean(weights),
-      withValue(Series.weightedLagChain(weights, valueExpr, ixWindow)))
-  }
+  def rollingWeightedMean(weights: Seq[Double]): Series =
+    rollingGlobal(weights.length, _.rollingWeightedMean(weights))
 
   /** Keyed sibling (pandas groupby(k).rolling(n, win_type=...).mean()):
     * the key partitions the frame — one shuffle, no bucket machinery. */
@@ -1506,42 +1383,16 @@ final class Series private[graft] (
   /** pandas rolling(n).skew() — SAMPLE skewness (bias-corrected G1, the
     * pandas/DuckDB convention), converted from Spark's population
     * skewness by the frame count; null until the frame fills (n ≥ 3). */
-  def rollingSkew(n: Int): Series = {
-    require(n >= 3, "rolling skew needs a window of >= 3")
-    rollingGlobal(n, _.rollingSkew(n), {
-      val w = ixWindow.rowsBetween(-(n - 1), 0)
-      withValue(when(F.count(valueExpr).over(w) === n,
-        skewness(valueExpr.cast("double")).over(w) *
-          lit(Series.skewFactor(n))))
-    })
-  }
+  def rollingSkew(n: Int): Series = rollingGlobal(n, _.rollingSkew(n))
 
   /** pandas rolling(n).kurt() — sample EXCESS kurtosis (G2); n ≥ 4. */
-  def rollingKurt(n: Int): Series = {
-    require(n >= 4, "rolling kurt needs a window of >= 4")
-    rollingGlobal(n, _.rollingKurt(n), {
-      val w = ixWindow.rowsBetween(-(n - 1), 0)
-      withValue(when(F.count(valueExpr).over(w) === n,
-        (kurtosis(valueExpr.cast("double")).over(w) * lit(n + 1.0) +
-          lit(6.0)) * lit(Series.kurtFactor(n))))
-    })
-  }
+  def rollingKurt(n: Int): Series = rollingGlobal(n, _.rollingKurt(n))
 
   /** BOTH rolling sample moments — `(index, skew, kurt)` — one scan. */
   def rollingMomentStats(n: Int): DataFrame = {
     require(n >= 4, "rolling moment stats need a window of >= 4")
-    if (orderableIdx) {
-      val g = globalWindows(carry = n - 1)
-      g.result("skew" -> g.rollingSkew(n), "kurt" -> g.rollingKurt(n))
-    } else {
-      val w = ixWindow.rowsBetween(-(n - 1), 0)
-      val full = F.count(valueExpr).over(w) === n
-      base.select(indexExpr.as(indexName),
-        when(full, skewness(valueExpr.cast("double")).over(w) *
-          lit(Series.skewFactor(n))).as("skew"),
-        when(full, (kurtosis(valueExpr.cast("double")).over(w) *
-          lit(n + 1.0) + lit(6.0)) * lit(Series.kurtFactor(n))).as("kurt"))
-    }
+    val g = globalWindows(carry = n - 1)
+    g.result("skew" -> g.rollingSkew(n), "kurt" -> g.rollingKurt(n))
   }
 
   /** Keyed siblings (pandas groupby(k).rolling(n).skew()/.kurt()). */
@@ -1566,61 +1417,31 @@ final class Series private[graft] (
     * timestamps, days for dates, the value itself for integral indexes) —
     * one shuffle on the key, no bucketing machinery needed. pandas
     * closed='right' / min_periods=1; null index labels yield null. */
-  def rollingRangeMeanBy(by: Column, span: Long): Series =
-    rollingRangeBy(by, span)(avg)
-  def rollingRangeSumBy(by: Column, span: Long): Series =
-    rollingRangeBy(by, span)(F.sum(_))
-  def rollingRangeMinBy(by: Column, span: Long): Series =
-    rollingRangeBy(by, span)(F.min(_))
-  def rollingRangeMaxBy(by: Column, span: Long): Series =
-    rollingRangeBy(by, span)(F.max(_))
-  def rollingRangeCountBy(by: Column, span: Long): Series =
-    rollingRangeBy(by, span)(F.count(_))
-  def rollingRangeStdBy(by: Column, span: Long): Series =
-    rollingRangeBy(by, span)(stddev_samp)
-
-  private def rollingRangeBy(by: Column, span: Long)
-      (f: Column => Column): Series = {
+  def rollingRangeMeanBy(by: Column, span: Long): Series = {
     require(span >= 1, s"span must be >= 1 coordinate unit, got $span")
     val coord = RangeWindows.coordOf(df.schema(indexName).dataType,
       indexExpr)
     val w = org.apache.spark.sql.expressions.Window.partitionBy(by)
       .orderBy(coord.asc).rangeBetween(-(span - 1L), 0L)
     withValue(when(indexExpr.isNull, lit(null))
-      .otherwise(f(valueExpr).over(w)))
+      .otherwise(avg(valueExpr).over(w)))
   }
 
-  private def rollingGlobal(n: Int, distributed: GlobalWindows => Column,
-      fallback: => Series): Series = {
+  private def rollingGlobal(n: Int,
+      distributed: GlobalWindows => Column): Series = {
     require(n >= 1, "rolling window size must be >= 1")
-    if (orderableIdx) {
-      val g = globalWindows(carry = n - 1)
-      g.series(distributed(g), name)
-    } else fallback
+    val g = globalWindows(carry = n - 1)
+    g.series(distributed(g), name)
   }
 
   /** pandas rolling(n, center=True).mean() — the label mid-window: frame
-    * [−⌊n/2⌋, +⌊(n−1)/2⌋]. Orderable indexes ride the bucketed plan with
-    * BOTH carry directions (lag rows feed the trailing half, the forward
-    * carries the leading half); others fall back to the single-task
-    * window. */
-  def rollingMeanCentered(n: Int): Series =
-    rollingCenteredGlobal(n, _.rollingMeanCentered(n), avg(valueExpr))
-  def rollingSumCentered(n: Int): Series =
-    rollingCenteredGlobal(n, _.rollingSumCentered(n), F.sum(valueExpr))
-  def rollingStdCentered(n: Int): Series =
-    rollingCenteredGlobal(n, _.rollingStdCentered(n), stddev_samp(valueExpr))
-
-  private def rollingCenteredGlobal(n: Int,
-      distributed: GlobalWindows => Column, aggExpr: Column): Series = {
+    * [−⌊n/2⌋, +⌊(n−1)/2⌋] on the bucketed plan with BOTH carry
+    * directions (lag rows feed the trailing half, the forward carries the
+    * leading half). */
+  def rollingMeanCentered(n: Int): Series = {
     require(n >= 1, "rolling window size must be >= 1")
-    if (orderableIdx) {
-      val g = globalWindows(carry = n / 2, fcarry = (n - 1) / 2)
-      g.series(distributed(g), name)
-    } else {
-      val w = ixWindow.rowsBetween(-(n / 2), (n - 1) / 2)
-      withValue(when(F.count(valueExpr).over(w) === n, aggExpr.over(w)))
-    }
+    val g = globalWindows(carry = n / 2, fcarry = (n - 1) / 2)
+    g.series(g.rollingMeanCentered(n), name)
   }
 
   /** Range-window builder (pandas rolling('1h') on a datetime index):
@@ -1636,33 +1457,13 @@ final class Series private[graft] (
   def rangeWindows(span: Long, buckets: Int = 32): RangeWindows =
     new RangeWindows(this, span, buckets)
 
-  private def rangeRolling(span: Long, buckets: Int)
-      (f: RangeWindows => Column): Series = {
-    val r = rangeWindows(span, buckets)
-    r.series(f(r), name)
-  }
-
-  /** pandas rolling(offset).mean() — see [[rangeWindows]]. */
-  def rollingRangeMean(span: Long, buckets: Int = 32): Series =
-    rangeRolling(span, buckets)(_.mean())
-  def rollingRangeSum(span: Long, buckets: Int = 32): Series =
-    rangeRolling(span, buckets)(_.sum())
-  def rollingRangeMin(span: Long, buckets: Int = 32): Series =
-    rangeRolling(span, buckets)(_.min())
-  def rollingRangeMax(span: Long, buckets: Int = 32): Series =
-    rangeRolling(span, buckets)(_.max())
-  def rollingRangeStd(span: Long, buckets: Int = 32): Series =
-    rangeRolling(span, buckets)(_.std())
-  def rollingRangeCount(span: Long, buckets: Int = 32): Series =
-    rangeRolling(span, buckets)(_.count())
-
   /** pandas s.rolling(n).corr(other) — trailing-`n` Pearson correlation
     * of two Series. Same-base pairs compose on one scan; cross-frame
     * pairs align by index first (full-outer, pandas label alignment).
     * Null until the frame holds `n` complete pairs (both sides non-null —
-    * pandas drops incomplete pairs pairwise). Orderable indexes ride the
-    * bucketed carry plan ([[GlobalWindows]] with the other Series as a
-    * passthrough extra); others fall back to the single-task window. */
+    * pandas drops incomplete pairs pairwise). Runs on the bucketed carry
+    * plan ([[GlobalWindows]] with the other Series as a passthrough
+    * extra). */
   def rollingCorr(other: Series, n: Int): Series =
     rollingPairGlobal(other, n, Series.safeCorr, "corr")
 
@@ -1691,16 +1492,9 @@ final class Series private[graft] (
   private def rollingPairGlobal(other: Series, n: Int,
       f: Series.PairAgg, outName: String): Series = {
     require(n >= 1, "rolling window size must be >= 1")
-    withPair(other) { (b, x, y) =>
-      if (b.orderableIdx) {
-        val g = b.globalWindows(carry = n - 1,
-          extra = Seq(PairCol -> y))
-        g.series(g.rollingPair(n, PairCol, f), outName)
-      } else {
-        val w = b.ixWindow.rowsBetween(-(n - 1), 0)
-        val pairs = F.count(when(x.isNotNull && y.isNotNull, 1)).over(w)
-        b.withValue(when(pairs === n, f(x, y, _.over(w))), outName)
-      }
+    withPair(other) { (b, _, y) =>
+      val g = b.globalWindows(carry = n - 1, extra = Seq(PairCol -> y))
+      g.series(g.rollingPair(n, PairCol, f), outName)
     }
   }
 
@@ -1708,18 +1502,10 @@ final class Series private[graft] (
     * carry-complete scan and Window pass. */
   def rollingPairStats(other: Series, n: Int): DataFrame = {
     require(n >= 1, "rolling window size must be >= 1")
-    withPair(other) { (b, x, y) =>
-      if (b.orderableIdx) {
-        val g = b.globalWindows(carry = n - 1, extra = Seq(PairCol -> y))
-        g.result("corr" -> g.rollingPair(n, PairCol, Series.safeCorr),
-          "cov" -> g.rollingPair(n, PairCol, Series.sampCov))
-      } else {
-        val w = b.ixWindow.rowsBetween(-(n - 1), 0)
-        val pairs = F.count(when(x.isNotNull && y.isNotNull, 1)).over(w)
-        b.base.select(b.indexExpr.as(b.indexName),
-          when(pairs === n, Series.safeCorr(x, y, _.over(w))).as("corr"),
-          when(pairs === n, Series.sampCov(x, y, _.over(w))).as("cov"))
-      }
+    withPair(other) { (b, _, y) =>
+      val g = b.globalWindows(carry = n - 1, extra = Seq(PairCol -> y))
+      g.result("corr" -> g.rollingPair(n, PairCol, Series.safeCorr),
+        "cov" -> g.rollingPair(n, PairCol, Series.sampCov))
     }
   }
 
@@ -1729,8 +1515,7 @@ final class Series private[graft] (
     * non-null, pandas' pairwise dropping) sharing ONE bucketed scan and
     * one stats job ([[GlobalWindows]] passthrough extras); null until 2
     * complete pairs; zero-variance prefixes null via try_divide (DuckDB
-    * corr NULL, pandas NaN). Cross-frame inputs index-align first;
-    * non-orderable indexes fall back to the single-task window. */
+    * corr NULL, pandas NaN). Cross-frame inputs index-align first. */
   def expandingCorr(other: Series): Series =
     expandingPair(other, isCorr = true, "corr")
 
@@ -1741,10 +1526,8 @@ final class Series private[graft] (
 
   private def expandingPair(other: Series, isCorr: Boolean,
       outName: String): Series = withPair(other) { (b, x0, y0) =>
-    b.expandingPairOver(x0, y0, Seq(outName -> isCorr)) match {
-      case Left(g -> exprs) => g.series(exprs.head._2, outName)
-      case Right(df) => Series.fromKeyed(df, outName, b.indexName)
-    }
+    val (g, exprs) = b.expandingPairOver(x0, y0, Seq(outName -> isCorr))
+    g.series(exprs.head._2, outName)
   }
 
   /** BOTH expanding pairwise stats — `(index, corr, cov)` — from the six
@@ -1752,50 +1535,35 @@ final class Series private[graft] (
     * identical cumulative sums, so this costs exactly one corr). */
   def expandingPairStats(other: Series): DataFrame =
     withPair(other) { (b, x0, y0) =>
-      b.expandingPairOver(x0, y0,
-        Seq("corr" -> true, "cov" -> false)) match {
-        case Left(g -> exprs) => g.result(exprs: _*)
-        case Right(df) => df
-      }
+      val (g, exprs) = b.expandingPairOver(x0, y0,
+        Seq("corr" -> true, "cov" -> false))
+      g.result(exprs: _*)
     }
 
-  /** Build the requested expanding pairwise stats over this base: Left =
-    * the bucketed plan (orderable index), Right = single-task fallback. */
+  /** Build the requested expanding pairwise stats over this base on the
+    * bucketed plan: the builder and one expression per output. */
   private def expandingPairOver(x0: Column, y0: Column,
       outs: Seq[(String, Boolean)])
-      : Either[(GlobalWindows, Seq[(String, Column)]), DataFrame] = {
+      : (GlobalWindows, Seq[(String, Column)]) = {
     val x = x0.cast("double"); val y = y0.cast("double")
     val both = x.isNotNull && y.isNotNull
-    if (orderableIdx) {
-      val ex = Seq(
-        "__ep_n" -> when(both, 1L).otherwise(0L),
-        "__ep_sx" -> when(both, x).otherwise(0.0),
-        "__ep_sy" -> when(both, y).otherwise(0.0),
-        "__ep_sxy" -> when(both, x * y).otherwise(0.0),
-        "__ep_sx2" -> when(both, x * x).otherwise(0.0),
-        "__ep_sy2" -> when(both, y * y).otherwise(0.0))
-      val g = globalWindows(extra = ex)
-      val c = ex.map { case (n, _) => g.cumsumExtra(n) }
-      Left(g -> outs.map { case (n, isCorr) =>
-        n -> Series.pairFromSums(isCorr, c(0), c(1), c(2), c(3), c(4),
-          c(5)) })
-    } else {
-      val w = ixWindow.rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      def ps(c: Column): Column = F.sum(when(both, c)).over(w)
-      val cols = outs.map { case (n, isCorr) =>
-        Series.pairFromSums(isCorr, F.count(when(both, 1)).over(w),
-          ps(x), ps(y), ps(x * y), ps(x * x), ps(y * y)).as(n) }
-      Right(base.select(indexExpr.as(indexName) +: cols: _*))
-    }
+    val ex = Seq(
+      "__ep_n" -> when(both, 1L).otherwise(0L),
+      "__ep_sx" -> when(both, x).otherwise(0.0),
+      "__ep_sy" -> when(both, y).otherwise(0.0),
+      "__ep_sxy" -> when(both, x * y).otherwise(0.0),
+      "__ep_sx2" -> when(both, x * x).otherwise(0.0),
+      "__ep_sy2" -> when(both, y * y).otherwise(0.0))
+    val g = globalWindows(extra = ex)
+    val c = ex.map { case (n, _) => g.cumsumExtra(n) }
+    g -> outs.map { case (n, isCorr) =>
+      n -> Series.pairFromSums(isCorr, c(0), c(1), c(2), c(3), c(4), c(5)) }
   }
 
-  /** Keyed siblings (pandas groupby(k).expanding().corr/cov): same-base
+  /** Keyed sibling (pandas groupby(k).expanding().corr()): same-base
     * only (two columns of one table), one shuffle on the key. */
   def expandingCorrBy(by: Column, other: Series): Series =
     expandingPairBy(by, other, isCorr = true, "corr")
-  def expandingCovBy(by: Column, other: Series): Series =
-    expandingPairBy(by, other, isCorr = false, "cov")
 
   private def expandingPairBy(by: Column, other: Series, isCorr: Boolean,
       outName: String): Series = {
@@ -1811,13 +1579,11 @@ final class Series private[graft] (
       ps(x * x), ps(y * y)), outName)
   }
 
-  /** Keyed sibling (pandas groupby(k).rolling(n).corr/cov): both Series
+  /** Keyed sibling (pandas groupby(k).rolling(n).corr()): both Series
     * must share a base frame (the common case — two columns of one
     * table); one shuffle on the key. */
   def rollingCorrBy(by: Column, other: Series, n: Int): Series =
     rollingPairBy(by, other, n, Series.safeCorr, "corr")
-  def rollingCovBy(by: Column, other: Series, n: Int): Series =
-    rollingPairBy(by, other, n, Series.sampCov, "cov")
 
   private def rollingPairBy(by: Column, other: Series, n: Int,
       f: Series.PairAgg, outName: String): Series = {
@@ -1852,20 +1618,13 @@ final class Series private[graft] (
   private def keyedWindow(by: Column) =
     org.apache.spark.sql.expressions.Window.partitionBy(by).orderBy(indexExpr)
 
-  /** Forward-fill nulls in index order (pandas ffill). Numeric indexes run
-    * the bucketed plan (within-bucket last non-null + exclusive last-non-
-    * null bucket offsets, [[GlobalWindows]]); [[ffillBy]] is the keyed
-    * sibling. */
-  def ffill(): Series =
-    if (orderableIdx) { val g = globalWindows(); g.series(g.ffill(), name) }
-    else withValue(last(valueExpr, ignoreNulls = true)
-      .over(ixWindow.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
+  /** Forward-fill nulls in index order (pandas ffill) on the bucketed
+    * plan (within-bucket last non-null + exclusive last-non-null bucket
+    * offsets, [[GlobalWindows]]); [[ffillBy]] is the keyed sibling. */
+  def ffill(): Series = { val g = globalWindows(); g.series(g.ffill(), name) }
 
   /** Backward-fill nulls in index order (pandas bfill). */
-  def bfill(): Series =
-    if (orderableIdx) { val g = globalWindows(); g.series(g.bfill(), name) }
-    else withValue(first(valueExpr, ignoreNulls = true)
-      .over(ixWindow.rowsBetween(0, org.apache.spark.sql.expressions.Window.unboundedFollowing)))
+  def bfill(): Series = { val g = globalWindows(); g.series(g.bfill(), name) }
 
   /** Global un-keyed interpolation in index order — the pandas DEFAULT
     * call shape `s.interpolate(method=, limit=, limit_direction=)`
@@ -1878,7 +1637,7 @@ final class Series private[graft] (
     *    fraction is positional over the global row order;
     *  - `"index"`: fraction weights by index-label distance.
     *
-    * Scale shape (orderable indexes): the range-bucketed two-pass plan —
+    * Scale shape: the range-bucketed two-pass plan —
     * method='index' without a limit is ONE bucketed window pass whose
     * cross-bucket context is four bounded offsets (prev/next non-null
     * value + coordinate, [[GlobalWindows.interpolate]]); linear (or any
@@ -1892,21 +1651,7 @@ final class Series private[graft] (
     limit.foreach(l => require(l >= 1, s"limit must be >= 1, got $l"))
     require(Set("linear", "index", "nearest")(method),
       s"interpolate method must be linear|index|nearest, got '$method'")
-    val W = org.apache.spark.sql.expressions.Window
-    if (!orderableIdx) {
-      // single-task fallback, same caveat as ffill's: no monotone numeric
-      // coordinate to bucket by (linear only — 'index'/'nearest' need one)
-      require(method == "linear",
-        "method='index'/'nearest' needs an orderable (numeric/date/string) index")
-      val posN = "__ip_pos"
-      val staged = base
-        .select(indexExpr.as(indexName), valueExpr.as(name))
-        .withColumn(posN,
-          row_number().over(W.orderBy(col(indexName))).cast("double"))
-      new Series(staged, name, indexName, col(indexName),
-        interpolateExpr(W.orderBy(col(indexName)), col(name), col(posN),
-          Some(col(posN)), limit, limitDirection))
-    } else if (method != "linear" && limit.isEmpty) {
+    if (method != "linear" && limit.isEmpty) {
       // 'index'/'nearest': the index IS the coordinate — one bucketed pass
       val g = globalWindows()
       g.series(g.interpolate(None, limitDirection,
@@ -2042,18 +1787,6 @@ final class Series private[graft] (
   /** Cumulative sum within each `by` group, index-ordered (pandas
     * groupby(by).cumsum()). */
   def cumsumBy(by: Column): Series = withValue(F.sum(valueExpr).over(
-    keyedWindow(by)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)))
-
-  /** Cumulative max within each `by` group (pandas groupby(by).cummax()). */
-  def cummaxBy(by: Column): Series = withValue(F.max(valueExpr).over(
-    keyedWindow(by)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)))
-
-  /** Cumulative min within each `by` group (pandas groupby(by).cummin()). */
-  def cumminBy(by: Column): Series = withValue(F.min(valueExpr).over(
     keyedWindow(by)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)))
@@ -2315,8 +2048,6 @@ final class Series private[graft] (
     rollingOver(keyedWindow(by), n, F.min(valueExpr))
   def rollingMaxBy(by: Column, n: Int): Series =
     rollingOver(keyedWindow(by), n, F.max(valueExpr))
-  def rollingStdBy(by: Column, n: Int): Series =
-    rollingOver(keyedWindow(by), n, stddev_samp(valueExpr))
 
   /** Top-k values within each `by` group (pandas groupby(by).nlargest(k)),
     * ties broken by index label. The rank predicate sits directly on the
@@ -2417,10 +2148,8 @@ final class StrAccessor private[core] (s: Series) {
   def lower: Series = t(F.lower(_))
   /** Character count (pandas str.len). */
   def len: Series = t(F.length(_))
-  def strip: Series = t(F.trim(_))
   def contains(sub: String): Series = t(_.contains(sub))
   def startswith(prefix: String): Series = t(_.startsWith(prefix))
-  def endswith(suffix: String): Series = t(_.endsWith(suffix))
   /** LITERAL replacement (pandas ≥ 2 str.replace default, regex=False). */
   def replace(search: String, repl: String): Series =
     t(v => F.replace(v, lit(search), lit(repl)))
@@ -2429,7 +2158,6 @@ final class StrAccessor private[core] (s: Series) {
     require(start >= 0 && stop >= start, "slice needs 0 <= start <= stop")
     t(F.substring(_, start + 1, stop - start))
   }
-  def zfill(width: Int): Series = t(F.lpad(_, width, "0"))
   /** pandas str.extract(pat) with ONE capture group: the group's match,
     * null when the pattern doesn't match (regexp_extract returns '' there
     * — nulled to match pandas NaN). */
@@ -2473,8 +2201,6 @@ final class StrAccessor private[core] (s: Series) {
   }
   /** pandas str.title() (initcap: every word's first letter upper). */
   def title: Series = t(F.initcap(_))
-  def lstrip: Series = t(F.ltrim(_))
-  def rstrip: Series = t(F.rtrim(_))
 }
 
 /** pandas Series.dt — calendar parts in the session time zone; dayofweek
@@ -2547,7 +2273,6 @@ object Series {
 
   private[core] val IdxCol = "__graft_idx"
   private[core] val BktCol = "__graft_bkt"
-  private[core] val PreCol = "__graft_pre"
   private[core] val LeftCol = "__graft_l"
   private[core] val RightCol = "__graft_r"
   private[core] val PairCol = "__graft_pair"
@@ -2723,7 +2448,6 @@ object Series {
   * copied; see SURVEY §4 "eager actions in hot paths"). */
 final class RangeIndex(private val s: Series) {
   def name: String = s.indexName
-  def withName(n: String): Series = s.renameIndex(n)
 
   /** (start, stop) in one agg job; (0, 0) for an empty Series. */
   def bounds: (Long, Long) = {

@@ -379,13 +379,7 @@ object EventOps {
           col(tsCol)).as("__rus"): _*).as("__rvals"))
     val un = lNorm.unionByName(rNorm)
     val tsDt = un.schema("__ts").dataType
-    val bounds = un.agg(min(col("__ts")), max(col("__ts"))).head()
-    val (coord, lo, hi) =
-      graft.core.GlobalWindows.indexCoord(tsDt, col("__ts"), bounds)
-    val bkt =
-      if (lo.isNaN || hi.isNaN || !(hi > lo)) lit(0L)
-      else graft.core.GlobalWindows.bucketExpr(col("__ts"), coord, lo, hi,
-        buckets)
+    val bkt = graft.core.GlobalWindows.bucketing(un, "__ts", buckets)._1
     val keyed = graft.Caches.track(un.withColumn("__bkt", bkt)
       .persist(StorageLevel.MEMORY_AND_DISK))
     val bktPos = keyed.schema.fieldIndex("__bkt")

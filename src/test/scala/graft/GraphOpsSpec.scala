@@ -1,12 +1,8 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.collection.mutable
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -92,37 +88,6 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     } finally sys.props.remove("graft.broadcastRowLimit")
     assert(keyedExchanges(keyed("louvain_round2")).exists(!_),
       "louvain above the broadcast limit planned no keyed exchange")
-  }
-
-  /** Spark jobs started by `f` on this thread (and the threads it hands
-    * its local properties to, such as broadcast builds). */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.jobs"
-    val tag = s"call-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(`tag`) => jobs.incrementAndGet()
-          case Some(t) if t == s"$tag.drain" => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      try f finally sc.setLocalProperty(key, s"$tag.drain")
-      // the bus delivers events in order: once this job's start arrives,
-      // every job `f` started has been counted
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus stalled")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
   }
 
   test("iterative ops stay under their job-count ceilings") {

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Series
@@ -695,6 +696,138 @@ class SeriesSpec extends AnyFunSuite with SparkFixture {
       .map(r => if (r.isNullAt(1)) null else r.getDouble(1)).toSeq
     val expSh = null +: rows.sortBy(_._1).map(_._2).init.map(v => v: Any)
     assert(sh == expSh)
+  }
+
+  test("cummax/cummin fold strings across buckets in Spark's UTF-8 order") {
+    // U+FF21 sorts after U+1F600 by UTF-16 code unit (java.lang.String)
+    // but before it by UTF-8 byte (Spark's UTF8String); every value sits
+    // in its own bucket, so only the cross-bucket fold of the per-bucket
+    // maxima and minima compares them
+    val wide = "\uFF21"; val emoji = "\uD83D\uDE00"
+    val upTo = org.apache.spark.sql.expressions.Window.orderBy(col("k"))
+      .rowsBetween(Long.MinValue, 0L)
+    def check(vals: Seq[String], op: Series => Series,
+        ref: Column => Column): Unit = {
+      val df = vals.zipWithIndex.map { case (v, i) => (i * 10L, v) }
+        .toDF("k", "v")
+      val got = op(Series.fromColumn(df, "v", "k")).df.orderBy("k")
+        .collect().map(_.getString(1)).toSeq
+      val exp = df.select(col("k"), ref(col("v")).over(upTo)).orderBy("k")
+        .collect().map(_.getString(1)).toSeq
+      assert(got == exp)
+    }
+    check(Seq(emoji, wide, "a"), _.cummax(), max(_))
+    check(Seq(wide, emoji, emoji + "x"), _.cummin(), min(_))
+    Caches.clear()
+  }
+
+  /** (index as text, value) rows, sorted: a multiset compare that also
+    * holds for repeated index labels whose rows share one value. */
+  private def renderKey(k: Any): String = k match {
+    case b: Array[Byte] => b.map(x => f"${x & 0xff}%02x").mkString
+    case other => String.valueOf(other)
+  }
+  private def keyedDoubles(rows: Seq[(Any, Option[Double])])
+      : Seq[(String, Option[Double])] =
+    rows.map { case (k, v) => renderKey(k) -> v }
+      .sortBy { case (k, v) => (k, v.map(_.toString).getOrElse("")) }
+  private def keyedDoubles(df: org.apache.spark.sql.DataFrame)
+      : Seq[(String, Option[Double])] =
+    keyedDoubles(df.collect().toSeq.map(r => r.get(0) ->
+      (if (r.isNullAt(1)) None else Some(r.getAs[Number](1).doubleValue))))
+  private def assertClose(got: Seq[(String, Option[Double])],
+      exp: Seq[(String, Option[Double])], what: String): Unit = {
+    assert(got.map(_._1) == exp.map(_._1), what)
+    got.zip(exp).foreach { case ((_, g), (_, e)) => (g, e) match {
+      case (None, None) =>
+      case (Some(a), Some(b)) => assert(math.abs(a - b) < 1e-9, s"$what: $a vs $b")
+      case _ => fail(s"$what: $g vs $e")
+    } }
+  }
+
+  test("indexes with no bucketing coordinate run as one ordered bucket") {
+    import org.apache.spark.sql.expressions.Window
+    val W = Window.orderBy(col("k"))
+    val upTo = W.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // boolean labels repeat, so each label's rows share one value and any
+    // order of the ties gives the same rows; binary labels are unique and
+    // include bytes >= 0x80 (Spark orders binary as unsigned bytes)
+    val boolDf = Seq[(Option[Boolean], Option[Double])](
+      (None, Some(1.0)), (None, Some(1.0)), (Some(false), None),
+      (Some(false), None), (Some(false), None), (Some(true), Some(4.0)),
+      (Some(true), Some(4.0)), (Some(true), Some(4.0))).toDF("k", "v")
+    val binDf = (0 until 40).map { i =>
+      (Array(((i * 37) % 256).toByte, i.toByte),
+        if (i % 5 == 2) None else Some(i * 1.5))
+    }.toDF("k", "v")
+    for ((kind, df) <- Seq("boolean" -> boolDf, "binary" -> binDf)) {
+      val s = Series.fromColumn(df, "v", "k")
+      val v = col("v")
+      def check(op: String, got: Series, exp: Column): Unit =
+        assertClose(keyedDoubles(got.df), keyedDoubles(df.select(col("k"), exp)),
+          s"$kind $op")
+      val prev = lag(v, 1).over(W)
+      val r3 = W.rowsBetween(-2, 0)
+      val c3 = W.rowsBetween(-1, 1)
+      check("cumsum", s.cumsum(), sum(v).over(upTo))
+      check("cummax", s.cummax(), max(v).over(upTo))
+      check("shift(2)", s.shift(2), lag(v, 2).over(W))
+      check("shift(-1)", s.shift(-1), lead(v, 1).over(W))
+      check("diff(1)", s.diff(1), v - prev)
+      check("pctChange(1)", s.pctChange(1), try_divide(v - prev, prev))
+      check("rollingMean(3)", s.rollingMean(3),
+        when(count(v).over(r3) === 3, avg(v).over(r3)))
+      check("rollingMeanCentered(3)", s.rollingMeanCentered(3),
+        when(count(v).over(c3) === 3, avg(v).over(c3)))
+      check("ffill", s.ffill(), last(v, ignoreNulls = true).over(upTo))
+      check("bfill", s.bfill(), first(v, ignoreNulls = true)
+        .over(W.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
+      assertClose(keyedDoubles(s.iloc(1, 4).df),
+        keyedDoubles(df.withColumn("p", row_number().over(W) - 1)
+          .filter(col("p") >= 1 && col("p") < 4).select("k", "v")),
+        s"$kind iloc(1, 4)")
+      // linear interpolation over row positions, computed sequentially
+      val ordered = df.orderBy("k").collect().toSeq
+        .map(r => r.get(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+      val vs = ordered.map(_._2)
+      val lin = vs.indices.map { i =>
+        vs(i).orElse {
+          val p = (i - 1 to 0 by -1).find(vs(_).isDefined)
+          val n = (i + 1 until vs.length).find(vs(_).isDefined)
+          (p, n) match {
+            case (Some(a), Some(b)) =>
+              Some(vs(a).get + (vs(b).get - vs(a).get) * (i - a) / (b - a))
+            case (Some(a), None) => vs(a)
+            case _ => None
+          }
+        }
+      }
+      assertClose(keyedDoubles(s.interpolate("linear").df),
+        keyedDoubles(ordered.map(_._1).zip(lin)), s"$kind interpolate")
+      // 'index'/'nearest' interpolate along the index coordinate: none here
+      for (m <- Seq("index", "nearest"))
+        intercept[IllegalArgumentException](s.interpolate(method = m))
+    }
+    Caches.clear()
+  }
+
+  test("global-order window ops stay under their job-count ceilings") {
+    val df = (0 until 2000).map(i => (i.toLong, (i % 97).toDouble))
+      .toDF("k", "v")
+    val s = Series.fromColumn(df, "v", "k")
+    val got = Seq(
+      "cumsum" -> jobsOf(s.cumsum().sum()),
+      "shift(2)" -> jobsOf(s.shift(2).sum()),
+      "shift(-1)" -> jobsOf(s.shift(-1).sum()),
+      "rollingMean(5)" -> jobsOf(s.rollingMean(5).sum()),
+      "ewm(0.3).mean()" -> jobsOf(s.ewm(0.3).mean().sum()))
+    Caches.clear()
+    info(got.map { case (op, n) => s"$op=$n" }.mkString(" "))
+    // each op's measured count on this fixture: one more job fails here
+    val ceiling = Map("cumsum" -> 9, "shift(2)" -> 7, "shift(-1)" -> 7,
+      "rollingMean(5)" -> 7, "ewm(0.3).mean()" -> 9)
+    for ((op, n) <- got)
+      assert(n <= ceiling(op), s"$op ran $n jobs, ceiling ${ceiling(op)}")
   }
 
   test("rank methods match pandas tie semantics") {
