@@ -46,17 +46,18 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Orderable-index bucketing: equal-width bucketing needs a MONOTONE
   * NUMERIC COORDINATE of the index, not a numeric index. Numeric indexes
-  * use their own value; date/timestamp use epoch days/seconds; strings map
-  * through the first 8 bytes AFTER the corpus-wide common prefix read as a
-  * big-endian unsigned integer (byte-wise monotone, so bucket order agrees
-  * with UTF8_BINARY string order; the common prefix comes free from the
-  * same min/max agg that numeric bounds use — "Customer#000..." fixtures
-  * would otherwise collapse into one bucket). Null index labels ride in
-  * bucket 0 where ascending nulls-first ordering puts them exactly where
-  * the global window had them. Any other index dtype (boolean, binary, …)
-  * has no coordinate and runs as ONE bucket — the single-task ordered
-  * window, so every global-order op has this one plan for every index
-  * dtype. A skewed index degrades bucket balance, not correctness.
+  * use their own value; date/timestamp use epoch days/seconds; strings and
+  * binary map through the first 8 bytes AFTER the corpus-wide common
+  * prefix read as a big-endian unsigned integer (byte-wise monotone, so
+  * bucket order agrees with UTF8_BINARY string order and Spark's unsigned
+  * binary order; the common prefix comes free from the same min/max agg
+  * that numeric bounds use — "Customer#000..." fixtures would otherwise
+  * collapse into one bucket). Null index labels ride in bucket 0 where
+  * ascending nulls-first ordering puts them exactly where the global
+  * window had them. Any other index dtype (boolean, …) has no coordinate
+  * and runs as ONE bucket — the single-task ordered window, so every
+  * global-order op has this one plan for every index dtype. A skewed
+  * index degrades bucket balance, not correctness.
   * Association of parallel-summed doubles differs from the sequential
   * window in the last ulps — round money results (the DuckDB-oracle
   * tolerance, same as s18/s29).
@@ -588,12 +589,13 @@ private[graft] object GlobalWindows {
   /** Range-bucket id of every row of `d` by its index column `idxName`,
     * and the index's per-row monotone double coordinate (None for a dtype
     * with none) — the prologue of every bucketed global-order plan: the
-    * window builder, the recurrence engine ([[Ewm]], [[EwmPair]]) and the
-    * global as-of join. Pass 1 is one min/max job over the RAW column
+    * window builder, the ewm recurrence ([[Ewm.plan]]), the value-bucketed
+    * rank family and searchsorted ([[Series.rankAll]]) and the global
+    * as-of join. Pass 1 is one min/max job over the RAW column
     * (near-free off parquet footer stats, which prune on it); the two
     * bounds convert to coordinates once, each row by expression. A
     * degenerate range — one distinct label, an all-null index, or a dtype
-    * with no coordinate (boolean, binary, …) — is ONE bucket: the same
+    * with no coordinate (boolean, …) — is ONE bucket: the same
     * single-task ordered window, with empty carries and offsets. */
   private[graft] def bucketing(d: DataFrame, idxName: String, buckets: Int,
       balanced: Boolean = false): (Column, Option[Column]) = {
@@ -660,13 +662,17 @@ private[graft] object GlobalWindows {
         case l: java.time.LocalDateTime =>
           l.toEpochSecond(java.time.ZoneOffset.UTC).toDouble
       }
-      case StringType =>
+      case StringType | BinaryType =>
         if (bounds.isNullAt(0)) Some((lit(0.0), Double.NaN, Double.NaN))
         else {
-          val mn = bounds.getString(0).getBytes("UTF-8")
-          val mx = bounds.getString(1).getBytes("UTF-8")
+          def bytes(i: Int): Array[Byte] = bounds.get(i) match {
+            case b: Array[Byte] => b
+            case str: String => str.getBytes("UTF-8")
+          }
+          val mn = bytes(0)
+          val mx = bytes(1)
           // common byte prefix of min&max == common prefix of ALL values
-          // under byte-wise (UTF8_BINARY) ordering
+          // under byte-wise (UTF8_BINARY / unsigned binary) ordering
           var p = 0
           while (p < mn.length && p < mx.length && mn(p) == mx(p)) p += 1
           def coordOf(b: Array[Byte]): Double = {

@@ -928,15 +928,7 @@ final class Series private[graft] (
     * ties). Null values rank as null and never shift real ranks. Output
     * is double (pandas rank is float64).
     *
-    * Numeric values rank distributed: the value column range-buckets
-    * exactly like [[GlobalWindows]] buckets the index (identical values
-    * always land in one bucket, so ties never split), rank = within-bucket
-    * rank + exclusive non-null count of lower buckets (a `buckets`-entry
-    * literal map — bounded driver state; dense uses the exclusive DISTINCT
-    * count) + the per-method tie shift from an unordered partitionBy(value)
-    * count. No global-order window node anywhere in the plan. Non-numeric
-    * values fall back to the single-task global window (nulls sort LAST
-    * there so they never shift real ranks). */
+    * Distributed for every orderable value dtype (see [[rankAll]]). */
   def rank(buckets: Int = 32): Series = rank("average", buckets)
 
   def rank(method: String, buckets: Int): Series = {
@@ -1050,69 +1042,30 @@ final class Series private[graft] (
   }
 
   /** All requested rank methods over ONE bucketed scan / one stats job —
-    * columns `rank_<method>` beside the index. */
+    * columns `rank_<method>` beside the index. The value column buckets
+    * through [[GlobalWindows.bucketing]], the index coordinate of every
+    * global-order plan (numeric, string, binary, date and timestamp
+    * values spread over buckets; a dtype with no coordinate, such as
+    * boolean, is one bucket). Identical values always land in one bucket,
+    * so ties never split; null values are in no bucket and rank null.
+    * rank = within-bucket rank + exclusive non-null count of lower buckets
+    * ([[bucketOffsets]]; dense uses the exclusive DISTINCT count) + the
+    * per-method tie shift from an unordered partitionBy(value) count. No
+    * Window without a partitionBy anywhere in the plan. */
   def rankAll(methods: Seq[String], buckets: Int = 32): DataFrame = {
     val known = Set("average", "min", "max", "first", "dense")
     methods.foreach(m => require(known(m), s"unknown rank method '$m'"))
     val W = org.apache.spark.sql.expressions.Window
-    val numericVal = df.schema(name).dataType match {
-      case _: NumericType => true
-      case _ => false
-    }
-    if (!numericVal) {
-      // single-task fallback for non-numeric values (documented seam)
-      val w = W.orderBy(valueExpr.asc_nulls_last)
-      val wf = W.orderBy(valueExpr.asc_nulls_last, indexExpr.asc)
-      val tieCnt = F.count(lit(1)).over(W.partitionBy(valueExpr))
-      def expr(m: String): Column = when(valueExpr.isNotNull, m match {
-        case "min" => F.rank().over(w).cast("double")
-        case "max" =>
-          (F.rank().over(w) + tieCnt - 1).cast("double")
-        case "average" => F.rank().over(w).cast("double") +
-          (tieCnt - 1).cast("double") / 2.0
-        case "first" => row_number().over(wf).cast("double")
-        case "dense" => dense_rank().over(w).cast("double")
-      })
-      return base.select(indexExpr.as(indexName) +:
-        methods.map(m => expr(m).as(s"rank_$m")): _*)
-    }
-    val bounds = base.agg(F.min(valueExpr).cast("double"),
-      F.max(valueExpr).cast("double")).head()
-    // resolve against the projected two-column frame (valueExpr belongs to
-    // base; the projection below renames it to `name`)
+    val d = base.select(indexExpr.as(indexName), valueExpr.as(name))
     val v = col(name)
-    val vbkt =
-      if (bounds.isNullAt(0) || !(bounds.getDouble(1) > bounds.getDouble(0)))
-        when(v.isNotNull, lit(0L))
-      else {
-        val lo = bounds.getDouble(0)
-        val width = (bounds.getDouble(1) - lo) / buckets
-        when(v.isNotNull,
-          least(floor((v.cast("double") - lit(lo)) / lit(width)),
-            lit(buckets - 1.0)).cast("long"))
-      }
-    // two consumers (count stats + the ranked plan): persist one scan
-    val keyed = graft.Caches.track(
-      base.select(indexExpr.as(indexName), valueExpr.as(name))
-        .withColumn(BktCol, vbkt)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val counts = keyed.filter(col(BktCol).isNotNull)
-      .groupBy(col(BktCol)).agg(F.count(lit(1)).as("__c"),
-        F.count_distinct(col(name)).as("__d"))
-      .collect().sortBy(_.getLong(0))
-    var acc = 0L
-    var dacc = 0L
-    val offs = counts.map { r =>
-      val o = acc; acc += r.getLong(1); r.getLong(0) -> o
-    }.toMap
-    val doffs = counts.map { r =>
-      val o = dacc; dacc += r.getLong(2); r.getLong(0) -> o
-    }.toMap
-    def offExpr(m: Map[Long, Long]): Column =
-      if (m.isEmpty) lit(0L)
-      else coalesce(element_at(typedlit(m), col(BktCol)), lit(0L))
-    val cntOff = offExpr(offs)
-    val dstOff = offExpr(doffs)
+    // two consumers (count stats + the ranked plan): persist one scan;
+    // null values stay out of every bucket
+    val keyed = graft.Caches.track(d.withColumn(BktCol,
+        when(v.isNotNull, GlobalWindows.bucketing(d, name, buckets)._1))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val Seq(cntOff, dstOff) = bucketOffsets(
+      keyed.filter(col(BktCol).isNotNull), BktCol,
+      F.count(lit(1)), F.count_distinct(v))
     val rkWin = W.partitionBy(col(BktCol)).orderBy(col(name).asc)
     val firstWin =
       W.partitionBy(col(BktCol)).orderBy(col(name).asc, col(indexName).asc)
@@ -1128,6 +1081,22 @@ final class Series private[graft] (
     })
     keyed.select(col(indexName) +:
       methods.map(m => expr(m).as(s"rank_$m")): _*)
+  }
+
+  /** Exclusive per-bucket prefix offsets: the long aggregates `aggs` of
+    * `df` grouped by its bucket column `bkt` (`buckets` rows of driver
+    * state), each summed over every LOWER bucket and read back per row
+    * from a `buckets`-entry literal map (a bucket with no group reads 0). */
+  private def bucketOffsets(df: DataFrame, bkt: String,
+      aggs: Column*): Seq[Column] = {
+    val rows = df.groupBy(col(bkt)).agg(aggs.head, aggs.tail: _*)
+      .collect().sortBy(_.getLong(0))
+    aggs.indices.map { i =>
+      val offs = rows.map(_.getLong(0))
+        .zip(rows.scanLeft(0L)(_ + _.getLong(i + 1))).toMap
+      if (offs.isEmpty) lit(0L)
+      else coalesce(element_at(typedlit(offs), col(bkt)), lit(0L))
+    }
   }
 
   /** pandas ewm(alpha=, adjust=, ignore_na=): exponentially weighted
@@ -1848,26 +1817,12 @@ final class Series private[graft] (
         valueExpr.cast("double").as("__v"), lit(1L).as("__w"))
     val pr = probes.select(col(pCol).as("__p"),
       col(pCol).cast("double").as("__v"), lit(0L).as("__w"))
-    val bounds = data.agg(F.min(col("__v")), F.max(col("__v"))).head()
-    if (bounds.isNullAt(0)) // no data → every probe inserts at 0
-      return probes.select(col(pCol), lit(0L).as("pos"))
-    val (lo, hi) = (bounds.getDouble(0), bounds.getDouble(1))
-    val bkt =
-      if (!(hi > lo)) lit(0)
-      else least(greatest(
-        floor((col("__v") - lit(lo)) / lit((hi - lo) / buckets)),
-        lit(0.0)), lit(buckets - 1.0)).cast("int")
-    val bu = data.unionByName(pr).select(col("__p"), col("__v"),
-      col("__w"), bkt.as("__b"))
-    // per-bucket data counts → exclusive prefix offsets: `buckets` rows
-    // of driver state, the same bounded fold as rankAll
-    val cnts = bu.filter(col("__w") === 1)
-      .groupBy("__b").agg(F.sum(col("__w")).as("__c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until buckets)
-      .scanLeft(0L)((acc, b) => acc + cnts.getOrElse(b, 0L))
-    val offCol = (0 until buckets).foldLeft(lit(0L): Column)(
-      (acc, b) => when(col("__b") === b, lit(offsets(b))).otherwise(acc))
+    // buckets span the data range; probes outside it clamp into the end
+    // buckets. Offsets count data rows (w = 1) of every bucket any row
+    // lands in, so a probe in a bucket with no data reads its true offset
+    val bu = data.unionByName(pr)
+      .withColumn("__b", GlobalWindows.bucketing(data, "__v", buckets)._1)
+    val Seq(offCol) = bucketOffsets(bu, "__b", F.sum(col("__w")))
     // side='left': probes sort BEFORE equal data values (w asc) so the
     // inclusive running sum of w counts strictly-smaller data only;
     // 'right' flips the tie order so equal data counts too
@@ -1906,8 +1861,9 @@ final class Series private[graft] (
     * its group's ordinal among all groups sorted by key. Implemented as
     * the dense rank of the KEY VALUE through the value-bucketed
     * distributed rank machinery ([[rankAll]]) — no global-order window
-    * node, no driver-side group list (group cardinality can be huge at
-    * corpus scale). */
+    * node for any orderable key dtype (string keys bucket by their
+    * coordinate too), no driver-side group list (group cardinality can be
+    * huge at corpus scale). */
   def ngroupBy(by: Column, buckets: Int = 32): Series = {
     val keyed = base.select(indexExpr.as(indexName), by.as("__gkey"))
     val r = Series.fromColumn(keyed, "__gkey", indexName)

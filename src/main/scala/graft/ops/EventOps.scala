@@ -345,8 +345,8 @@ object EventOps {
     * is bounded carry rows: for each bucket, the single globally-latest
     * RIGHT row before its range (backward/nearest) and/or the single
     * globally-earliest RIGHT row after it (forward/nearest) — at most
-    * 2·buckets replayed rows, collected from per-bucket max_by/min_by
-    * aggregates. Equal timestamps always land in the same bucket (the
+    * 2·buckets replayed rows, collected from ONE per-bucket max_by/min_by
+    * aggregate. Equal timestamps always land in the same bucket (the
     * bucket id is a function of the timestamp), so carries never reorder
     * against real rows; carry rows are right-side rows, dropped with the
     * rest of the right side by the final left filter.
@@ -388,32 +388,35 @@ object EventOps {
     val rightOnly = keyed.filter(col("__side") === 0)
     val carries = mutable.Buffer.empty[Row]
     def withBkt(r: Row, b: Long): Row = Row.fromSeq(r.toSeq.updated(bktPos, b))
+    // per-bucket latest (backward/nearest) and earliest (forward/nearest)
+    // right rows from ONE aggregate: ≤ buckets rows of driver state
+    val ends = Seq(
+      Option.when(direction != "forward")(max_by(rowStruct, ord)),
+      Option.when(direction != "backward")(min_by(rowStruct, ord))).flatten
+    val perBkt = rightOnly.groupBy(col("__bkt"))
+      .agg(ends.head, ends.tail: _*)
+      .collect().sortBy(_.getLong(0)) // ≤ buckets rows of driver state
     if (direction != "forward") {
-      // per-bucket latest right row; ascending walk replays the global
-      // predecessor into every later bucket
-      val lasts = rightOnly.groupBy(col("__bkt"))
-        .agg(max_by(rowStruct, ord).as("__r"))
-        .collect().sortBy(_.getLong(0)) // ≤ buckets rows of driver state
+      // ascending walk replays the global predecessor into every later
+      // bucket
       var prev: Row = null
       var i = 0
       for (b <- 0L until buckets.toLong) {
-        while (i < lasts.length && lasts(i).getLong(0) < b) {
-          prev = lasts(i).getStruct(1); i += 1
+        while (i < perBkt.length && perBkt(i).getLong(0) < b) {
+          prev = perBkt(i).getStruct(1); i += 1
         }
         if (prev != null) carries += withBkt(prev, b)
       }
     }
     if (direction != "backward") {
-      // per-bucket earliest right row; descending walk replays the global
-      // successor into every earlier bucket
-      val firsts = rightOnly.groupBy(col("__bkt"))
-        .agg(min_by(rowStruct, ord).as("__r"))
-        .collect().sortBy(_.getLong(0))
+      // descending walk replays the global successor into every earlier
+      // bucket (the earliest row is the aggregate's last column)
+      val at = ends.length
       var nxt: Row = null
-      var i = firsts.length - 1
+      var i = perBkt.length - 1
       for (b <- (buckets.toLong - 1) to 0L by -1) {
-        while (i >= 0 && firsts(i).getLong(0) > b) {
-          nxt = firsts(i).getStruct(1); i -= 1
+        while (i >= 0 && perBkt(i).getLong(0) > b) {
+          nxt = perBkt(i).getStruct(at); i -= 1
         }
         if (nxt != null) carries += withBkt(nxt, b)
       }

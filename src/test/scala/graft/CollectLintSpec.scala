@@ -46,7 +46,7 @@ class CollectLintSpec extends AnyFunSuite {
       ".agg(F.corr(col(\"v\"), col(\"p\"))).head()" ->
         "autocorr: 1-row aggregate",
       ".collect().sortBy(_.getLong(0))" ->
-        "rankAll value-bucket offsets: `buckets` rows",
+        "rankAll/searchsorted value-bucket offsets: `buckets` rows",
       ".select(\"__v\").head(1).headOption" -> "getitem by label: 1 row",
       ".select(indexName).head(1).headOption" -> "idxmax/idxmin: 1 row",
       "F.max(indexExpr).as(\"hi\")).head()" ->
@@ -78,10 +78,6 @@ class CollectLintSpec extends AnyFunSuite {
         "minmax bounds: 1-row aggregate",
       "val totalRow = counts.agg(F.sum(\"count\")).head()" ->
         "value_counts(normalize) denominator: 1 row",
-      ".collect().map(r => r.getInt(0) -> r.getLong(1)).toMap" ->
-        "searchsorted bucket offsets: `buckets` rows",
-      "val bounds = data.agg(F.min(col(\"__v\")), F.max(col(\"__v\"))).head()" ->
-        "searchsorted bounds: 1-row min/max",
       "val counts = base.agg(F.count(lit(1)), F.count(valueExpr)).head()" ->
         "rankNa total/non-null counts: 1 row"),
     "RangeWindows.scala" -> Map(
@@ -107,10 +103,8 @@ class CollectLintSpec extends AnyFunSuite {
       "val chiTotal = cells.agg(sum(col(\"__cu\"))).head().getLong(0) // 1-row" ->
         "cramers-v closing statistic: 1-row aggregate over bounded cells"),
     "EventOps.scala" -> Map(
-      ".collect().sortBy(_.getLong(0))" ->
-        "asofJoinGlobal backward carries: ≤ buckets rows",
       ".collect().sortBy(_.getLong(0)) // ≤ buckets rows of driver state" ->
-        "asofJoinGlobal forward carries: ≤ buckets rows",
+        "asofJoinGlobal latest/earliest right row per bucket: ≤ buckets rows",
       "val lastRow = df.agg(max(unix_micros(col(tsCol)))).head()" ->
         "rfm corpus-last bound: 1-row aggregate",
       ".collect() // |types|² rows — bounded driver state" ->

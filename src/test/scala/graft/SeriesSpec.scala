@@ -745,70 +745,85 @@ class SeriesSpec extends AnyFunSuite with SparkFixture {
     } }
   }
 
-  test("indexes with no bucketing coordinate run as one ordered bucket") {
+  /** The global-order window family over `df`'s (k, v) matches Spark's
+    * plain ordered window over k. `coordinate`: whether k's dtype has a
+    * bucketing coordinate, which 'index'/'nearest' interpolation needs. */
+  private def checkOrderedWindowOps(kind: String,
+      df: org.apache.spark.sql.DataFrame, coordinate: Boolean): Unit = {
     import org.apache.spark.sql.expressions.Window
     val W = Window.orderBy(col("k"))
     val upTo = W.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val s = Series.fromColumn(df, "v", "k")
+    val v = col("v")
+    def check(op: String, got: Series, exp: Column): Unit =
+      assertClose(keyedDoubles(got.df), keyedDoubles(df.select(col("k"), exp)),
+        s"$kind $op")
+    val prev = lag(v, 1).over(W)
+    val r3 = W.rowsBetween(-2, 0)
+    val c3 = W.rowsBetween(-1, 1)
+    check("cumsum", s.cumsum(), sum(v).over(upTo))
+    check("cummax", s.cummax(), max(v).over(upTo))
+    check("shift(2)", s.shift(2), lag(v, 2).over(W))
+    check("shift(-1)", s.shift(-1), lead(v, 1).over(W))
+    check("diff(1)", s.diff(1), v - prev)
+    check("pctChange(1)", s.pctChange(1), try_divide(v - prev, prev))
+    check("rollingMean(3)", s.rollingMean(3),
+      when(count(v).over(r3) === 3, avg(v).over(r3)))
+    check("rollingMeanCentered(3)", s.rollingMeanCentered(3),
+      when(count(v).over(c3) === 3, avg(v).over(c3)))
+    check("ffill", s.ffill(), last(v, ignoreNulls = true).over(upTo))
+    check("bfill", s.bfill(), first(v, ignoreNulls = true)
+      .over(W.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
+    assertClose(keyedDoubles(s.iloc(1, 4).df),
+      keyedDoubles(df.withColumn("p", row_number().over(W) - 1)
+        .filter(col("p") >= 1 && col("p") < 4).select("k", "v")),
+      s"$kind iloc(1, 4)")
+    // linear interpolation over row positions, computed sequentially
+    val ordered = df.orderBy("k").collect().toSeq
+      .map(r => r.get(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+    val vs = ordered.map(_._2)
+    val lin = vs.indices.map { i =>
+      vs(i).orElse {
+        val p = (i - 1 to 0 by -1).find(vs(_).isDefined)
+        val n = (i + 1 until vs.length).find(vs(_).isDefined)
+        (p, n) match {
+          case (Some(a), Some(b)) =>
+            Some(vs(a).get + (vs(b).get - vs(a).get) * (i - a) / (b - a))
+          case (Some(a), None) => vs(a)
+          case _ => None
+        }
+      }
+    }
+    assertClose(keyedDoubles(s.interpolate("linear").df),
+      keyedDoubles(ordered.map(_._1).zip(lin)), s"$kind interpolate")
+    // 'index'/'nearest' interpolate along the index coordinate
+    if (!coordinate)
+      for (m <- Seq("index", "nearest"))
+        intercept[IllegalArgumentException](s.interpolate(method = m))
+    Caches.clear()
+  }
+
+  test("indexes with no bucketing coordinate run as one ordered bucket") {
     // boolean labels repeat, so each label's rows share one value and any
-    // order of the ties gives the same rows; binary labels are unique and
-    // include bytes >= 0x80 (Spark orders binary as unsigned bytes)
+    // order of the ties gives the same rows
     val boolDf = Seq[(Option[Boolean], Option[Double])](
       (None, Some(1.0)), (None, Some(1.0)), (Some(false), None),
       (Some(false), None), (Some(false), None), (Some(true), Some(4.0)),
       (Some(true), Some(4.0)), (Some(true), Some(4.0))).toDF("k", "v")
+    checkOrderedWindowOps("boolean", boolDf, coordinate = false)
+  }
+
+  test("binary indexes bucket by the byte coordinate and match the ordered window") {
+    // unique labels with bytes >= 0x80 (Spark orders binary as unsigned
+    // bytes), spread over many buckets
     val binDf = (0 until 40).map { i =>
       (Array(((i * 37) % 256).toByte, i.toByte),
         if (i % 5 == 2) None else Some(i * 1.5))
     }.toDF("k", "v")
-    for ((kind, df) <- Seq("boolean" -> boolDf, "binary" -> binDf)) {
-      val s = Series.fromColumn(df, "v", "k")
-      val v = col("v")
-      def check(op: String, got: Series, exp: Column): Unit =
-        assertClose(keyedDoubles(got.df), keyedDoubles(df.select(col("k"), exp)),
-          s"$kind $op")
-      val prev = lag(v, 1).over(W)
-      val r3 = W.rowsBetween(-2, 0)
-      val c3 = W.rowsBetween(-1, 1)
-      check("cumsum", s.cumsum(), sum(v).over(upTo))
-      check("cummax", s.cummax(), max(v).over(upTo))
-      check("shift(2)", s.shift(2), lag(v, 2).over(W))
-      check("shift(-1)", s.shift(-1), lead(v, 1).over(W))
-      check("diff(1)", s.diff(1), v - prev)
-      check("pctChange(1)", s.pctChange(1), try_divide(v - prev, prev))
-      check("rollingMean(3)", s.rollingMean(3),
-        when(count(v).over(r3) === 3, avg(v).over(r3)))
-      check("rollingMeanCentered(3)", s.rollingMeanCentered(3),
-        when(count(v).over(c3) === 3, avg(v).over(c3)))
-      check("ffill", s.ffill(), last(v, ignoreNulls = true).over(upTo))
-      check("bfill", s.bfill(), first(v, ignoreNulls = true)
-        .over(W.rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-      assertClose(keyedDoubles(s.iloc(1, 4).df),
-        keyedDoubles(df.withColumn("p", row_number().over(W) - 1)
-          .filter(col("p") >= 1 && col("p") < 4).select("k", "v")),
-        s"$kind iloc(1, 4)")
-      // linear interpolation over row positions, computed sequentially
-      val ordered = df.orderBy("k").collect().toSeq
-        .map(r => r.get(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      val vs = ordered.map(_._2)
-      val lin = vs.indices.map { i =>
-        vs(i).orElse {
-          val p = (i - 1 to 0 by -1).find(vs(_).isDefined)
-          val n = (i + 1 until vs.length).find(vs(_).isDefined)
-          (p, n) match {
-            case (Some(a), Some(b)) =>
-              Some(vs(a).get + (vs(b).get - vs(a).get) * (i - a) / (b - a))
-            case (Some(a), None) => vs(a)
-            case _ => None
-          }
-        }
-      }
-      assertClose(keyedDoubles(s.interpolate("linear").df),
-        keyedDoubles(ordered.map(_._1).zip(lin)), s"$kind interpolate")
-      // 'index'/'nearest' interpolate along the index coordinate: none here
-      for (m <- Seq("index", "nearest"))
-        intercept[IllegalArgumentException](s.interpolate(method = m))
-    }
-    Caches.clear()
+    val bkts = binDf.select(graft.core.GlobalWindows.bucketing(binDf, "k", 32)._1)
+      .distinct().count()
+    assert(bkts > 1, s"binary labels spread over $bkts bucket(s)")
+    checkOrderedWindowOps("binary", binDf, coordinate = true)
   }
 
   test("global-order window ops stay under their job-count ceilings") {
@@ -1005,6 +1020,56 @@ class SeriesSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  // 200 rows, x null every 13th and y null every 11th: the null-bearing
+  // fixture of the keyed-vs-global ewm identity tests
+  private def ewmNullFixture: org.apache.spark.sql.DataFrame =
+    (0 until 200).map { i =>
+      (i.toLong, if (i % 13 == 5) None else Some(math.sin(i) * 10 + i / 7.0),
+        if (i % 11 == 4) None else Some(math.cos(i * 0.7) * 3 - i / 50.0))
+    }.toDF("idx", "x", "y")
+
+  private def doublesOf(d: org.apache.spark.sql.DataFrame,
+      cols: String*): Seq[Seq[Option[Double]]] =
+    d.orderBy("idx").select(cols.map(col): _*).collect().toSeq.map(r =>
+      cols.indices.map(i => if (r.isNullAt(i)) None else Some(r.getDouble(i))))
+
+  private def assertWithin(got: Seq[Seq[Option[Double]]],
+      exp: Seq[Seq[Option[Double]]], what: String): Unit = {
+    assert(got.length == exp.length, what)
+    for (((g, e), i) <- got.zip(exp).zipWithIndex; (gv, ev) <- g.zip(e))
+      (gv, ev) match {
+        case (Some(a), Some(b)) =>
+          assert(math.abs(a - b) < 1e-9, s"$what@$i: $a vs $b")
+        case _ => assert(gv == ev, s"$what@$i: $gv vs $ev")
+      }
+  }
+
+  test("keyed ewm mean/var on one key is the bucketed global ewm") {
+    val df = ewmNullFixture
+    val s = Series.fromColumn(df, "x", "idx")
+    for (adj <- Seq(true, false); ina <- Seq(false, true)) {
+      val keyed = s.ewmStatsBy(lit(0), 0.2, adjust = adj, ignoreNa = ina)
+      val global = s.ewm(0.2, buckets = 8, adjust = adj, ignoreNa = ina).stats
+      assertWithin(doublesOf(keyed, "ewm_mean", "ewm_var"),
+        doublesOf(global, "ewm_mean", "ewm_var"),
+        s"adjust=$adj ignoreNa=$ina")
+    }
+    Caches.clear()
+  }
+
+  test("keyed ewm cov/corr on one key is the bucketed global ewm") {
+    val df = ewmNullFixture
+    val x = Series.fromColumn(df, "x", "idx")
+    val y = Series.fromColumn(df, "y", "idx")
+    for (ina <- Seq(false, true)) {
+      val keyed = x.ewmPairStatsBy(lit(0), y, 0.2, ignoreNa = ina)
+      val global = x.ewmPairStats(y, 0.2, ignoreNa = ina)
+      assertWithin(doublesOf(keyed, "ewm_cov", "ewm_corr"),
+        doublesOf(global, "ewm_cov", "ewm_corr"), s"ignoreNa=$ina")
+    }
+    Caches.clear()
+  }
+
   test("rollingMeanCentered centers the frame (pandas center=True)") {
     val v = Series.fromSeq(spark, Seq(1.0, 2.0, 3.0, 4.0, 5.0))
     // n=3: frame [-1, +1]; edges lack a neighbor -> null (min_periods=n)
@@ -1183,6 +1248,61 @@ class SeriesSpec extends AnyFunSuite with SparkFixture {
     val ng = s.ngroupBy(df("g")).df.orderBy("idx").collect()
       .map(_.getLong(1)).toSeq
     assert(ng == Seq(1L, 0L, 1L, 0L, 2L)) // groups sorted by key: 10,20,30
+  }
+
+  /** Window nodes with no partitionBy in `d`'s optimized plan: each runs
+    * the whole frame on one task. */
+  private def unpartitionedWindows(d: org.apache.spark.sql.DataFrame): Int =
+    d.queryExecution.optimizedPlan.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window
+        if w.partitionSpec.isEmpty => w
+    }.size
+
+  test("string-valued rank buckets and ranks like the ordered window") {
+    import org.apache.spark.sql.expressions.Window
+    // 60 distinct labels behind a shared prefix, each tied five times,
+    // plus null values, which rank null and shift no real rank
+    val df = (0 until 300).map { i =>
+      (i.toLong, if (i % 37 == 3) None else Some(f"user#${(i * 7) % 60}%03d"))
+    }.toDF("idx", "v")
+    val bkts = df.filter(col("v").isNotNull)
+      .select(graft.core.GlobalWindows.bucketing(df, "v", 32)._1)
+      .distinct().count()
+    assert(bkts >= 3, s"string values spread over $bkts bucket(s)")
+    val v = col("v")
+    val w = Window.orderBy(v.asc_nulls_last)
+    val wf = Window.orderBy(v.asc_nulls_last, col("idx"))
+    val tie = count(lit(1)).over(Window.partitionBy(v))
+    val exp = Map(
+      "min" -> rank().over(w).cast("double"),
+      "max" -> (rank().over(w) + tie - 1).cast("double"),
+      "average" -> (rank().over(w).cast("double") +
+        (tie - 1).cast("double") / 2.0),
+      "first" -> row_number().over(wf).cast("double"),
+      "dense" -> dense_rank().over(w).cast("double"))
+    val methods = exp.keys.toSeq.sorted
+    val got = Series.fromColumn(df, "v", "idx").rankAll(methods)
+    assert(unpartitionedWindows(got) == 0)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("idx").collect().toSeq.map(_.toSeq)
+    assert(rows(got.select("idx", methods.map(m => s"rank_$m"): _*)) ==
+      rows(df.select(col("idx") +: methods.map(m =>
+        when(v.isNotNull, exp(m)).as(s"rank_$m")): _*)))
+    Caches.clear()
+  }
+
+  test("ngroupBy over a string key plans no un-partitioned window") {
+    import org.apache.spark.sql.expressions.Window
+    val df = (0 until 200).map(i => (i.toLong, f"g${(i * 13) % 41}%02d", i * 0.5))
+      .toDF("idx", "g", "v")
+    val ng = Series.fromColumn(df, "v", "idx").ngroupBy(col("g"))
+    assert(unpartitionedWindows(ng.df) == 0)
+    val got = ng.df.orderBy("idx").collect().map(_.getLong(1)).toSeq
+    val exp = df.select(col("idx"),
+        (dense_rank().over(Window.orderBy("g")) - 1).cast("long"))
+      .orderBy("idx").collect().map(_.getLong(1)).toSeq
+    assert(got == exp)
+    Caches.clear()
   }
 
   test("duplicated(keep=) and dropDuplicates(keep=) — all three policies") {
