@@ -1050,8 +1050,10 @@ final class Series private[graft] (
     * so ties never split; null values are in no bucket and rank null.
     * rank = within-bucket rank + exclusive non-null count of lower buckets
     * ([[bucketOffsets]]; dense uses the exclusive DISTINCT count) + the
-    * per-method tie shift from an unordered partitionBy(value) count. No
-    * Window without a partitionBy anywhere in the plan. */
+    * per-method tie shift from an unordered partitionBy(bucket, value)
+    * count. Every window is partitioned by the bucket first, so the plan
+    * has one hash exchange of the bucketed rows; no Window without a
+    * partitionBy anywhere in the plan. */
   def rankAll(methods: Seq[String], buckets: Int = 32): DataFrame = {
     val known = Set("average", "min", "max", "first", "dense")
     methods.foreach(m => require(known(m), s"unknown rank method '$m'"))
@@ -1069,7 +1071,8 @@ final class Series private[graft] (
     val rkWin = W.partitionBy(col(BktCol)).orderBy(col(name).asc)
     val firstWin =
       W.partitionBy(col(BktCol)).orderBy(col(name).asc, col(indexName).asc)
-    val tieCnt = F.count(lit(1)).over(W.partitionBy(col(name)))
+    // ties never span buckets, so the tie count rides the bucket layout
+    val tieCnt = F.count(lit(1)).over(W.partitionBy(col(BktCol), col(name)))
     val minRk = F.rank().over(rkWin) + cntOff
     def expr(m: String): Column = when(v.isNotNull, m match {
       case "min" => minRk.cast("double")

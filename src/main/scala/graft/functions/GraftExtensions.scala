@@ -56,6 +56,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         ShingleHashes(children.head, children(1))
       }))
     ext.injectFunction((
+      new FunctionIdentifier("graft_minhash"),
+      new ExpressionInfo(classOf[MinHash].getName, "graft_minhash"),
+      (children: Seq[Expression]) => {
+        require(children.length == 2, "graft_minhash takes (shs, k)")
+        MinHash(children.head, children(1))
+      }))
+    ext.injectFunction((
       new FunctionIdentifier("graft_shingle_text"),
       new ExpressionInfo(classOf[ShingleText].getName, "graft_shingle_text"),
       (children: Seq[Expression]) => {

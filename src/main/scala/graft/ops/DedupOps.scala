@@ -24,15 +24,22 @@ import org.apache.spark.sql.graftbridge.CheckpointBridge.{checkpoint, pin}
 object DedupOps {
 
   /** Spread a narrow (id, text) projection across the session's shuffle
-    * width: compacted/small files give the heavy per-row Generate stages
-    * (tokenize / shingle / hash explodes) only as many tasks as input
-    * SPLITS — observed locally as a whole corpus shingled on one task.
-    * Unconditional keyed repartition (no `.rdd` partition-count probe —
-    * materializing the RDD finalizes physical planning and, on a
-    * post-shuffle frame, eagerly executes the upstream stages under AQE);
-    * when the scan already splits wider than the session width the
-    * exchange is a cheap rebalance and AQE coalesces it, and keying by id
-    * lets the id-keyed aggregations downstream reuse the partitioning. */
+    * width, hash-partitioned by `key`: compacted/small files give the
+    * heavy per-row Generate stages (tokenize / shingle / hash explodes)
+    * only as many tasks as input SPLITS — observed locally as a whole
+    * corpus shingled on one task. Unconditional keyed repartition (no
+    * `.rdd` partition-count probe — materializing the RDD finalizes
+    * physical planning and, on a post-shuffle frame, eagerly executes the
+    * upstream stages under AQE).
+    *
+    * The rule for using it: the exchange moves the raw text of every
+    * document, so keep it only where a downstream id-keyed operator
+    * reuses its hash(id) layout — the ExactSubstr rebuild join, or an
+    * explode + aggregate keyed by id. Where nothing downstream is keyed
+    * by id (per-row signature projections, postings joined on a gram or
+    * band key), or the frame is pinned (a pin drops the layout), it is a
+    * corpus-sized exchange for nothing: project the narrow columns and
+    * let the scan's own splits carry the work. */
   private[graft] def spread(df: DataFrame, key: String): DataFrame = {
     val width = df.sparkSession.sessionState.conf.numShufflePartitions
     df.repartition(width, col(key))
@@ -73,8 +80,7 @@ object DedupOps {
     val b = graft.Caches.track(postings(benchmark, "bench_id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val bsizes = b.groupBy("bench_id").agg(count(lit(1)).as("bn"))
-    postings(spread(corpus.select(col(idCol), col(textCol)), idCol),
-        "train_id")
+    postings(corpus, "train_id")
       .join(broadcast(b), "sh")
       .groupBy("train_id", "bench_id")
       .agg(count(lit(1)).as("n_shared"))
@@ -124,13 +130,15 @@ object DedupOps {
     * resolution the chosen k actually buys. Lanes here use the
     * ENGINE-PORTABLE md5 hash ([[portableHash60]] over "shingle_lane"),
     * so the whole estimator replays in DuckDB (production signatures
-    * keep the faster xxhash64 — [[minHashSigsFrom]]; the estimator
-    * algebra is identical).
+    * keep the faster xxhash64 in the compiled per-row
+    * [[graft.functions.MinHash]] kernel — [[minHashSigsFrom]]; the
+    * estimator algebra is identical).
     *
-    * Scale shape: one shingle pass, k min-aggregates in ONE
-    * HashAggregate keyed by id (the minHashSigsFrom plan), the exact
-    * pair generator is [[jaccardPairs]] (inverted index, never
-    * all-pairs), and the signature join fans out only the pair frame. */
+    * Scale shape: one shingle pass, spread by id so the k md5
+    * min-aggregates fold in ONE HashAggregate keyed by id on that layout
+    * (md5 lanes have no per-row kernel), the exact pair generator is
+    * [[jaccardPairs]] (inverted index, never all-pairs), and the
+    * signature join fans out only the pair frame. */
   def minhashCalibration(df: DataFrame, idCol: String, textCol: String,
                          n: Int, k: Int,
                          threshold: Double): DataFrame = {
@@ -455,18 +463,24 @@ object DedupOps {
   /** Staged (id, k-token windows, tokens) frame of [[exactSubstrDedup]]
     * and its incremental siblings — heavy arrays materialized in a
     * Project before any Generate consumes them. Persisted for the batch
-    * callers; [[exactSubstrIncremental]] pins the plan instead. */
+    * callers, spread by id: their rebuild join is keyed by id and reuses
+    * the layout. [[exactSubstrIncremental]] pins the bare plan instead
+    * (a pin drops any layout, so a spread there would be a wasted
+    * exchange). */
   private def substrBase(df: DataFrame, idCol: String, textCol: String,
                          k: Int): DataFrame = graft.Caches.track(
-    substrBasePlan(df, idCol, textCol, k)
+    substrBasePlan(spread(substrDocs(df, idCol, textCol), "id"), k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  private def substrBasePlan(df: DataFrame, idCol: String, textCol: String,
-                             k: Int): DataFrame =
-    spread(df.select(col(idCol).as("id"), col(textCol).as("__txt")), "id")
-      .select(col("id"),
-        graft.functions.NgramText.ngramText(col("__txt"), k).as("__gs"),
-        TextOps.tokens(col("__txt")).as("__ts"))
+  /** The (id, __txt) projection [[substrBasePlan]] reads. */
+  private def substrDocs(df: DataFrame, idCol: String,
+                         textCol: String): DataFrame =
+    df.select(col(idCol).as("id"), col(textCol).as("__txt"))
+
+  private def substrBasePlan(docs: DataFrame, k: Int): DataFrame =
+    docs.select(col("id"),
+      graft.functions.NgramText.ngramText(col("__txt"), k).as("__gs"),
+      TextOps.tokens(col("__txt")).as("__ts"))
 
   /** (id, pos, h) window-hash postings — 8-byte fingerprints only, the
     * screen-pass payload (and the INDEX artifact's rows). */
@@ -606,7 +620,7 @@ object DedupOps {
     // on every unpersist of a frame it was built from, and nested into
     // every downstream plan AQE re-renders. Each pinned frame is
     // shard-sized or touched-docs-sized, never index-sized.
-    val base2 = pin(substrBasePlan(arriving, idCol, textCol, k))
+    val base2 = pin(substrBasePlan(substrDocs(arriving, idCol, textCol), k))
     val posts2Ck = checkpoint(substrPosts(base2))
     val posts2 = posts2Ck.df
     // r17: every screen-side semi-join below builds against a frame
@@ -652,10 +666,10 @@ object DedupOps {
         .select(col("id")).distinct())
     val touchedScan = touchedCk.df
     val nTouched = touchedCk.rows // |touched indexed docs|
-    val base1 = pin(substrBasePlan(
+    val base1 = pin(substrBasePlan(substrDocs(
       indexed.join(
         hintIfSmall(touchedScan.withColumnRenamed("id", idCol), nTouched),
-        Seq(idCol), "left_semi"), idCol, textCol, k))
+        Seq(idCol), "left_semi"), idCol, textCol), k))
     // read twice below (verify group + coverage semi-join)
     val grams = pin(
       substrGramsPlan(base2, hintIfSmall(cand, nPosts2))
@@ -741,8 +755,7 @@ object DedupOps {
     val bf = b.stat.bloomFilter("sh", expectedNgrams, fpp)
     val bcast = corpus.sparkSession.sparkContext.broadcast(bf)
     val bsizes = b.groupBy("bench_id").agg(count(lit(1)).as("bn"))
-    postings(spread(corpus.select(col(idCol), col(textCol)), idCol),
-        "train_id")
+    postings(corpus, "train_id")
       .filter(graft.functions.BloomContains.contains(col("sh"), bcast))
       .join(b, "sh")
       .groupBy("train_id", "bench_id")
@@ -944,25 +957,6 @@ object DedupOps {
       .select(col("left_id"), col("right_id"), col("seam"))
   }
 
-  /** Large prime < 2^31 for affine MinHash rehashing (kept small enough
-    * that a*h+b stays in Long range). */
-  private val P = 2147483647L
-
-  /** Positive base hash of an ALREADY-HASHED shingle (a
-    * [[graft.functions.ShingleHashes]] long, = xxhash64 of the gram
-    * string), in [0, P) — `pmod(h, P)`, bit-identical to the former
-    * string-path `pmod(xxhash64(gram), P)`. */
-  private def baseHash(h: Column): Column = pmod(h, lit(P))
-
-  /** MinHash signature from a PRE-MATERIALIZED base-hash array column:
-    * array of `k` minima of affine rehashes. Pure per-row expression — no
-    * shuffle, no UDF.
-    *
-    * PERF: `hashArr` must be a real column (attribute reference), not an
-    * expression tree — Catalyst expressions are trees, not DAGs, so passing
-    * the tokenize→shingle→hash subtree here would re-evaluate it k times
-    * (measured 600s+ at sf0.1 vs ~10s materialized). Multi-referenced
-    * non-cheap aliases are safe: CollapseProject declines to inline them. */
   /** Blocked fuzzy record linkage: pairs of rows whose `nameCol` values are
     * within Levenshtein distance `maxDist`, found WITHOUT an all-pairs
     * cross join. Blocking key = last whitespace token (for "adjective
@@ -1052,28 +1046,15 @@ object DedupOps {
         col("a.nm").as("name1"), col("b.nm").as("name2"), col("dist"))
   }
 
-  def minHashSignature(hashArr: Column, k: Int): Column = {
-    // Lane independence matters: an affine family with small multipliers
-    // (a=2i+1) barely permutes hash ORDER, so documents sharing one hot
-    // low-hash shingle took the same minimum in most lanes at once —
-    // correlated lanes → band collisions → quadratic candidate blowup
-    // (d04 went 455s at sf0.1 from exactly this). Rehash per lane with
-    // xxhash64(h, lane) instead: full decorrelation, native 12-byte hash.
-    val mins = (0 until k).map { i =>
-      array_min(transform(hashArr, h => pmod(xxhash64(h, lit(i)), lit(P))))
-    }
-    array(mins: _*)
-  }
-
   /** (id, shs) projection: distinct word-n-gram shingle array per doc,
-    * empty-shingle docs dropped. Filtered on the FIRST materialized stage:
-    * a filter over the signature would be pushdown-inlined by Catalyst,
-    * re-evaluating the whole 32-lane tree per row (a 450s/5k-doc mistake). */
+    * empty-shingle docs dropped. A narrow scan with no exchange: every
+    * consumer downstream is keyed by band or by candidate id, never by
+    * this frame's id, so hash-partitioning the raw text first (`spread`)
+    * would move the whole corpus for no reuse. */
   private def shingleProj(df: DataFrame, idCol: String, textCol: String,
                           n: Int): DataFrame =
-    spread(df.select(col(idCol).as("id"), col(textCol).as("__txt")), "id")
-      .select(col("id"),
-        graft.functions.ShingleHashes.shingleHashes(col("__txt"), n).as("shs"))
+    df.select(col(idCol).as("id"),
+        graft.functions.ShingleHashes.shingleHashes(col(textCol), n).as("shs"))
       .filter(size(col("shs")) > 0)
 
   /** LSH candidate pairs: split the `k`-wide signature into `bands` bands,
@@ -1084,26 +1065,21 @@ object DedupOps {
                     n: Int, k: Int, bands: Int): DataFrame =
     lshCandidatesFrom(shingleProj(df, idCol, textCol, n), k, bands)
 
-  /** (id, sig) MinHash signatures from a (id, shs) projection via ONE
-    * exploded pass: per-shingle base hashes feed `k` codegen'd min
-    * aggregates in a single HashAggregate (partial+final, one shuffle
-    * keyed by id) — versus [[minHashSignature]]'s k interpreted
-    * transform+array_min lanes per row, which re-walk the shingle array k
-    * times through lambda dispatch. Same lane decorrelation
-    * (`xxhash64(h, lane)`), bit-identical signatures. */
-  private def minHashSigsFrom(sh: DataFrame, k: Int): DataFrame = {
-    val ex = sh.select(col("id"), explode(col("shs")).as("s"))
-      .select(col("id"), baseHash(col("s")).as("h"))
-    val mins = (0 until k).map(i =>
-      min(pmod(xxhash64(col("h"), lit(i)), lit(P))).as(s"__m$i"))
-    ex.groupBy("id").agg(mins.head, mins.tail: _*)
-      .select(col("id"),
-        array((0 until k).map(i => col(s"__m$i")): _*).as("sig"))
-  }
+  /** (id, sig) MinHash signatures from a (id, shs) projection: ONE
+    * projection through the compiled [[graft.functions.MinHash]] kernel,
+    * which folds all `k` lanes (`xxhash64(pmod(h, P), lane)`, lane
+    * decorrelation by rehash) in a single pass over each row's shingle
+    * hashes — no explode, no aggregate, no exchange. */
+  private def minHashSigsFrom(sh: DataFrame, k: Int): DataFrame =
+    sh.select(col("id"),
+      graft.functions.MinHash.signature(col("shs"), k).as("sig"))
 
   /** [[lshCandidates]] from a pre-staged (id, shs) projection — callers that
     * also need the shingles downstream (verification) persist the projection
-    * and pass it here so tokenize+shingle runs once per row, not twice. */
+    * and pass it here so tokenize+shingle runs once per row, not twice.
+    * Signatures are one projection ([[minHashSigsFrom]]), so the only
+    * exchanges are the band join's (id, band, bandhash) rows and the
+    * candidate-pair distinct. */
   private[graft] def lshCandidatesFrom(sh: DataFrame, k: Int,
                                        bands: Int): DataFrame = {
     require(k % bands == 0, "k must divide into bands")
@@ -1130,16 +1106,28 @@ object DedupOps {
     * verification on the candidate set only (the standard
     * filter-then-verify shape: banding prunes, verification keeps
     * precision at 1). The shingle projection is persisted and shared by
-    * signature generation AND verification — one tokenize+shingle pass. */
+    * signature generation AND verification — one tokenize+shingle pass.
+    *
+    * Nothing corpus-sized is exchanged: signatures are a per-row
+    * projection, the band join shuffles (id, band, bandhash) triples, and
+    * the verification joins read the shingle arrays only after a
+    * semi-join on the candidate ids, so above the broadcast size their id
+    * exchange carries the candidate sliver, not every document. The
+    * candidate pairs are cut once ([[checkpoint]]); its count gates the
+    * id broadcast ([[hintIfSmall]]). */
   def minhashNearDup(df: DataFrame, idCol: String, textCol: String,
                      n: Int = 3, k: Int = 32, bands: Int = 8,
                      threshold: Double = 0.5): DataFrame = {
     val sh = graft.Caches.track(shingleProj(df, idCol, textCol, n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val cand = lshCandidatesFrom(sh, k, bands)
+    val candCk = checkpoint(lshCandidatesFrom(sh, k, bands))
+    val cand = candCk.df
+    val ids = cand.select(col("id1").as("id"))
+      .unionByName(cand.select(col("id2").as("id")))
+    val shc = sh.join(hintIfSmall(ids, 2 * candCk.rows), Seq("id"), "left_semi")
     cand
-      .join(sh.select(col("id").as("id1"), col("shs").as("sh1")), "id1")
-      .join(sh.select(col("id").as("id2"), col("shs").as("sh2")), "id2")
+      .join(shc.select(col("id").as("id1"), col("shs").as("sh1")), "id1")
+      .join(shc.select(col("id").as("id2"), col("shs").as("sh2")), "id2")
       .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))))
       .withColumn("jaccard", col("inter").cast("double")
         / (size(col("sh1")) + size(col("sh2")) - col("inter")).cast("double"))
@@ -1149,8 +1137,9 @@ object DedupOps {
 
   /** 64-bit SimHash from a PRE-MATERIALIZED token-hash array column: per
     * bit, sum ±1 over token hashes and take the sign. 64 array-folds per
-    * row — `hashArr` must be an attribute reference, not a subtree (see
-    * [[minHashSignature]]'s PERF note). */
+    * row — `hashArr` must be an attribute reference, not a subtree:
+    * Catalyst expressions are trees, not DAGs, so a tokenize→hash subtree
+    * here would be re-evaluated once per fold. */
   def simHash(hashArr: Column): Column = {
     val bits = (0 until 64).map { j =>
       val vote = aggregate(hashArr, lit(0),

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.CheckpointBridge.pin
+import org.apache.spark.sql.graftbridge.CheckpointBridge.{checkpoint, pin}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming twins of the batch event operators in
@@ -259,9 +259,12 @@ object StreamOps {
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         // consumed twice (pass + sink append); bridge pins carry no
         // origin constraints, so a sink may reference `out` twice (the
-        // accumulation union) without failing attribute-dedup analysis
-        val b = pin(batch.toDF())
-        if (!b.isEmpty) {
+        // accumulation union) without failing attribute-dedup analysis.
+        // The pinning job counts the rows, so an empty batch costs no
+        // second job.
+        val bCk = checkpoint(batch.toDF())
+        val b = bCk.df
+        if (bCk.rows > 0) {
           val spark = b.sparkSession
           val corpusDir = s"$indexDir/corpus"
           val out =

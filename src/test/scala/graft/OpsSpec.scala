@@ -191,6 +191,91 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
     assert(lsh == exact)
   }
 
+  /** The children of an executed-plan node, walking through AQE stages,
+    * reused exchanges and the cached plans of persisted frames. */
+  private def planKids(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case o => o.children
+    }
+  }
+
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    p +: planKids(p).flatMap(planNodes)
+
+  test("minhashNearDup and the contamination ops exchange no text and " +
+    "no repartition at default properties") {
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ShuffleExchangeExec}
+    val full = Tables.documents(spark, fixtureDir)
+    val bench = full.filter(col("doc_id") < 25)
+    val train = full.filter(col("doc_id") >= 25)
+    val runs = Seq(
+      "minhashNearDup" -> DedupOps.minhashNearDup(full, "doc_id", "text"),
+      "ngramContamination" ->
+        DedupOps.ngramContamination(train, bench, "doc_id", "text", 3),
+      "bloomContamination" ->
+        DedupOps.bloomContamination(train, bench, "doc_id", "text", 3))
+    val bad = runs.flatMap { case (name, df) =>
+      df.collect()
+      planNodes(df.queryExecution.executedPlan).collect {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM ||
+            e.child.output.exists(a => a.name == "text" || a.name == "__txt") =>
+          s"$name: ${e.simpleString(200)} over ${e.child.output.mkString(", ")}"
+      }.distinct
+    }
+    Caches.clear()
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("minhashNearDup verifies only candidate docs: with broadcasts off " +
+    "the shingle side of both id joins is under the candidate semi-join") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val full = Tables.documents(spark, fixtureDir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val default = rows(DedupOps.minhashNearDup(full, "doc_id", "text"))
+    Caches.clear()
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      keys.foreach(spark.conf.set(_, "-1"))
+      val df = DedupOps.minhashNearDup(full, "doc_id", "text")
+      val keyed = rows(df)
+      // per scan of the persisted shingle arrays: under a semi-join?
+      def scans(p: org.apache.spark.sql.execution.SparkPlan,
+                underSemi: Boolean): Seq[Boolean] = p match {
+        case m: InMemoryTableScanExec if m.output.exists(_.name == "shs") =>
+          Seq(underSemi)
+        case j: BaseJoinExec if j.joinType == LeftSemi =>
+          j.children.flatMap(scans(_, underSemi = true))
+        case o => planKids(o).flatMap(scans(_, underSemi))
+      }
+      val found = scans(df.queryExecution.executedPlan, underSemi = false)
+      Caches.clear()
+      assert(found.size >= 2, s"shingle scans: $found")
+      assert(found.forall(identity),
+        s"a shingle scan outside the semi-join:\n${df.queryExecution.executedPlan}")
+      assert(keyed == default)
+      assert(default.nonEmpty)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("simhash: identical docs collide, hamming pairs found") {
     val out = DedupOps.simhashNearDup(docs, "doc_id", "text", maxHamming = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq

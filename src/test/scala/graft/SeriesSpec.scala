@@ -1291,6 +1291,27 @@ class SeriesSpec extends AnyFunSuite with SparkFixture {
     Caches.clear()
   }
 
+  test("rankAll shuffles the bucketed rows once: one hash exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // ties within and across rows; the tie count is keyed by (bucket,
+    // value), which the bucket exchange already satisfies
+    val df = (0 until 2000).map(i => (i.toLong, ((i * 7919) % 613) / 3.0))
+      .toDF("idx", "v")
+    val got = Series.fromColumn(df, "v", "idx")
+      .rankAll(Seq("average", "first", "dense"))
+    got.collect()
+    val hashed = new AdaptiveSparkPlanHelper {}.collect(
+        got.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec
+        if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    Caches.clear()
+    assert(hashed.size == 1,
+      s"${hashed.size} hash exchanges:\n${got.queryExecution.executedPlan}")
+  }
+
   test("ngroupBy over a string key plans no un-partitioned window") {
     import org.apache.spark.sql.expressions.Window
     val df = (0 until 200).map(i => (i.toLong, f"g${(i * 13) % 41}%02d", i * 0.5))

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Summarise Spark event logs: per-SQL-execution cost and driver gaps.
 
-    usage: tools/evlog.py <eventlog dir or file> [--gap-ms 200]
+    usage: tools/evlog.py <eventlog dir or file> [--gap-ms 200] [--shuffle]
 
 For every application log (an uncompressed JSON-lines file written with
 spark.eventLog.enabled=true and spark.eventLog.compress=false; rolling
@@ -13,15 +13,27 @@ logs are read as one application per eventlog_v2_* directory) it prints:
     execution open at the time, if any. At small sizes this driver time
     (planning, cache bookkeeping, result handling) is where wall time goes.
 
+With --shuffle it also prints, under each SQL execution, the shuffle bytes
+written by each of its stages, and every exchange of its FINAL plan (the
+last adaptive re-plan, else the plan it started with): the partitioning and
+origin of a shuffle (e.g. `hashpartitioning(id, 4), REPARTITION_BY_NUM`)
+with the bytes it wrote, a broadcast with the bytes it built, and a reused
+exchange. Expression ids are dropped from the partitioning.
+
 Times are read from the log's own timestamps (ms since the epoch).
 """
 import argparse
 import json
 import os
+import re
 import sys
 
 SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
 SQL_END = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd"
+SQL_REPLAN = ("org.apache.spark.sql.execution.ui."
+              "SparkListenerSQLAdaptiveExecutionUpdate")
+DRIVER_ACCUMS = ("org.apache.spark.sql.execution.ui."
+                 "SparkListenerDriverAccumUpdates")
 COMPRESSED = (".lz4", ".lzf", ".snappy", ".zstd")
 
 
@@ -58,11 +70,13 @@ def read_events(files):
 
 def summarise(events):
     app_start = app_end = None
-    sqls = {}       # id -> dict(start, end, desc)
+    sqls = {}       # id -> dict(start, end, desc, plan)
     jobs = {}       # job id -> dict(start, end, sql, stages)
     stage_job = {}  # stage id -> job id
     stages_run = set()
     task_ms = {}    # stage id -> summed task duration
+    shuffle_w = {}  # stage id -> shuffle bytes written by its tasks
+    accums = {}     # accumulator id -> summed task and driver updates
     for e in events:
         kind = e.get("Event")
         if kind == "SparkListenerApplicationStart":
@@ -71,9 +85,15 @@ def summarise(events):
             app_end = e["Timestamp"]
         elif kind == SQL_START:
             sqls[e["executionId"]] = {"start": e["time"], "end": None,
-                                      "desc": e.get("description", "")}
+                                      "desc": e.get("description", ""),
+                                      "plan": e.get("sparkPlanInfo")}
+        elif kind == SQL_REPLAN and e["executionId"] in sqls:
+            sqls[e["executionId"]]["plan"] = e.get("sparkPlanInfo")
         elif kind == SQL_END and e["executionId"] in sqls:
             sqls[e["executionId"]]["end"] = e["time"]
+        elif kind == DRIVER_ACCUMS:
+            for aid, v in e.get("accumUpdates", []):
+                accums[aid] = accums.get(aid, 0) + v
         elif kind == "SparkListenerJobStart":
             props = e.get("Properties") or {}
             sql = props.get("spark.sql.execution.id")
@@ -89,12 +109,55 @@ def summarise(events):
             info = e.get("Task Info", {})
             dur = info.get("Finish Time", 0) - info.get("Launch Time", 0)
             task_ms[e["Stage ID"]] = task_ms.get(e["Stage ID"], 0) + max(dur, 0)
-    return app_start, app_end, sqls, jobs, stage_job, stages_run, task_ms
+            written = ((e.get("Task Metrics") or {})
+                       .get("Shuffle Write Metrics", {})
+                       .get("Shuffle Bytes Written", 0))
+            shuffle_w[e["Stage ID"]] = shuffle_w.get(e["Stage ID"], 0) + written
+            for a in info.get("Accumulables", []):
+                # SQL metrics log their updates as decimal strings
+                try:
+                    v = int(a.get("Update"))
+                except (TypeError, ValueError):
+                    continue
+                accums[a["ID"]] = accums.get(a["ID"], 0) + v
+    return (app_start, app_end, sqls, jobs, stage_job, stages_run, task_ms,
+            shuffle_w, accums)
 
 
-def report(name, events, gap_ms):
-    app_start, app_end, sqls, jobs, stage_job, stages_run, task_ms = \
-        summarise(events)
+def exchanges(node):
+    """Every exchange node of a sparkPlanInfo tree, in pre-order."""
+    if node is None:
+        return []
+    name = node.get("nodeName", "")
+    found = [node] if name.endswith("Exchange") else []
+    for child in node.get("children", []):
+        found += exchanges(child)
+    return found
+
+
+def exchange_line(node, accums):
+    """`kind  bytes  partitioning, origin` for one exchange node."""
+    def metric(*names):
+        for m in node.get("metrics", []):
+            if m["name"] in names:
+                return accums.get(m["accumulatorId"], 0)
+        return 0
+    text = node.get("simpleString", "")
+    text = re.sub(r",? \[plan_id=\d+\]?", "", text)
+    text = re.sub(r"#\d+L?", "", text)
+    name = node["nodeName"]
+    if name == "ReusedExchange":
+        return f"reused                 {text.split(', ', 1)[-1][:100]}"
+    if name == "BroadcastExchange":
+        return (f"broadcast {metric('data size') / 1e6:>9.4f} MB  "
+                f"{text[len('BroadcastExchange '):][:100]}")
+    return (f"shuffle   {metric('shuffle bytes written') / 1e6:>9.4f} MB  "
+            f"{text[len('Exchange '):] if text.startswith('Exchange ') else text}")
+
+
+def report(name, events, gap_ms, shuffle=False):
+    (app_start, app_end, sqls, jobs, stage_job, stages_run, task_ms,
+     shuffle_w, accums) = summarise(events)
     stamps = [t for j in jobs.values() for t in (j["start"], j["end"]) if t]
     stamps += [t for s in sqls.values() for t in (s["start"], s["end"]) if t]
     if not stamps:
@@ -118,6 +181,13 @@ def report(name, events, gap_ms):
               f"{wall if wall is not None else '-':>8} {len(mine):>5} "
               f"{len(stages):>6} {sum(task_ms.get(st, 0) for st in stages) / 1000:>7.2f}"
               f"  {desc}")
+        if shuffle:
+            for st in sorted(stages):
+                if shuffle_w.get(st, 0):
+                    print(f"{'':>14}stage {st:>5} wrote "
+                          f"{shuffle_w[st] / 1e6:>9.4f} MB shuffle")
+            for node in exchanges(s["plan"]):
+                print(f"{'':>14}{exchange_line(node, accums)}")
 
     # driver gaps: the timeline minus the union of running-job intervals
     spans = sorted((j["start"], j["end"] or t1) for j in jobs.values())
@@ -147,12 +217,15 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("path")
     ap.add_argument("--gap-ms", type=int, default=200)
+    ap.add_argument("--shuffle", action="store_true",
+                    help="per execution: shuffle bytes per stage and the "
+                         "exchanges of its final plan")
     args = ap.parse_args()
     apps = app_logs(args.path)
     if not apps:
         sys.exit(f"{args.path}: no event logs")
     for name, files in apps:
-        report(name, list(read_events(files)), args.gap_ms)
+        report(name, list(read_events(files)), args.gap_ms, args.shuffle)
 
 
 if __name__ == "__main__":
