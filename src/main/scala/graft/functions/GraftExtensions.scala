@@ -28,6 +28,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         ColumnBridge.expression(f(ColumnBridge.column(children.head)))
       }))
 
+  /** The value of an aggregate's integer-literal parameter `k`. */
+  private def intLiteral(name: String, e: Expression): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
+        if v != null => v.toString.toInt
+    case other => throw new IllegalArgumentException(
+      s"$name k must be an integer literal, got $other")
+  }
+
   override def apply(ext: SparkSessionExtensions): Unit = {
     // runtime all-pairs guard (armed per session by
     // spark.graft.blockAllPairs=true; inspect-only, default off)
@@ -99,13 +107,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 2,
           "graft_freq_items takes (col, k) with a literal k")
-        val k = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
-              if v != null => v.toString.toInt
-          case other => throw new IllegalArgumentException(
-            s"graft_freq_items k must be an integer literal, got $other")
-        }
-        FreqItems(children.head, k)
+        FreqItems(children.head, intLiteral("graft_freq_items", children(1)))
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_funnel"),
+      new ExpressionInfo(classOf[Funnel].getName, "graft_funnel"),
+      (children: Seq[Expression]) => {
+        require(children.length == 3,
+          "graft_funnel takes (ts, stageMask, k) with a literal k")
+        Funnel(children.head, children(1), intLiteral("graft_funnel", children(2)))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_normalize"),

@@ -128,28 +128,32 @@ object EventOps {
     * the first time each stage is reached AT-OR-AFTER the previous
     * stage's first reach — t₀ = min ts of stage 0, tᵢ = min ts of stage i
     * with ts ≥ tᵢ₋₁; a stage is null (and every later stage with it) when
-    * never reached in order. ONE shuffle on the key: each stage is a
-    * conditional-min window over the same partitioning (Catalyst stacks
-    * the Window nodes on a single Exchange), then one partial+final
-    * per-key reduction collapses to a row per key. */
+    * never reached in order. Every key of `df` gets a row (all null when
+    * it has no stage event); rows with a null ts or type reach no stage.
+    *
+    * One projection marks each row with a stage bitmask (bit i: type =
+    * stages(i); a repeated stage name sets several bits), then ONE
+    * keyed aggregation folds the marked times in the mergeable
+    * [[graft.functions.Funnel]] aggregate (`graft_funnel`). Its map-side
+    * partials prune each key's times to the few that can still be a
+    * stage's answer, so the one key exchange carries a state per (map
+    * partition, key), not every event. The time column is ordered by its
+    * physical long: timestamp, timestamp_ntz, date or an integral type.
+    * At most 64 stages. */
   def funnel(df: DataFrame, keyCol: String, tsCol: String, typeCol: String,
              stages: Seq[String]): DataFrame = {
     require(stages.nonEmpty, "funnel needs at least one stage")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(keyCol))
-    var cur = df.select(col(keyCol), col(tsCol), col(typeCol))
-    var prev: Option[String] = None
-    stages.foreach { st =>
-      val cName = s"t_$st"
-      val cond = prev match {
-        case None    => col(typeCol) === st
-        case Some(p) => col(typeCol) === st && col(tsCol) >= col(p)
-      }
-      cur = cur.withColumn(cName, min(when(cond, col(tsCol))).over(w))
-      prev = Some(cName)
+    require(stages.size <= 64, "funnel takes at most 64 stages")
+    val mask = stages.distinct.foldLeft(lit(0L)) { (m, st) =>
+      val bits = stages.indices.filter(stages(_) == st).map(1L << _).reduce(_ | _)
+      when(col(typeCol) === st, bits).otherwise(m)
     }
-    cur.groupBy(col(keyCol))
-      .agg(min(s"t_${stages.head}").as(s"t_${stages.head}"),
-        stages.tail.map(st => min(s"t_$st").as(s"t_$st")): _*)
+    df.select(col(keyCol), col(tsCol).as("__ts"), mask.as("__mask"))
+      .groupBy(col(keyCol))
+      .agg(graft.functions.Funnel.funnel(col("__ts"), col("__mask"), stages.size).as("__t"))
+      .select(col(keyCol) +: stages.zipWithIndex.map { case (st, i) =>
+        col("__t").getItem(i).as(s"t_$st")
+      }: _*)
   }
 
   /** Time-weighted average per key (the TWAP shape): each observation

@@ -616,8 +616,8 @@ object EventQueries {
         .orderBy("user_id")),
 
     // Ordered conversion funnel per user: first view -> first click at or
-    // after it -> first purchase at or after that; stacked conditional-min
-    // windows on ONE user exchange.
+    // after it -> first purchase at or after that; one keyed graft_funnel
+    // aggregation, whose map-side partials exchange a pruned state per user.
     "e27_funnel" -> ((s, d) =>
       EventOps.funnel(ev(s, d), "user_id", "ts", "event_type",
           Seq("view", "click", "purchase"))

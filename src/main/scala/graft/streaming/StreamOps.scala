@@ -595,9 +595,10 @@ object StreamOps {
     * (ts, event_id) order; within each distinct timestamp the fold
     * advances stages in STAGE order (a view and a click at the
     * identical timestamp complete both stages — matching the batch
-    * twin's `ts >= t_prev` window semantics, where ties qualify
-    * regardless of event id). A single event can also satisfy repeated
-    * stages, exactly as the batch min-windows do.
+    * twin's `ts >= t_prev` chain in [[graft.functions.Funnel]], where
+    * ties qualify regardless of event id). A single event can also
+    * satisfy repeated stages, exactly as one batch row sets several
+    * stage bits.
     *
     * Beyond-watermark late data is DROPPED on arrival (an incoming row
     * with ts already below the current watermark), matching Spark's

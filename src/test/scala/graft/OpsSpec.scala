@@ -1212,6 +1212,27 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
+  test("funnel plans no Window, and its one exchange writes at most one " +
+    "state per (map partition, key)") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val ev = Tables.events(spark, fixtureDir)
+    val parts = 7
+    val spread = spark.createDataFrame(
+      spark.sparkContext.parallelize(ev.collect().toSeq, parts), ev.schema)
+    val keys = ev.select("user_id").distinct().count()
+    val df = graft.ops.EventOps.funnel(spread, "user_id", "ts", "event_type",
+      Seq("view", "click", "purchase"))
+    assert(df.collect().length == keys)
+    val nodes = planNodes(df.queryExecution.executedPlan)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!nodes.exists(_.nodeName.contains("Window")), plan)
+    val written = nodes.collect { case e: ShuffleExchangeExec =>
+      e.metrics("shuffleRecordsWritten").value }
+    assert(written.size == 1, plan)
+    assert(written.head <= parts * keys,
+      s"${written.head} rows exchanged for $keys keys over $parts partitions")
+  }
+
   test("Caches.clear releases the projections operators persist") {
     Caches.clear() // drop anything earlier tests left behind
     val before = Caches.size
