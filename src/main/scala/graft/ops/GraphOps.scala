@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge.{Checkpoint,
   checkpoint}
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed graph primitives for dedup pipelines.
   *
@@ -54,17 +53,17 @@ object GraphOps {
     * counted [[checkpoint]] (keeping the rows' partitioning when
     * `keepPartitioning`), frees the previous round's blocks and applies
     * the stop rule, whose counts come from the same job. Lineage MUST be
-    * cut every round: persist alone keeps
-    * the logical plan, each round reads the previous frame several
-    * times, and an un-truncated plan grows geometrically until the
-    * driver dies re-analyzing it (the d08 rationale). `mustConverge`
+    * cut every round: a cached frame keeps its logical plan, each round
+    * reads the previous frame several times, and an un-truncated plan
+    * grows geometrically until the driver dies re-analyzing it (the d08
+    * rationale). `mustConverge`
     * throws when `rounds` end before the stop rule fires (a silent
     * partial answer would be WRONG, not slow). Returns the last round's
-    * frame. */
+    * checkpoint: its frame and its exact row count. */
   private[ops] def iterate(op: String, init: Checkpoint, rounds: Int,
       until: Until = Until.Never, keepPartitioning: Boolean = false,
       mustConverge: Boolean = false)(
-      round: (DataFrame, Long, Int) => DataFrame): DataFrame = {
+      round: (DataFrame, Long, Int) => DataFrame): Checkpoint = {
     val changed = until match {
       case Until.NoneChanged(c) => Some(c)
       case _ => None
@@ -87,21 +86,21 @@ object GraphOps {
     }
     require(done || !mustConverge,
       s"$op did not converge in $rounds iterations")
-    cur.df
+    cur
   }
 
   /** The iterative ops' shared symmetric edge frame: both orientations,
     * hash-partitioned by the scoring vertex `a` ONCE (guide §2.4 — the
-    * per-round keyed aggregations all ride this one exchange), persisted.
-    * Public so a gate running SEVERAL ops over one graph (d46: louvain +
-    * LPA; d53: the level-1 pass) builds it once and passes it via the
-    * ops' `preSym` parameter instead of paying the exchange per op. */
+    * per-round keyed aggregations all ride this one exchange), cut with
+    * that layout kept; its rows are 2m. Public so a gate running SEVERAL
+    * ops over one graph (d46: louvain + LPA) builds it once and passes it
+    * via the ops' `preSym` parameter instead of paying the exchange per
+    * op; the caller releases it. */
   def symmetrize(edges: DataFrame, srcCol: String,
-                 dstCol: String): DataFrame = graft.Caches.track(
+                 dstCol: String): Checkpoint = checkpoint(
     edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .repartition(col("a"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .repartition(col("a")), keepPartitioning = true)
 
   /** Connected components over an undirected edge list: returns
     * `(id, comp)` for every vertex incident to an edge, where `comp` is
@@ -139,14 +138,14 @@ object GraphOps {
     // AND the first join round — one whole iteration of joins + checkpoint
     // + convergence check gone. Its row count is |V|, which gates the
     // per-round broadcast hints (labels and neigh are |V|-bounded).
-    val init = checkpoint(sym.groupBy("a")
+    val init = checkpoint(sym.df.groupBy("a")
       .agg(least(col("a"), min(col("b"))).as("comp"))
       .select(col("a").as("id"), col("comp")))
-    iterate("connectedComponents", init, maxIter,
+    val comps = iterate("connectedComponents", init, maxIter,
         Until.NoneChanged(col("comp") =!= col("__old")),
         mustConverge = true) { (labels, nV, _) =>
       // hash-to-min: min label over self + neighbors
-      val neigh = sym
+      val neigh = sym.df
         .join(hintIfSmall(
           labels.select(col("id").as("b"), col("comp").as("bc")), nV), "b")
         .groupBy("a").agg(min("bc").as("nc"))
@@ -173,7 +172,9 @@ object GraphOps {
           Seq("comp"), "left")
         .select(col("id"), col("__old"),
           least(col("comp"), coalesce(col("cc"), col("comp"))).as("comp"))
-    }.select("id", "comp")
+    }
+    sym.release()
+    comps.df.select("id", "comp")
   }
 
   /** Canonical-survivor selection over near-dup pairs: cluster the pairs,
@@ -218,8 +219,8 @@ object GraphOps {
     // the degree count rides the same partitioning too. [[symmetrize]]
     // partitions by `a`; swapping the columns of its symmetric frame
     // keeps the rows and turns that into hash(b).
-    val sym = symmetrize(pairs, id1, id2)
-      .select(col("b").as("a"), col("a").as("b"))
+    val cut = symmetrize(pairs, id1, id2)
+    val sym = cut.df.select(col("b").as("a"), col("a").as("b"))
     val deg = checkpoint(sym.groupBy(col("b")).agg(count(lit(1)).as("deg"))
       .select(col("b").as("a"), col("deg")))
     val n = deg.rows // |vertices|
@@ -237,8 +238,10 @@ object GraphOps {
           (floor((lit(base) + lit(damping) * col("__s")) * 1e9 + 0.5)
             / 1e9).as("r"))
     }
-    deg.release() // the last round's checkpoint no longer reads it
-    rank.select(col("id"), col("r").as("rank"))
+    // the last round's checkpoint reads neither
+    deg.release()
+    cut.release()
+    rank.df.select(col("id"), col("r").as("rank"))
   }
 
   /** PERSONALIZED PageRank (random walk with restart to a SEED set —
@@ -267,8 +270,8 @@ object GraphOps {
     // same r16 pre-partitioned shape as [[pageRank]]: one exchange at
     // build (by destination `b`, via the same swap), size-gated
     // broadcast joins per round
-    val sym = symmetrize(pairs, id1, id2)
-      .select(col("b").as("a"), col("a").as("b"))
+    val cut = symmetrize(pairs, id1, id2)
+    val sym = cut.df.select(col("b").as("a"), col("a").as("b"))
     val deg = checkpoint(sym.groupBy(col("b")).agg(count(lit(1)).as("deg"))
       .select(col("b").as("a"), col("deg")))
     val nV = deg.rows // |vertices| — gates the broadcast hints
@@ -304,7 +307,8 @@ object GraphOps {
     }
     deg.release()
     seedFlag.release()
-    rank.select(col("id"), col("r").as("rank"))
+    cut.release()
+    rank.df.select(col("id"), col("r").as("rank"))
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge list
@@ -333,13 +337,11 @@ object GraphOps {
     // ZERO exchanges below the broadcast limit. 2× the edge storage;
     // the former per-half-round shuffle of the joined edge frame is
     // gone.
-    val eByC = graft.Caches.track(
+    val eByC = checkpoint(
       edges.select(col(srcCol).as("c"), col(dstCol).as("s")).distinct()
-        .repartition(col("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val eByS = graft.Caches.track(
-      eByC.repartition(col("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .repartition(col("c")), keepPartitioning = true)
+    val eByS = checkpoint(eByC.df.repartition(col("s")),
+      keepPartitioning = true)
     val unit = 1000000000L
     // per-round L∞ normalization stays INSIDE the plan (the 1-row max
     // broadcast-joins back on a constant key; Catalyst folds the
@@ -352,9 +354,8 @@ object GraphOps {
     // round is one |vertices|-sized job (6.8 s with probe jobs → ~3 s).
     def normalized(raw: DataFrame): DataFrame = {
       // (the max branch and join left both read `raw` inside the one
-      // checkpoint job; persisting it was measured SLOWER at sf0.1 —
-      // 6.4 s vs 4.8 s — the frames are too small to out-earn the
-      // persist bookkeeping, and ReuseExchange covers the shared agg)
+      // checkpoint job, consumed once: caching it was measured SLOWER at
+      // sf0.1 — 6.4 s vs 4.8 s — and ReuseExchange covers the shared agg)
       val mx = raw.agg(max(col("raw")).as("__mx"))
         .withColumn("__k", lit(1))
       raw.withColumn("__k", lit(1))
@@ -364,23 +365,25 @@ object GraphOps {
             .as("u"))
     }
     var a = Option.empty[Checkpoint]
-    val h = iterate("hits", checkpoint(eByC.select(col("c").as("id"))
+    val h = iterate("hits", checkpoint(eByC.df.select(col("c").as("id"))
         .distinct().withColumn("u", lit(unit))), iters) { (h, nH, _) =>
       // groupBy the RAW partition column (an alias in the grouping key
       // can defeat the distribution match), rename after
-      val next = checkpoint(normalized(eByS
+      val next = checkpoint(normalized(eByS.df
         .join(hintIfSmall(h.select(col("id").as("c"), col("u")), nH), "c")
         .groupBy(col("s")).agg(sum(col("u")).as("raw"))
         .select(col("s").as("id"), col("raw"))))
       a.foreach(_.release())
       a = Some(next)
-      normalized(eByC
+      normalized(eByC.df
         .join(hintIfSmall(next.df.select(col("id").as("s"), col("u")),
           next.rows), "s")
         .groupBy(col("c")).agg(sum(col("u")).as("raw"))
         .select(col("c").as("id"), col("raw")))
     }
-    h.select(lit("hub").as("role"), col("id"), col("u").as("score_u"))
+    eByC.release()
+    eByS.release()
+    h.df.select(lit("hub").as("role"), col("id"), col("u").as("score_u"))
       .unionByName(a.get.df.select(lit("authority").as("role"), col("id"),
         col("u").as("score_u")))
   }
@@ -432,11 +435,10 @@ object GraphOps {
                    majorityFields: Seq[String],
                    maxFields: Seq[String] = Nil): DataFrame = {
     val comps = connectedComponents(pairs, id1, id2)
-    val joined = graft.Caches.track(comps.join(
-        records.select(col(idCol).as("id") +:
-          (majorityFields ++ maxFields).map(col): _*),
-        Seq("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val joined = comps.join(
+      records.select(col(idCol).as("id") +:
+        (majorityFields ++ maxFields).map(col): _*),
+      Seq("id"))
     val sizes = joined.groupBy("comp").agg(
       count(lit(1)).as("csize"),
       maxFields.map(f => max(col(f)).as(f)): _*)
@@ -487,19 +489,19 @@ object GraphOps {
     * Exact integer logic end-to-end: no floats anywhere. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int = 4,
-                       preSym: Option[DataFrame] = None): DataFrame = {
+                       preSym: Option[Checkpoint] = None): DataFrame = {
     // pre-partitioned by `a` once (r16, the louvainOneLevel shape): the
     // init distinct, the per-round (a, label) count and the arg-max all
     // group by `a`, so they ride this ONE exchange; label joins are
     // size-gated broadcasts — zero exchanges per round below the limit.
     // `preSym` (r17): a gate running several ops over ONE graph shares
-    // the symmetrize exchange + persist (see [[symmetrize]]) instead of
+    // the symmetrize exchange and cut (see [[symmetrize]]) instead of
     // rebuilding it per op — d46 built the identical 2·|E| frame twice.
     val sym = preSym.getOrElse(symmetrize(edges, srcCol, dstCol))
     // the init frame's row count is |V| (the vertex set never changes
     // across rounds) — gates the per-round broadcast hint, see
     // [[hintIfSmall]].
-    val init = checkpoint(sym.select(col("a")).distinct()
+    val init = checkpoint(sym.df.select(col("a")).distinct()
       .select(col("a").as("id"), col("a").as("lbl")))
     // convergence early-exit: a round with zero label changes is a fixed
     // point of the synchronous update (every later round replays it), so
@@ -509,7 +511,7 @@ object GraphOps {
     // checkpoint job. NOTE: synchronous LPA can 2-CYCLE instead of
     // converging (label oscillation) — the exit then simply never fires
     // and all `iters` rounds run, as before.
-    iterate("labelPropagation", init, iters,
+    val last = iterate("labelPropagation", init, iters,
         Until.NoneChanged(col("lbl") =!= col("__old"))) { (labels, nV, _) =>
       // label side is |vertices|-bounded → broadcast WHEN SMALL (the
       // edge frame then never shuffles; above the measured limit the
@@ -519,7 +521,7 @@ object GraphOps {
       // (vertex, label) counts to ≤|vertices| rows before the exchange,
       // where the window sorted the full count frame. Tie rule
       // unchanged: max (cnt, −label) == (cnt DESC, label ASC) rank 1.
-      sym.join(hintIfSmall(
+      sym.df.join(hintIfSmall(
           labels.select(col("id").as("b"), col("lbl").as("nl")), nV), "b")
         .groupBy("a", "nl").agg(count(lit(1)).as("cnt"))
         .groupBy(col("a")) // both groupBys ride sym's hash(a)
@@ -529,7 +531,9 @@ object GraphOps {
           labels.select(col("id"), col("lbl").as("__old")), nV),
           col("a") === col("id"))
         .select(col("id"), col("lbl"), col("__old"))
-    }.select("id", "lbl")
+    }
+    if (preSym.isEmpty) sym.release()
+    last.df.select("id", "lbl")
   }
 
   /** One-level Louvain (Blondel et al. 2008 §2, first level) under the
@@ -564,37 +568,42 @@ object GraphOps {
     * Assumes 2m·max(k_i) < 2⁶³. */
   def louvainOneLevel(edges: DataFrame, srcCol: String, dstCol: String,
                       iters: Int = 3,
-                      preSym: Option[DataFrame] = None): DataFrame = {
+                      preSym: Option[Checkpoint] = None): DataFrame =
+    louvain(edges, srcCol, dstCol, iters, preSym).df.select("id", "lbl")
+
+  /** [[louvainOneLevel]]'s last round: `(id, lbl, __old)`, |V| rows. */
+  private def louvain(edges: DataFrame, srcCol: String, dstCol: String,
+                      iters: Int, preSym: Option[Checkpoint]): Checkpoint = {
     val sym = preSym.getOrElse(symmetrize(edges, srcCol, dstCol))
-    val deg = graft.Caches.track(
-      sym.groupBy("a").agg(count(lit(1)).as("k")) // rides sym's hash(a)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val m2 = sym.count() // 1-value probe: 2m (each edge counted twice)
+    val m2 = sym.rows // 2m: each edge counted twice
     require(m2 > 0, "louvain needs edges")
+    val deg = checkpoint(
+      sym.df.groupBy("a").agg(count(lit(1)).as("k"))) // rides sym's hash(a)
     // the label frame's row count is |V| (the vertex set is fixed across
     // rounds) — gates the per-round broadcast hints.
-    val init = checkpoint(deg.select(col("a").as("id"), col("a").as("lbl")))
+    val init = checkpoint(deg.df.select(col("a").as("id"),
+      col("a").as("lbl")))
     // CONVERGENCE EARLY-EXIT (the monotone test components/k-core already
     // use): synchronous rounds are a pure function of the previous
     // labeling, so zero accepted moves in a round is a FIXED POINT —
     // every later round is a no-op and the fixed-round oracle replays the
     // identical labels. The own label already rides the move join, so
     // the round's checkpoint job counts the moves; no extra join or job.
-    iterate("louvain", init, iters,
+    val last = iterate("louvain", init, iters,
         Until.NoneChanged(col("lbl") =!= col("__old"))) { (labels, nV, r) =>
       // round 1 runs on the identity labeling — the label/degree joins
       // simplify away (lbl == id, Σtot(c) == k_c), saving three joins
       val idside = // (id, own, k) — the per-vertex broadcast frame
-        if (r == 1) deg.select(col("a").as("id"), col("a").as("own"),
+        if (r == 1) deg.df.select(col("a").as("id"), col("a").as("own"),
           col("k"))
-        else labels.join(hintIfSmall(deg, nV), col("id") === col("a"))
+        else labels.join(hintIfSmall(deg.df, nV), col("id") === col("a"))
           .select(col("id"), col("lbl").as("own"), col("k"))
       val sigma = // (c, sig) — per-community Σtot
-        if (r == 1) deg.select(col("a").as("c"), col("k").as("sig"))
+        if (r == 1) deg.df.select(col("a").as("c"), col("k").as("sig"))
         else idside.groupBy(col("own").as("c")).agg(sum(col("k")).as("sig"))
       val nbr =
-        if (r == 1) sym.select(col("a"), col("b").as("c"))
-        else sym.join(
+        if (r == 1) sym.df.select(col("a"), col("b").as("c"))
+        else sym.df.join(
           hintIfSmall(
             labels.select(col("id").as("b"), col("lbl").as("c")), nV),
           "b").select(col("a"), col("c"))
@@ -625,7 +634,10 @@ object GraphOps {
               (-col("own")).as("n")) > col("bk"),
             col("own")).otherwise(col("bc")).as("lbl"),
           col("own").as("__old"))
-    }.select("id", "lbl")
+    }
+    deg.release()
+    if (preSym.isEmpty) sym.release()
+    last
   }
 
   /** WEIGHTED one-level Louvain — the engine [[louvainLevels]] runs on
@@ -648,35 +660,33 @@ object GraphOps {
     // neighbor-pull edges: non-self, both directions — pre-partitioned
     // by `a` once, the louvainOneLevel r16 shape (zero per-round
     // exchanges below the broadcast limit)
-    val sym = graft.Caches.track(
+    val sym = checkpoint(
       e.filter(col("a") =!= col("b"))
         .unionByName(e.filter(col("a") =!= col("b"))
           .select(col("b").as("a"), col("a").as("b"), col("w")))
-        .repartition(col("a"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .repartition(col("a")), keepPartitioning = true)
     // weighted degree: neighbor weights + 2× self-loop weight
     val selfw = e.filter(col("a") === col("b"))
       .select(col("a").as("id"), (col("w") * 2).as("kw"))
-    val deg = graft.Caches.track(
-      sym.select(col("a").as("id"), col("w").as("kw"))
+    val deg = checkpoint(
+      sym.df.select(col("a").as("id"), col("w").as("kw"))
         .unionByName(selfw)
-        .groupBy("id").agg(sum(col("kw")).as("k"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val m2 = deg.agg(sum(col("k"))).head().getLong(0) // 1-row probe: 2m
+        .groupBy("id").agg(sum(col("kw")).as("k")))
+    val m2 = deg.df.agg(sum(col("k"))).head().getLong(0) // 1-row probe: 2m
     require(m2 > 0, "weighted louvain needs edges")
-    val init = checkpoint(deg.select(col("id"), col("id").as("lbl")))
-    iterate("louvainWeighted", init, iters,
+    val init = checkpoint(deg.df.select(col("id"), col("id").as("lbl")))
+    val last = iterate("louvainWeighted", init, iters,
         Until.NoneChanged(col("lbl") =!= col("__old"))) { (labels, nV, r) =>
       val idside = // (id, own, k) — per-vertex broadcast frame
-        if (r == 1) deg.select(col("id"), col("id").as("own"), col("k"))
-        else labels.join(hintIfSmall(deg, nV), Seq("id"))
+        if (r == 1) deg.df.select(col("id"), col("id").as("own"), col("k"))
+        else labels.join(hintIfSmall(deg.df, nV), Seq("id"))
           .select(col("id"), col("lbl").as("own"), col("k"))
       val sigma = // (c, sig)
-        if (r == 1) deg.select(col("id").as("c"), col("k").as("sig"))
+        if (r == 1) deg.df.select(col("id").as("c"), col("k").as("sig"))
         else idside.groupBy(col("own").as("c")).agg(sum(col("k")).as("sig"))
       val nbr =
-        if (r == 1) sym.select(col("a"), col("b").as("c"), col("w"))
-        else sym.join(
+        if (r == 1) sym.df.select(col("a"), col("b").as("c"), col("w"))
+        else sym.df.join(
           hintIfSmall(
             labels.select(col("id").as("b"), col("lbl").as("c")), nV),
           "b").select(col("a"), col("c"), col("w"))
@@ -707,7 +717,10 @@ object GraphOps {
         .join(hintIfSmall(moved, nV), Seq("id"), "left")
         .select(col("id"),
           coalesce(col("mv"), col("__old")).as("lbl"), col("__old"))
-    }.select("id", "lbl")
+    }
+    sym.release()
+    deg.release()
+    last.df.select("id", "lbl")
   }
 
   /** MULTI-LEVEL Louvain — the FULL Blondel et al. 2008 algorithm:
@@ -733,24 +746,19 @@ object GraphOps {
     * kinds| — tiny); level 2 runs on that tiny frame; the close is one
     * labels-keyed join mapping vertices through their community. */
   def louvainLevels(edges: DataFrame, srcCol: String, dstCol: String,
-                    iters: Int = 3,
-                    preSym: Option[DataFrame] = None): DataFrame = {
-    val pairs = graft.Caches.track(
-      edges.select(col(srcCol).as("s"), col(dstCol).as("t"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val l1 = graft.Caches.track(
-      louvainOneLevel(pairs, "s", "t", iters, preSym)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+                    iters: Int = 3): DataFrame = {
+    val pairs = edges.select(col(srcCol).as("s"), col(dstCol).as("t"))
+    val l1 = louvain(pairs, "s", "t", iters, None)
     val superE = pairs
-      .join(l1.select(col("id").as("s"), col("lbl").as("c1")), Seq("s"))
-      .join(l1.select(col("id").as("t"), col("lbl").as("c2")), Seq("t"))
+      .join(l1.df.select(col("id").as("s"), col("lbl").as("c1")), Seq("s"))
+      .join(l1.df.select(col("id").as("t"), col("lbl").as("c2")), Seq("t"))
       .groupBy(least(col("c1"), col("c2")).as("lo"),
         greatest(col("c1"), col("c2")).as("hi"))
       .agg(count(lit(1)).as("w"))
     val l2 = louvainOneLevelWeighted(superE, "lo", "hi", "w", iters)
-    l1.select(col("id"), col("lbl").as("lbl1"))
+    l1.df.select(col("id"), col("lbl").as("lbl1"))
       .join(hintIfSmall(l2.select(col("id").as("lbl1"),
-        col("lbl").as("lbl2")), l1.count()), Seq("lbl1"))
+        col("lbl").as("lbl2")), l1.rows), Seq("lbl1"))
       .select(col("id"), col("lbl1"), col("lbl2"))
   }
 
@@ -763,48 +771,52 @@ object GraphOps {
     * Determinism is TOTAL: Q clears its denominators to
     * `(4m·Σe_c − Σd_c²) / 4m²` — ONE division of exact BIGINTs on the
     * 6dp floor grid. Scale shape: two keyed label joins + bounded
-    * per-community aggregates; the 1-row totals probe runs over the
-    * |communities| frame. Assumes 4m² < 2⁶³ (m < 1.5·10⁹ edges — route
-    * through DECIMAL beyond). */
+    * per-community aggregates; m is the edge cut's row count and the
+    * 1-row totals probe runs over the |communities| cut. Assumes
+    * 4m² < 2⁶³ (m < 1.5·10⁹ edges — route through DECIMAL beyond). */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  labels: DataFrame, idCol: String, lblCol: String)
       : DataFrame = {
-    val e = graft.Caches.track(edges.select(
-        least(col(srcCol), col(dstCol)).as("lo"),
-        greatest(col(srcCol), col(dstCol)).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val lab = graft.Caches.track(labels
-      .select(col(idCol).as("id"), col(lblCol).as("lbl")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val m = e.count() // 1-value probe: the edge count scalar
+    val e = checkpoint(canonicalEdges(edges, srcCol, dstCol))
+    val m = e.rows
     require(m > 0, "modularity needs edges")
-    val ej = e
+    val lab = labels
+      .select(col(idCol).as("id"), col(lblCol).as("lbl")).distinct()
+    val ej = e.df
       .join(lab.select(col("id").as("lo"), col("lbl").as("lb1")), Seq("lo"))
       .join(lab.select(col("id").as("hi"), col("lbl").as("lb2")), Seq("hi"))
     val ec = ej.filter(col("lb1") === col("lb2"))
       .groupBy(col("lb1").as("lbl")).agg(count(lit(1)).as("e_in"))
-    val dg = e.select(col("lo").as("nd"))
-      .unionByName(e.select(col("hi").as("nd")))
+    val dg = e.df.select(col("lo").as("nd"))
+      .unionByName(e.df.select(col("hi").as("nd")))
       .groupBy("nd").agg(count(lit(1)).as("dg"))
     val ds = lab.join(dg, lab("id") === dg("nd"), "left")
       .groupBy(col("lbl"))
       .agg(count(lit(1)).as("n_nodes"),
         sum(coalesce(col("dg"), lit(0L))).as("d_sum"))
-    val com = graft.Caches.track(ds.join(ec, Seq("lbl"), "left")
-      .na.fill(0L, Seq("e_in"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // 1-row totals probe over the |communities| frame
-    val t = com.agg(sum(col("e_in")),
+    val com = checkpoint(ds.join(ec, Seq("lbl"), "left")
+      .na.fill(0L, Seq("e_in")))
+    e.release()
+    // 1-row totals probe over the |communities| cut
+    val t = com.df.agg(sum(col("e_in")),
       sum(col("d_sum") * col("d_sum"))).head()
     val se = t.getLong(0)
     val sd2 = t.getLong(1)
     val q6 = math.floor((4L * m * se - sd2).toDouble
       / (4L * m * m).toDouble * 1e6 + 0.5) / 1e6
-    com.select(col("lbl"), col("n_nodes"), col("e_in"), col("d_sum"),
+    com.df.select(col("lbl"), col("n_nodes"), col("e_in"), col("d_sum"),
       lit(q6).as("q6"))
   }
+
+  /** `(lo, hi)`: the distinct simple edges of an undirected edge list,
+    * each in canonical order lo < hi (self-loops dropped). */
+  private def canonicalEdges(edges: DataFrame, srcCol: String,
+                             dstCol: String): DataFrame =
+    edges.select(
+        least(col(srcCol), col(dstCol)).as("lo"),
+        greatest(col(srcCol), col(dstCol)).as("hi"))
+      .filter(col("lo") =!= col("hi"))
+      .distinct()
 
   /** The closing Q of [[modularity]] for SEVERAL partitions of the SAME
     * edge set in one pass — the comparison harness (d46: Louvain vs
@@ -815,31 +827,32 @@ object GraphOps {
     * driver doubles — same exact-BIGINT division as [[modularity]].
     * Driver actions are 1-row probes over bounded aggregates. */
   def modularityQ(edges: DataFrame, srcCol: String, dstCol: String,
-                  labelings: Seq[(String, DataFrame, String, String)],
-                  canonical: Boolean = false): Seq[(String, Double)] = {
-    // `canonical` (r17): the caller vouches `edges` is already a DISTINCT
-    // canonical-order (src < dst) simple-edge frame — d46/d53 pass their
-    // persisted distinct pairs build — so the lo/hi canonicalization and
-    // its full re-distinct shuffle are skipped and the scan rides the
-    // caller's persisted frame directly. Identical rows either way.
-    val e =
-      if (canonical) edges.select(col(srcCol).as("lo"), col(dstCol).as("hi"))
-      else graft.Caches.track(edges.select(
-          least(col(srcCol), col(dstCol)).as("lo"),
-          greatest(col(srcCol), col(dstCol)).as("hi"))
-        .filter(col("lo") =!= col("hi"))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val m = e.count() // 1-value probe: the edge count scalar
+                  labelings: Seq[(String, DataFrame, String, String)])
+      : Seq[(String, Double)] = {
+    val e = checkpoint(canonicalEdges(edges, srcCol, dstCol))
+    val qs = modularityQ(e, "lo", "hi", labelings)
+    e.release()
+    qs
+  }
+
+  /** [[modularityQ]] over a `canonical` cut the caller already holds: its
+    * rows must be DISTINCT canonical-order (src < dst) simple edges (d46
+    * and d53 cut their distinct `<`-joined pairs), so the lo/hi
+    * canonicalization and its re-distinct shuffle are skipped, and m is
+    * the cut's row count. Identical result either way. */
+  def modularityQ(canonical: Checkpoint, srcCol: String, dstCol: String,
+                  labelings: Seq[(String, DataFrame, String, String)])
+      : Seq[(String, Double)] = {
+    val m = canonical.rows
     require(m > 0, "modularity needs edges")
-    val dg = graft.Caches.track(e.select(col("lo").as("nd"))
+    val e = canonical.df.select(col(srcCol).as("lo"), col(dstCol).as("hi"))
+    // |V| is the degree cut's row count — gates the per-labeling
+    // broadcast hints (label frames are vertex-keyed, so the degree
+    // count bounds them within a distinct() of the input).
+    val dg = checkpoint(e.select(col("lo").as("nd"))
       .unionByName(e.select(col("hi").as("nd")))
-      .groupBy("nd").agg(count(lit(1)).as("dg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // |V| measured once over the persisted degree frame — gates the
-    // per-labeling broadcast hints (label frames are vertex-keyed, so
-    // the degree count bounds them within a distinct() of the input).
-    val nV = dg.count()
+      .groupBy("nd").agg(count(lit(1)).as("dg")))
+    val nV = dg.rows
     // ALL labelings score in ONE tagged pass (r16): union the label
     // frames under a tag column, join the edge frame once against the
     // tagged broadcast (per tag it is exactly the old per-labeling
@@ -859,12 +872,13 @@ object GraphOps {
       .filter(col("lb1") === col("lb2"))
       .groupBy("tag").agg(count(lit(1)).as("se"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val sd2Map = labAll.join(dg, labAll("id") === dg("nd"), "left")
+    val sd2Map = labAll.join(dg.df, labAll("id") === col("nd"), "left")
       .groupBy(col("tag"), col("lbl"))
       .agg(sum(coalesce(col("dg"), lit(0L))).as("d_sum"))
       .groupBy(col("tag"))
       .agg(sum(col("d_sum") * col("d_sum")).as("sd2"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    dg.release()
     labelings.map { case (name, _, _, _) =>
       val se = seMap.getOrElse(name, 0L)
       val sd2 = sd2Map.getOrElse(name, 0L)
@@ -888,11 +902,7 @@ object GraphOps {
     * 1-row aggregate; no driver state beyond the closing row. */
   def assortativity(edges: DataFrame, srcCol: String,
                     dstCol: String): DataFrame = {
-    val e = edges.select(
-        least(col(srcCol), col(dstCol)).as("lo"),
-        greatest(col(srcCol), col(dstCol)).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .distinct()
+    val e = canonicalEdges(edges, srcCol, dstCol)
     val adj = e.select(col("lo").as("w"), col("hi").as("u"))
       .unionByName(e.select(col("hi").as("w"), col("lo").as("u")))
     val deg = adj.groupBy("w").agg(count(lit(1)).as("deg"))
@@ -932,11 +942,7 @@ object GraphOps {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "k and rounds must be >= 1")
-    val e = edges.select(
-        least(col(srcCol), col(dstCol)).as("lo"),
-        greatest(col(srcCol), col(dstCol)).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .distinct()
+    val e = canonicalEdges(edges, srcCol, dstCol)
     // Iterate on the SYMMETRIZED shrinking frame, hash-partitioned by
     // the endpoint column `w` (r16, the louvainOneLevel discipline):
     // the per-round degree count groups by `w` — riding the
@@ -970,7 +976,7 @@ object GraphOps {
         .join(hintIfSmall(keep.withColumnRenamed("v", "u"), nAlive),
           Seq("u"), "left_semi")
         .select(col("w"), col("u")) // (w, u) order for the next round
-    }.groupBy(col("w").as("node")).agg(count(lit(1)).as("deg"))
+    }.df.groupBy(col("w").as("node")).agg(count(lit(1)).as("deg"))
   }
 
   /** Adamic–Adar link prediction over an undirected edge set: for every
@@ -993,23 +999,13 @@ object GraphOps {
     * (accepted + documented, see TextOps.zipfFit). */
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
                  maxDeg: Int = 64): DataFrame = {
-    val e = graft.Caches.track(edges.select(
-        least(col(srcCol), col(dstCol)).as("lo"),
-        greatest(col(srcCol), col(dstCol)).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val e = canonicalEdges(edges, srcCol, dstCol)
     val adj = e.select(col("lo").as("w"), col("hi").as("u"))
       .unionByName(e.select(col("hi").as("w"), col("lo").as("u")))
     val deg = adj.groupBy("w").agg(count(lit(1)).as("deg"))
-    // center-eligible adjacency feeds BOTH wedge sides — persist,
-    // pre-partitioned by the wedge-center key `w` (r16): the self-join
-    // below then reads two co-partitioned cache scans and plans no
-    // exchange of its own
-    val okAdj = graft.Caches.track(
-      adj.join(deg.filter(col("deg") <= maxDeg), Seq("w"))
-        .repartition(col("w"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    // center-eligible adjacency feeds BOTH wedge sides: one plan, so the
+    // two sides' exchanges are identical and run once (exchange reuse)
+    val okAdj = adj.join(deg.filter(col("deg") <= maxDeg), Seq("w"))
     val wedges = okAdj.as("a").join(okAdj.as("b"),
         col("a.w") === col("b.w") && col("a.u") < col("b.u"))
       .select(col("a.u").as("lo"), col("b.u").as("hi"),
@@ -1024,12 +1020,7 @@ object GraphOps {
   }
 
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = graft.Caches.track(edges.select(
-        least(col(srcCol), col(dstCol)).as("lo"),
-        greatest(col(srcCol), col(dstCol)).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val e = canonicalEdges(edges, srcCol, dstCol)
     // r17 (§2.5): orient every edge toward the HIGHER (degree, id) rank
     // and form wedges only at each edge pair's lowest-rank vertex (the
     // compact-forward scheme, Schank & Wagner 2005). The old id-ordered
@@ -1044,7 +1035,8 @@ object GraphOps {
     val deg = e.select(col("lo").as("v"))
       .unionByName(e.select(col("hi").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
-    val dir = graft.Caches.track(e
+    // read three times below: one plan, so its exchanges run once
+    val dir = e
       .join(deg.select(col("v").as("lo"), col("d").as("dlo")), "lo")
       .join(deg.select(col("v").as("hi"), col("d").as("dhi")), "hi")
       .select(
@@ -1056,8 +1048,6 @@ object GraphOps {
           .as("__d"))
       .select(col("__d.u").as("u"), col("__d.w").as("w"),
         col("__d.dw").as("dw"))
-      .repartition(col("u")) // the wedge self-join rides this exchange
-      .persist(StorageLevel.MEMORY_AND_DISK))
     val wedges = dir.as("x").join(dir.as("y"),
         col("x.u") === col("y.u")
           && (col("x.dw") < col("y.dw")
@@ -1085,13 +1075,8 @@ object GraphOps {
     * on the 6dp floor grid. */
   def localClustering(edges: DataFrame, srcCol: String,
                       dstCol: String): DataFrame = {
-    val e = graft.Caches.track(edges.select(
-        least(col(srcCol), col(dstCol)).as("lo"),
-        greatest(col(srcCol), col(dstCol)).as("hi"))
-      .filter(col("lo") =!= col("hi"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val tri = triangles(e, "lo", "hi")
+    val e = canonicalEdges(edges, srcCol, dstCol)
+    val tri = triangles(edges, srcCol, dstCol)
     val tcnt = tri.select(col("a").as("id"))
       .unionByName(tri.select(col("b").as("id")))
       .unionByName(tri.select(col("c").as("id")))
@@ -1128,15 +1113,14 @@ object GraphOps {
   def dbscan(pairs: DataFrame, ids: DataFrame, idCol: String,
              minPts: Int): DataFrame = {
     require(minPts >= 2, "minPts must be >= 2")
-    val sym = graft.Caches.track(
+    // both read by the components' jobs and again by the result
+    val sym = checkpoint(
       pairs.select(col("id1").as("a"), col("id2").as("b"))
-        .union(pairs.select(col("id2").as("a"), col("id1").as("b")))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val core = graft.Caches.track(
+        .union(pairs.select(col("id2").as("a"), col("id1").as("b")))).df
+    val core = checkpoint(
       sym.groupBy("a").agg(count(lit(1)).as("deg"))
         .filter(col("deg") + 1 >= minPts)
-        .select(col("a").as("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("a").as("id"))).df
     val coreEdges = sym
       .join(core.select(col("id").as("a")), "a")
       .join(core.select(col("id").as("b")), "b")

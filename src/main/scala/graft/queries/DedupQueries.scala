@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge.checkpoint
 import graft.Tables
 import graft.ops.{DedupOps, GraphOps}
 
@@ -652,49 +653,47 @@ object DedupQueries {
     "d46_louvain" -> ((s, d) => {
       import graft.ops.GraphOps
       val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-      val pairs = graft.Caches.track(
+      val pairs = checkpoint(
         li.as("a").join(li.as("b"),
             col("a.l_orderkey") === col("b.l_orderkey")
               && col("a.l_partkey") < col("b.l_partkey"))
           .select(col("a.l_partkey").as("id1"),
             col("b.l_partkey").as("id2"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      // r17 §2.3: ONE symmetrize exchange + persist feeds BOTH iterative
+          .distinct())
+      // r17 §2.3: ONE symmetrize exchange and cut feeds BOTH iterative
       // ops (they built the identical 2·|E| hash(a) frame twice), and
-      // modularityQ scans the persisted pairs directly (canonical=true:
-      // the `<` join condition + distinct make pairs a canonical simple
-      // edge frame — the lo/hi re-distinct shuffle was a no-op).
-      val sym = GraphOps.symmetrize(pairs, "id1", "id2")
-      // materialize the shared frame once, single-threaded (cheap count
-      // over what both ops must build anyway), THEN run louvain and LPA
-      // as CONCURRENT driver-thread job chains (guide §2.6 — actions are
-      // only sequential because the driver calls them sequentially):
-      // each op is 4 rounds of small keyed jobs whose stage tails leave
-      // most executor slots idle, so the second op's rounds back-fill
-      // them. Results are frames, not shared state — identical output.
-      sym.count()
+      // modularityQ scans the pairs cut directly (the `<` join condition
+      // + distinct make pairs a canonical simple edge frame — the lo/hi
+      // re-distinct shuffle was a no-op).
+      val sym = GraphOps.symmetrize(pairs.df, "id1", "id2")
+      // the shared frame is cut once, single-threaded, THEN louvain and
+      // LPA run as CONCURRENT driver-thread job chains (guide §2.6 —
+      // actions are only sequential because the driver calls them
+      // sequentially): each op is 4 rounds of small keyed jobs whose
+      // stage tails leave most executor slots idle, so the second op's
+      // rounds back-fill them. Results are cuts, not shared state —
+      // identical output.
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val (lou, lpa) =
         try {
           val louF = scala.concurrent.Future {
-            GraphOps.louvainOneLevel(pairs, "id1", "id2", iters = 4,
+            GraphOps.louvainOneLevel(pairs.df, "id1", "id2", iters = 4,
               preSym = Some(sym)) }
           val lpaF = scala.concurrent.Future {
-            GraphOps.labelPropagation(pairs, "id1", "id2", iters = 4,
+            GraphOps.labelPropagation(pairs.df, "id1", "id2", iters = 4,
               preSym = Some(sym)) }
           (scala.concurrent.Await.result(louF,
             scala.concurrent.duration.Duration.Inf),
            scala.concurrent.Await.result(lpaF,
             scala.concurrent.duration.Duration.Inf))
         } finally pool.shutdown()
+      sym.release()
       // ONE shared edge build scores both partitions (modularityQ);
       // q6 values are bounded driver doubles -> literal columns
       val qs = GraphOps.modularityQ(pairs, "id1", "id2",
-        Seq(("lou", lou, "id", "lbl"), ("lpa", lpa, "id", "lbl")),
-        canonical = true).toMap
+        Seq(("lou", lou, "id", "lbl"), ("lpa", lpa, "id", "lbl"))).toMap
       lou.select(col("id"), col("lbl"),
           lit(qs("lou")).as("q6"), lit(qs("lpa")).as("q6_lpa"))
         .orderBy("id")
@@ -717,27 +716,22 @@ object DedupQueries {
     "d53_louvain_levels" -> ((s, d) => {
       import graft.ops.GraphOps
       val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-      val pairs = graft.Caches.track(
+      val pairs = checkpoint(
         li.as("a").join(li.as("b"),
             col("a.l_orderkey") === col("b.l_orderkey")
               && col("a.l_partkey") < col("b.l_partkey"))
           .select(col("a.l_partkey").as("id1"),
             col("b.l_partkey").as("id2"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      // r17 §2.3: level-1 rides a caller-built symmetrize (shared shape
-      // with d46) and modularityQ scans the persisted canonical pairs
-      // directly — see d46_louvain.
-      val lev = graft.Caches.track(
-        GraphOps.louvainLevels(pairs, "id1", "id2", iters = 4,
-            preSym = Some(GraphOps.symmetrize(pairs, "id1", "id2")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .distinct())
+      // modularityQ scans the canonical pairs cut directly — see
+      // d46_louvain; the levels are read by both scores and the output
+      val lev = checkpoint(
+        GraphOps.louvainLevels(pairs.df, "id1", "id2", iters = 4)).df
       val qs = GraphOps.modularityQ(pairs, "id1", "id2",
         Seq(("l1", lev.select(col("id"), col("lbl1").as("lbl")),
             "id", "lbl"),
           ("l2", lev.select(col("id"), col("lbl2").as("lbl")),
-            "id", "lbl")),
-        canonical = true).toMap
+            "id", "lbl"))).toMap
       lev.select(col("id"), col("lbl1"), col("lbl2"),
           lit(qs("l1")).as("q6_l1"), lit(qs("l2")).as("q6_l2"))
         .orderBy("id")

@@ -4,7 +4,9 @@ import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Predicate,
+  UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning,
   PartitioningCollection}
 import org.apache.spark.sql.classic
@@ -27,10 +29,15 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   *    result — never an accumulator, which a retried task would apply
   *    twice;
   *  - the leaf is rebuilt over the same RDD and output attributes with
-  *    no origin stats, constraints or ordering. Preserved origin
-  *    constraints survive attribute-dedup un-remapped, so a frame read
-  *    twice in one plan (a self-join, or a sink that unions it with a
-  *    join against itself) failed analysis with `key not found: <attr>#…`;
+  *    no origin constraints or ordering. Preserved origin constraints
+  *    survive attribute-dedup un-remapped, so a frame read twice in one
+  *    plan (a self-join, or a sink that unions it with a join against
+  *    itself) failed analysis with `key not found: <attr>#…`. Its
+  *    statistics are what the same job measured: the exact row count
+  *    and the summed `UnsafeRow` bytes, so the planner sizes joins over
+  *    a cut as it sized them over a persisted frame (no attribute
+  *    stats; an estimate from the schema would count an array column as
+  *    one element);
   *  - [[Checkpoint.release]] frees the blocks through the RDD that owns
   *    them.
   *
@@ -39,6 +46,15 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * clustered by key; `keepPartitioning` keeps it. [[pin]] is the per-call
   * intermediate store for operators whose intermediates must not enter
   * the `CacheManager` (see its Scaladoc).
+  *
+  * Failure model: the blocks are a local checkpoint, stored once in the
+  * executors' block managers with no replica and no lineage behind
+  * them. An executor lost while a cut is live loses its blocks, and a
+  * later read of them fails the query (there is nothing to recompute
+  * them from); the query must be run again. Every cut takes this trade —
+  * the graph ops' per-call intermediates and rounds, and the pinned
+  * intermediates of the dedup and streaming ops — for a plan that never
+  * re-analyzes its history and a store the `CacheManager` never sees.
   */
 object CheckpointBridge {
 
@@ -97,9 +113,17 @@ object CheckpointBridge {
               p.initialize(tc.partitionId())
               p
             }
-            var n, c = 0L
-            it.foreach { r => n += 1; if (p.exists(_.eval(r))) c += 1 }
-            (n, c)
+            lazy val unsafe = UnsafeProjection.create(attrs, attrs)
+            var n, c, b = 0L
+            it.foreach { r =>
+              n += 1
+              if (p.exists(_.eval(r))) c += 1
+              b += (r match {
+                case u: UnsafeRow => u
+                case o => unsafe(o)
+              }).getSizeInBytes
+            }
+            (n, c, b)
           })
         val layout = plan match {
           case a: AdaptiveSparkPlanExec if keepPartitioning => a.executedPlan
@@ -107,10 +131,13 @@ object CheckpointBridge {
         }
         (rdd, counts, firstLeaf(layout.outputPartitioning))
       }
+    val rows = counts.iterator.map(_._1).sum
     val leaf = LogicalRDD(output, rdd, partitioning, Nil, ds.isStreaming,
-      None)(session, None, None)
-    new Checkpoint(classic.Dataset.ofRows(session, leaf),
-      counts.iterator.map(_._1).sum, counts.iterator.map(_._2).sum, rdd)
+      None)(session, Some(Statistics(
+        sizeInBytes = counts.iterator.map(_._3).sum, rowCount = Some(rows))),
+      None)
+    new Checkpoint(classic.Dataset.ofRows(session, leaf), rows,
+      counts.iterator.map(_._2).sum, rdd)
   }
 
   /** Eagerly materialize `df` into executor block storage and return it

@@ -175,7 +175,7 @@ class CollectLintSpec extends AnyFunSuite {
       ".collect().map(r => r.getString(0) -> r.getLong(1)).toMap" ->
         ("modularityQ tagged one-pass totals: |labelings| rows per " +
           "collect (one (tag, count) row per scored labeling)"),
-      "val m2 = deg.agg(sum(col(\"k\"))).head().getLong(0) // 1-row probe: 2m" ->
+      "val m2 = deg.df.agg(sum(col(\"k\"))).head().getLong(0) // 1-row probe: 2m" ->
         "weighted louvain total degree: 1-row aggregate"),
     "DedupOps.scala" -> Map(
       "val one = flagged.agg(tierCols.head, tierCols.tail: _*).head()" ->

@@ -13,25 +13,9 @@ import graft.ops.{GraphOps, PipelineOps}
 
 /** Specs for connected components / dup clustering and the pipeline
   * assembly ops (hash split, shard packing). */
-class GraphOpsSpec extends AnyFunSuite with SparkFixture {
+class GraphOpsSpec extends AnyFunSuite with GraphFixtures {
 
   import spark.implicits._
-
-  // shared graph fixtures
-  private def chainTrianglePair = Seq((1L, 2L), (2L, 3L), (3L, 4L),
-    (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)).toDF("a", "b")
-  /** two K4 cliques {1..4} and {5..8} joined by the single bridge 4–5 */
-  private def barbell = {
-    val k4a = for (i <- 1L to 4L; j <- (i + 1) to 4L) yield (i, j)
-    val k4b = for (i <- 5L to 8L; j <- (i + 1) to 8L) yield (i, j)
-    (k4a ++ k4b :+ (4L, 5L)).toDF("id1", "id2")
-  }
-  /** triangle 1-2-3 with the pendant 3-4: kCore(k = 2) peels 4 in round 1 */
-  private def trianglePendant =
-    Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("s", "t")
-  /** buyers 1..4 → suppliers 10..12 */
-  private def bipartite = Seq((1L, 10L), (2L, 10L), (3L, 10L), (4L, 10L),
-    (1L, 11L), (2L, 11L), (1L, 12L)).toDF("c", "s")
 
   /** The physical plan each iterative op offers [[PlanTap]] per round,
     * keyed `<op>_round<r>`, while `run` runs. */
@@ -56,6 +40,19 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
         inBroadcast +: keyedExchanges(e.child, inBroadcast)
       case other => other.children.flatMap(keyedExchanges(_, inBroadcast))
     }
+
+  /** Run `f` as if every vertex-sized frame were above the broadcast
+    * limits: graft's row gate at 0, and Spark's own size threshold off,
+    * since a cut's real size would otherwise let Spark broadcast it. */
+  private def aboveBroadcastLimits[T](f: => T): T = {
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    spark.conf.set(threshold, "-1")
+    sys.props("graft.broadcastRowLimit") = "0"
+    try f finally {
+      sys.props.remove("graft.broadcastRowLimit")
+      spark.conf.unset(threshold)
+    }
+  }
 
   test("iterative ops plan round 2 with no keyed exchange below the " +
       "broadcast limit; louvain's keyed fallback engages above it") {
@@ -82,10 +79,9 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
         s"$op round 2 plans ${outside.size} keyed exchanges outside a " +
           s"broadcast and ${inside.size} under one:\n$plan")
     }
-    sys.props("graft.broadcastRowLimit") = "0"
-    val keyed = try roundPlans {
+    val keyed = aboveBroadcastLimits(roundPlans {
       GraphOps.louvainOneLevel(barbell, "id1", "id2", iters = 4).count()
-    } finally sys.props.remove("graft.broadcastRowLimit")
+    })
     assert(keyedExchanges(keyed("louvain_round2")).exists(!_),
       "louvain above the broadcast limit planned no keyed exchange")
   }
@@ -103,9 +99,10 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     Caches.clear()
     info(got.map { case (op, n) => s"$op=$n" }.mkString(" "))
     // one counted checkpoint per round: no separate count or isEmpty job
-    // (before it: 13, 17, 33 and 12 jobs)
+    // (before it: 13, 17, 33 and 12 jobs); louvain reads 2m from its
+    // symmetrized cut, not a count job (before: 28)
     val ceiling = Map("connectedComponents" -> 9, "labelPropagation" -> 12,
-      "louvainOneLevel" -> 28, "kCore" -> 9)
+      "louvainOneLevel" -> 21, "kCore" -> 9)
     for ((op, n) <- got)
       assert(n <= ceiling(op), s"$op ran $n jobs, ceiling ${ceiling(op)}")
   }
@@ -403,9 +400,7 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     // fixture's into one, where any declared layout is trivially true
     val noCoalesce = "spark.sql.adaptive.coalescePartitions.enabled"
     spark.conf.set(noCoalesce, "false")
-    sys.props("graft.broadcastRowLimit") = "0"
-    val above = try run() finally {
-      sys.props.remove("graft.broadcastRowLimit")
+    val above = try aboveBroadcastLimits(run()) finally {
       spark.conf.unset(noCoalesce)
       Caches.clear()
     }
@@ -428,6 +423,30 @@ class GraphOpsSpec extends AnyFunSuite with SparkFixture {
     Caches.clear()
     assert(out == Seq(("A", 3L, 3L, 7L, 0.357143),
       ("B", 3L, 3L, 7L, 0.357143)))
+  }
+
+  test("modularityQ over a canonical cut: barbell split Q = 286/676 and " +
+      "one community Q = 0, as from raw edges and modularity") {
+    import org.apache.spark.sql.graftbridge.CheckpointBridge.checkpoint
+    // m = 13; the clique split has Σe_c = 12 and d_c = 13 on each side:
+    // Q = (4·13·12 − 2·13²)/(4·13²) = 286/676 = 0.4230769…
+    val split = (1L to 8L).map(i => (i, if (i <= 4L) 1L else 5L))
+      .toDF("id", "lbl")
+    val one = (1L to 8L).map(i => (i, 0L)).toDF("id", "lbl")
+    val labelings = Seq(("split", split, "id", "lbl"),
+      ("one", one, "id", "lbl"))
+    val cut = checkpoint(barbell)
+    val canonical = GraphOps.modularityQ(cut, "id1", "id2", labelings)
+    cut.release()
+    assert(canonical == Seq("split" -> 0.423077, "one" -> 0.0))
+    // reversed orientation, a duplicate edge and a self-loop all
+    // canonicalize away
+    val raw = barbell.select(col("id2").as("s"), col("id1").as("t"))
+      .union(Seq((1L, 2L), (3L, 3L)).toDF("s", "t"))
+    assert(GraphOps.modularityQ(raw, "s", "t", labelings) == canonical)
+    val q = GraphOps.modularity(barbell, "id1", "id2", split, "id", "lbl")
+      .select("q6").distinct().collect().map(_.getDouble(0)).toSeq
+    assert(q == Seq(0.423077))
   }
 
   test("assortativity: a path graph is perfectly disassortative") {

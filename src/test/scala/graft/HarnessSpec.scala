@@ -44,6 +44,15 @@ class HarnessSpec extends AnyFunSuite with SparkFixture {
     assert(Harness.run(spark, "/tmp/sf", ok).map(_.rows) == Right(10L))
   }
 
+  test("a gate is run over every output column: one whose only non-key " +
+      "column throws is failed, not timed") {
+    val boomColumn = udf((v: Long) =>
+      if (v >= 0L) throw new IllegalStateException("column failed") else v)
+    val lazyBoom: Harness.Gate = (s, _) =>
+      s.range(10).toDF("id").withColumn("x", boomColumn(col("id")))
+    assert(Harness.run(spark, "/tmp/sf", lazyBoom).isLeft)
+  }
+
   test("Bench lists a throwing gate as failed, outside medians, total " +
     "and n_queries") {
     val (detail, last) =
