@@ -456,23 +456,6 @@ object GraphOps {
     }
   }
 
-  /** Triangle enumeration over an undirected edge list — the density
-    * diagnostic for near-dup graphs (triangles ≈ tight dup cliques; a
-    * pair graph whose components are triangle-free is chains, which
-    * cluster-survivor dedup treats very differently from cliques).
-    *
-    * Input edges may be in either orientation; they canonicalize to
-    * (lo < hi) and dedup first. Enumeration is the standard oriented
-    * wedge join: edges (a,b) ⋈ (b,c) build wedges a<b<c through the
-    * shared middle vertex b, and a second equi-join confirms the closing
-    * (a,c) edge — every triangle emitted exactly once in (a<b<c) order.
-    * All three steps are keyed equi-joins (shuffle keys: b, then (a,c));
-    * nothing is ever all-pairs. At 100 TB the classic refinement is to
-    * orient edges low-degree→high-degree before the wedge join, bounding
-    * per-vertex wedge fan-out by arboricity instead of max degree — the
-    * near-dup graphs here are stop-shingle-capped (bounded degree by
-    * construction), so id orientation suffices and keeps the output
-    * ordering deterministic. */
   /** Synchronous label propagation communities (LPA, Raghavan et al.
     * 2007) — the cheap modularity-style partitioner next to
     * [[connectedComponents]]'s reachability (components merge everything
@@ -1019,6 +1002,16 @@ object GraphOps {
         (col("__aa").cast("double") / lit(1e6)).as("aa6"))
   }
 
+  /** Triangle enumeration over an undirected edge list — the density
+    * diagnostic for near-dup graphs (triangles ≈ tight dup cliques; a
+    * pair graph whose components are triangle-free is chains, which
+    * cluster-survivor dedup treats very differently from cliques).
+    *
+    * Input edges may be in either orientation; they canonicalize to
+    * (lo < hi) and dedup first. Enumeration is a degree-oriented wedge
+    * join closed by one semi-join against the oriented edges; every
+    * step is a keyed equi-join, nothing is ever all-pairs. Each triangle
+    * is emitted exactly once as (a<b<c) by id. */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val e = canonicalEdges(edges, srcCol, dstCol)
     // r17 (§2.5): orient every edge toward the HIGHER (degree, id) rank

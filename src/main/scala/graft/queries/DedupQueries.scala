@@ -694,6 +694,7 @@ object DedupQueries {
       // q6 values are bounded driver doubles -> literal columns
       val qs = GraphOps.modularityQ(pairs, "id1", "id2",
         Seq(("lou", lou, "id", "lbl"), ("lpa", lpa, "id", "lbl"))).toMap
+      pairs.release()
       lou.select(col("id"), col("lbl"),
           lit(qs("lou")).as("q6"), lit(qs("lpa")).as("q6_lpa"))
         .orderBy("id")
@@ -732,6 +733,7 @@ object DedupQueries {
             "id", "lbl"),
           ("l2", lev.select(col("id"), col("lbl2").as("lbl")),
             "id", "lbl"))).toMap
+      pairs.release()
       lev.select(col("id"), col("lbl1"), col("lbl2"),
           lit(qs("l1")).as("q6_l1"), lit(qs("l2")).as("q6_l2"))
         .orderBy("id")
