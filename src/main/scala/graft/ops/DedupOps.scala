@@ -1353,11 +1353,11 @@ object DedupOps {
     * deterministic hyperplanes); candidate pairs (id1 < id2) come from
     * [[SimilarityOps.lshPairs]], the (table, bucket) pair generator it
     * shares with [[SimilarityOps.knnGraphBuild]] — never all-pairs. Up to
-    * `knnBroadcastRows` vectors the normalized vectors broadcast, pairs
-    * are scored in place per block and only pairs at or above the
-    * threshold shuffle; above it the keyed plan dedups candidate ids and
-    * rejoins vectors by key. The re-rank is an exact codegen'd dot
-    * product, so precision is 1.
+    * `knnBroadcastRows` vectors the normalized vectors broadcast and each
+    * id1's pairs are generated, scored, filtered and deduplicated in one
+    * task (the src postings are the only exchange); above it the keyed
+    * plan dedups candidate ids and rejoins vectors by key. The re-rank is
+    * an exact codegen'd dot product, so precision is 1.
     *
     * Recall: a pair at cosine t collides per table with prob p^bits where
     * p = 1 − arccos(t)/π; overall 1 − (1 − p^bits)^tables. At the defaults
@@ -1374,14 +1374,13 @@ object DedupOps {
                        dim: Int = 64, scoreBlockRows: Int = 1024): DataFrame = {
     // each colliding (id1 < id2) pair is scored once per shared (table,
     // bucket) with the identical fixed-order dot, so filtering before the
-    // dedup keeps exactly the pairs filtering after it would
-    val similar = col("sim") >= threshold
-    SimilarityOps.lshPairs(
-        withNorm(spread(df.select(col(idCol), col(vecCol)), idCol),
-          idCol, vecCol, "id", "e", "n"),
+    // dedup keeps exactly the pairs filtering after it would; the dedup
+    // rides the pairs' hash(src) layout
+    SimilarityOps.lshPairs(withNorm(df, idCol, vecCol, "id", "e", "n"),
         tables, bits, dim, planesFlat = None, bucketCap = None,
-        scoreBlockRows)(_ < _, (p, _) => p.filter(similar))
-      .filter(similar)
+        scoreBlockRows)(_ < _)
+      .filter(col("sim") >= threshold)
+      .dropDuplicates("src", "dst")
       .select(col("src").as("id1"), col("dst").as("id2"), col("sim"))
   }
 

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CheckpointBridge.checkpoint
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -30,8 +31,9 @@ object SimilarityOps {
     * generator of [[knnGraphBuild]] and [[DedupOps.embeddingNearDup]]: up
     * to this many corpus vectors the normalized vector frame broadcasts
     * (~(dim·8+32) B/row — the 512k default is ~280 MB at dim 64) and the
-    * blocked plan scores and prunes pairs in place; above it the keyed
-    * plan runs, which degrades gracefully at any size.
+    * src-clustered plan generates and scores each src's pairs in its own
+    * task; above it the keyed plan runs, which degrades gracefully at any
+    * size.
     * -Dgraft.knnBroadcastRows=N retunes it (0 forces the keyed plan). */
   private[graft] def knnBroadcastRows: Long =
     sys.props.get("graft.knnBroadcastRows").map(_.toLong)
@@ -680,16 +682,18 @@ object SimilarityOps {
     * banded [[annLsh]] SELF-join — postings explode ×tables, candidate
     * pairs come from a (table, bucket) equi-join, NEVER all-pairs —
     * followed by the exact codegen'd cosine re-rank and a per-node
-    * WindowGroupLimit heap. Ties break (sim DESC, dst ASC); with
-    * `planesFlat` from the md5 generator the whole build replays in
-    * DuckDB (gate v37). Returns (src, rk, dst, sim) edges.
+    * top-m. Ties break (sim DESC, dst ASC); with `planesFlat` from the
+    * md5 generator the whole build replays in DuckDB (gate v37). Returns
+    * (src, rk, dst, sim) edges.
     *
     * Scale shape: candidate volume per node is bucket occupancy ×
     * tables — tuned by `bits` (each +1 halves buckets' size); pairs come
-    * from [[lshPairs]], pruned per block to the top-m before they
-    * shuffle; the top-m heap is a WindowGroupLimit, no global sort. The
-    * long-range navigability HNSW gets from its layer hierarchy comes
-    * here from multi-table LSH diversity (independent tables collide
+    * from [[lshPairs]] clustered by src, so the per-node top-m is one
+    * Sort and one Window in the task that generated the node's pairs,
+    * with nothing shuffled after it. `scoreBlockRows` is about how many
+    * src postings each pair-generating task takes. The long-range
+    * navigability HNSW gets from its layer hierarchy comes here from
+    * multi-table LSH diversity (independent tables collide
     * distant-but-still-similar pairs), which keeps construction one
     * bucketed pass instead of HNSW's inherently sequential inserts.
     *
@@ -711,126 +715,86 @@ object SimilarityOps {
                     planesFlat: Option[Array[Double]] = None,
                     bucketCap: Option[Int] = None,
                     scoreBlockRows: Int = 1024): DataFrame = {
-    def topM(df: DataFrame, keys: Seq[Column]): DataFrame = df
-      .withColumn("rk", row_number().over(Window.partitionBy(keys: _*)
-        .orderBy(col("sim").desc, col("dst").asc)))
-      .filter(col("rk") <= m)
-    // per-block pre-prune to the SAME top-m criterion: a pair outranked by
-    // m better pairs within one block it belongs to is outranked by those
-    // same m pairs globally (they survive their block's top-m by
-    // construction and the order (sim DESC, dst ASC) is total), so it can
-    // never enter the global per-src top-m (OpsSpec proves equality to
-    // the keyed plan)
-    val pairs = lshPairs(
-      DedupOps.withNorm(corpus, idCol, vecCol, "id", "e", "n"), tables, bits,
-      dim, planesFlat, bucketCap, scoreBlockRows)(
-      _ =!= _, (p, block) => topM(p, block :+ col("src")))
-    topM(pairs, Seq(col("src")))
+    // one window spec: a pair's copies (one per shared table) carry the
+    // identical (sim, dst), so they rank alike and sit next to each
+    // other — the first copy is kept, and dense_rank over the copies is
+    // row_number over the distinct pairs
+    val w = Window.partitionBy("src").orderBy(col("sim").desc, col("dst").asc)
+    lshPairs(DedupOps.withNorm(corpus, idCol, vecCol, "id", "e", "n"),
+        tables, bits, dim, planesFlat, bucketCap, scoreBlockRows)(_ =!= _)
+      .select(col("src"), col("dst"), col("sim"),
+        dense_rank().over(w).as("rk"), lag(col("dst"), 1).over(w).as("__pd"))
+      .filter(col("rk") <= m
+        && (col("__pd").isNull || col("__pd") =!= col("dst")))
       .select(col("src"), col("rk"), col("dst"), col("sim"))
   }
 
   /** The LSH candidate pairs of a vector frame `v` (id, e, n), scored:
     * every (src, dst) that shares at least one (table, bucket) and
-    * satisfies `pair(src, dst)`, once, with its cosine `sim`
-    * (dot-then-divide, DuckDB's formula). Returns (src, dst, sim). The one
-    * pair generator of [[knnGraphBuild]] and
-    * [[DedupOps.embeddingNearDup]]; each applies its own final selection
-    * (per-src top-m, sim ≥ threshold) to the result.
+    * satisfies `pair(src, dst)`, with its cosine `sim` (dot-then-divide,
+    * DuckDB's formula; NULL for a zero vector). Returns (src, dst, sim). The one pair generator
+    * of [[knnGraphBuild]] and [[DedupOps.embeddingNearDup]]; each
+    * applies its own final selection (per-src top-m, sim ≥ threshold)
+    * to the result and drops a pair's copies.
     *
     * `bucketCap` keeps only the `cap` smallest ids per (table, bucket) as
-    * destinations (every id still sources pairs). `keep` is a prune the
-    * caller's final selection implies — it may drop only pairs that
-    * selection would drop; it gets the scored pairs of the blocked plan
-    * and the columns that name one block of them.
+    * destinations (every id still sources pairs).
     *
-    * Two plans; `nV <= knnBroadcastRows` picks one:
-    *  - blocked (the vectors broadcast): every bucket's dst side splits
-    *    into ⌈occ/scoreBlockRows⌉ blocks and its src side into as many
-    *    chunks (`__sc`, a per-src hash — a pure grouping tag), so each
-    *    (block, chunk) group is ≤ scoreBlockRows² pairs at any occupancy.
-    *    Only the src postings shuffle (×blocks); pairs are generated
-    *    against the broadcast dst postings, scored in place against the
-    *    broadcast vectors and pruned by `keep` before anything wide
-    *    shuffles. Shuffled rows are |posts|×blocks + the survivors, not
-    *    Σocc² pairs (measured at the sf1 rehearsal: the keyed join's
-    *    occ²-row candidate distinct ran a 55 s straggler task for v37 and
-    *    338 s for d12).
+    * The vectors and their buckets are one cut: its job hashes the
+    * buckets once and counts `nV`, and both posting sides explode from
+    * it. The returned frame reads the cut lazily, so its blocks are
+    * freed when the frame is garbage-collected, as a pin's are.
+    * `nV <= knnBroadcastRows` picks the plan:
+    *  - src-clustered (the vectors broadcast): the src postings shuffle
+    *    once, by hash(src), about `scoreBlockRows` per task; each task
+    *    pairs them with the broadcast dst postings and scores the pairs
+    *    against the broadcast vectors. Every pair of a src is made in
+    *    that src's task, so a per-src selection runs there and nothing
+    *    after it moves (REPOSE's partition-local prune, with the src as
+    *    the partition). A pair comes once per (table, bucket) it
+    *    shares; every copy carries the identical fixed-order dot.
     *  - keyed (above the limit, where only this plan fits): the (table,
     *    bucket) self-join, candidate pairs deduplicated by id before the
-    *    vectors rejoin by key. OpsSpec proves the blocked plan against it.
-    *
-    * The blocked plan scores a pair once per (table, bucket) it shares;
-    * every copy carries the identical fixed-order dot, so its dedup
-    * keeps the row the keyed plan's distinct-then-score produces. */
+    *    vectors rejoin by key, so each pair comes once. OpsSpec proves
+    *    the src-clustered plan against it. */
   private[ops] def lshPairs(v: DataFrame, tables: Int, bits: Int, dim: Int,
                             planesFlat: Option[Array[Double]],
                             bucketCap: Option[Int], scoreBlockRows: Int)(
-                            pair: (Column, Column) => Column,
-                            keep: (DataFrame, Seq[Column]) => DataFrame)
-      : DataFrame = {
-    val vs = graft.Caches.track(
-      v.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+                            pair: (Column, Column) => Column): DataFrame = {
     // buckets staged as a materialized column (codegen'd Project, not
-    // interpreted inside Generate); the occupancy rides the same pass as
-    // a window count over one (table, bucket) exchange of the postings,
-    // which persist — both pair sides read them
-    val bucket = Window.partitionBy("table", "bucket")
-    val posts = graft.Caches.track(vs
-      .select(col("id"),
-        lshBuckets(col("e"), tables, bits, dim, planesFlat).as("__bkts"))
+    // interpreted inside Generate)
+    val cut = checkpoint(v.select(col("id"), col("e"), col("n"),
+      lshBuckets(col("e"), tables, bits, dim, planesFlat).as("__bkts")))
+    def posts(id: String): DataFrame = cut.df
       .select(col("id"), posexplode(col("__bkts")))
-      .toDF("id", "table", "bucket")
-      .withColumn("__nb", ceil(count(lit(1)).over(bucket)
-        / lit(scoreBlockRows.toDouble)).cast("int"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val dstPosts = bucketCap.fold(posts)(cap => posts
-      .withColumn("__or", row_number().over(bucket.orderBy("id")))
+      .toDF(id, "table", "bucket")
+    val dstPosts = bucketCap.fold(posts("dst"))(cap => posts("dst")
+      .withColumn("__or", row_number().over(
+        Window.partitionBy("table", "bucket").orderBy("dst")))
       .filter(col("__or") <= cap).drop("__or"))
     def vecs(id: String, e: String, n: String): DataFrame =
-      vs.select(col("id").as(id), col("e").as(e), col("n").as(n))
-    val sim = graft.functions.DotProduct.dotNative(col("se"), col("de")) /
-      (col("sn") * col("dn"))
-    val nPart = v.sparkSession.sessionState.conf.numShufflePartitions
-    val nV = vs.count() // 1 driver scalar — gates the broadcast plan
-    if (nV <= knnBroadcastRows) {
-      // one pair-stage task per ~scoreBlockRows src postings: each pairs
-      // with at most one block of dst rows, so a task sorts ≤ about one
-      // block group of pairs however few shuffle partitions there are
-      val width = math.max(nPart,
-        math.ceil(nV.toDouble * tables / scoreBlockRows).toInt)
-      val block = Seq(col("table"), col("bucket"), col("__blk"), col("__sc"))
-      val srcX = posts
-        .select(col("id").as("src"), col("table"), col("bucket"),
-          pmod(xxhash64(col("id"), lit(1)), col("__nb").cast("long"))
-            .cast("int").as("__sc"), // seed ≠ __blk's: unbiased pairing
-          explode(sequence(lit(0), col("__nb") - 1)).as("__blk"))
-        .repartition(width, block: _*)
+      cut.df.select(col("id").as(id), col("e").as(e), col("n").as(n))
+    // a zero vector has no cosine: NULL (not an ANSI divide-by-zero
+    // error), which sorts last and passes no threshold
+    val sim = try_divide(graft.functions.DotProduct.dotNative(col("se"),
+      col("de")), col("sn") * col("dn")).as("sim")
+    if (cut.rows <= knnBroadcastRows) {
+      val width = math.max(v.sparkSession.sessionState.conf.numShufflePartitions,
+        math.ceil(cut.rows.toDouble * tables / scoreBlockRows).toInt)
+      posts("src").repartition(width, col("src"))
         .join(broadcast(vecs("src", "se", "sn")), "src")
-      val dstB = dstPosts.select(col("id").as("dst"), col("table"),
-        col("bucket"),
-        pmod(xxhash64(col("id")), col("__nb").cast("long")).cast("int")
-          .as("__blk"))
-      // keep rides the srcX exchange: HashPartitioning(block) clusters
-      // every (block, src) group — no occ²-row shuffle ever
-      keep(srcX.join(broadcast(dstB), Seq("table", "bucket", "__blk"))
-          .filter(pair(col("src"), col("dst")))
-          .join(broadcast(vecs("dst", "de", "dn")), "dst")
-          .withColumn("sim", sim), block)
-        .select(col("src"), col("dst"), col("sim"))
-        // the dedup and any src-keyed selection after it share ONE
-        // exchange: hash(src) clusters (src, dst) too
-        .repartition(nPart, col("src"))
-        .dropDuplicates("src", "dst")
+        .join(broadcast(dstPosts), Seq("table", "bucket"))
+        .filter(pair(col("src"), col("dst")))
+        .join(broadcast(vecs("dst", "de", "dn")), "dst")
+        .select(col("src"), col("dst"), sim)
     } else {
-      posts.as("a").join(dstPosts.as("b"),
-          col("a.table") === col("b.table")
-            && col("a.bucket") === col("b.bucket")
-            && pair(col("a.id"), col("b.id")))
-        .select(col("a.id").as("src"), col("b.id").as("dst"))
+      posts("src").join(dstPosts, Seq("table", "bucket"))
+        .filter(pair(col("src"), col("dst")))
+        .select(col("src"), col("dst"))
         .distinct()
         .join(vecs("src", "se", "sn"), "src")
         .join(vecs("dst", "de", "dn"), "dst")
-        .select(col("src"), col("dst"), sim.as("sim"))
+        .select(col("src"), col("dst"), sim)
     }
   }
 

@@ -62,8 +62,12 @@ object CheckpointBridge {
   final class Checkpoint private[CheckpointBridge] (val df: DataFrame,
       val rows: Long, val changed: Long, rdd: RDD[InternalRow]) {
     /** Free the stored blocks now rather than at the next driver GC. The
-      * frame, and any frame still reading it lazily, must not run again. */
-    def release(): Unit = rdd.unpersist(blocking = false)
+      * frame, and any frame still reading it lazily, must not run again.
+      * Through the context, not `RDD.unpersist`: that warns, on every
+      * locally checkpointed RDD, that its lineage cannot be recomputed —
+      * which a release intends. */
+    def release(): Unit =
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
   }
 
   /** Eagerly materialize `df` into executor block storage and return it

@@ -5,17 +5,22 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftbridge.CacheEntries
 import org.apache.spark.sql.graftbridge.CheckpointBridge.checkpoint
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.GraphOps
+import graft.ops.{DedupOps, GraphOps, SimilarityOps}
 
 /** The per-call intermediate stores: release order of the [[Caches]]
-  * registry, the counted cut's statistics, and the graph ops storing
-  * only in cuts. */
+  * registry, the counted cut's statistics and its quiet release, and the
+  * graph and k-NN ops storing only in cuts. */
 class CachesSpec extends AnyFunSuite with GraphFixtures {
 
   import spark.implicits._
@@ -107,6 +112,57 @@ class CachesSpec extends AnyFunSuite with GraphFixtures {
     GraphOps.modularityQ(edges, "id1", "id2", labelings)
     edges.release()
     sym.release()
+    assert(CacheEntries.count(spark) == 0)
+    assert(Caches.size == tracked)
+  }
+
+  test("release() frees a cut's blocks without a WARN from " +
+      "org.apache.spark.rdd") {
+    val ck = checkpoint(spark.range(0, 100).toDF("id"))
+    val id = ck.df.queryExecution.analyzed.collectFirst {
+      case r: LogicalRDD => r.rdd.id
+    }.getOrElse(fail("no LogicalRDD leaf"))
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    val warned = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("cut-release", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warned.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val name = "org.apache.spark.rdd"
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    val level = logger.getLevel
+    Configurator.setLevel(name, Level.WARN) // WARNs reach the appender
+    logger.addAppender(appender)
+    try ck.release()
+    finally {
+      logger.removeAppender(appender)
+      Configurator.setLevel(name, level)
+    }
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id))
+    assert(warned.isEmpty, s"release logged: ${warned.asScala.toSeq}")
+  }
+
+  test("knnGraphBuild and embeddingNearDup store their vectors and " +
+      "postings outside the CacheManager and the Caches registry") {
+    Caches.clear()
+    spark.catalog.clearCache()
+    val tracked = Caches.size
+    val rnd = new scala.util.Random(59L)
+    val vecs = (0L until 60L).map(id =>
+      (id, Array.fill(16)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    for (keyedRows <- Seq(None, Some("0"))) {
+      keyedRows.foreach(sys.props("graft.knnBroadcastRows") = _)
+      try {
+        SimilarityOps.knnGraphBuild(vecs, "vec_id", "embedding", m = 4,
+          dim = 16).collect()
+        DedupOps.embeddingNearDup(vecs, "vec_id", "embedding",
+          threshold = 0.3, tables = 8, dim = 16).collect()
+      } finally sys.props.remove("graft.knnBroadcastRows")
+    }
     assert(CacheEntries.count(spark) == 0)
     assert(Caches.size == tracked)
   }

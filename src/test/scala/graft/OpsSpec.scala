@@ -2268,12 +2268,10 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
 
   test("knnGraphBuild blocked pre-pruned scoring == keyed-join path, " +
     "exactly (capped and uncapped)") {
-    // the blocked plan splits every bucket's dst side into blocks and
-    // pre-prunes per (block, src) with the final top-m criterion; a
-    // pair outranked by m better pairs inside one of its blocks is
-    // outranked by those pairs globally, so the global top-m is
-    // unchanged. scoreBlockRows = 4 forces many blocks per bucket,
-    // exercising the prune hard.
+    // the default plan generates every pair of a src in that src's
+    // task, once per shared table, and selects the top-m there, dropping
+    // a pair's adjacent copies; the keyed plan dedups candidate ids
+    // first. scoreBlockRows = 4 spreads the src postings over many tasks.
     val dim = 16
     val pls = Some(SimilarityOps.hyperplanesPortable(32, dim))
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -2298,8 +2296,8 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
   test("knnGraphBuild shuffles no (src, dst) pair exchange at default " +
     "properties") {
     // the keyed plan's candidate distinct() hash-partitions every
-    // occupancy-squared pair on (src, dst); the blocked plan shuffles
-    // src postings and per-block survivors, keyed by block or by src
+    // occupancy-squared pair on (src, dst); the default plan shuffles
+    // only the src postings, keyed by src
     import org.apache.spark.sql.catalyst.expressions.Attribute
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -2324,11 +2322,11 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
 
   test("embeddingNearDup blocked threshold scoring == keyed-join path, " +
     "exactly") {
-    // the d12 fix: same blocked plan as knnGraphBuild specialised to a
-    // threshold filter — every colliding (id1 < id2) pair is generated
-    // once per shared (table, bucket), sims are the identical
-    // fixed-order dot, survivors dedup. scoreBlockRows = 4 forces many
-    // blocks per bucket.
+    // the d12 fix: same src-clustered plan as knnGraphBuild specialised
+    // to a threshold filter — every colliding (id1 < id2) pair is
+    // generated once per shared (table, bucket), sims are the identical
+    // fixed-order dot, survivors dedup in the src's task.
+    // scoreBlockRows = 4 spreads the src postings over many tasks.
     import spark.implicits._
     val rnd = new scala.util.Random(48L)
     val dim = 16
@@ -2353,6 +2351,84 @@ class OpsSpec extends AnyFunSuite with SparkFixture {
     assert(blocked == keyed, s"diverged: " +
       s"${(keyed diff blocked).size} missing, " +
       s"${(blocked diff keyed).size} extra")
+  }
+
+  test("knnGraphBuild at default properties shuffles once, by src: no " +
+    "(table, bucket) and no block exchange") {
+    // the src postings are the one exchange; the dst postings and the
+    // vectors broadcast, and the per-src top-m rides hash(src)
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val g = SimilarityOps.knnGraphBuild(knnClusters, "vec_id", "embedding",
+      m = 5, tables = 8, bits = 4, dim = 16,
+      planesFlat = Some(SimilarityOps.hyperplanesPortable(32, 16)))
+    g.collect()
+    val keys = new AdaptiveSparkPlanHelper {}.collect(
+        g.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.map {
+            case a: Attribute => a.name
+            case other => other.sql
+          }
+        case other => Seq(other.toString)
+      }
+    }
+    Caches.clear()
+    assert(keys == Seq(Seq("src")), s"exchange keys: $keys")
+  }
+
+  test("knnGraphBuild and embeddingNearDup over exact duplicates, a zero " +
+    "vector and m above a node's candidate count == keyed plan, row for " +
+    "row") {
+    // duplicates share every bucket, so each of their pairs comes once
+    // per table with tied sims (dst breaks the tie); the zero vector has
+    // no cosine, so its sims are NULL, which sort last and pass no
+    // threshold; m = 12 exceeds some nodes' candidate counts
+    import org.apache.spark.sql.Row
+    val rnd = new scala.util.Random(53L)
+    val dim = 16
+    val clustered = (0 until 4).flatMap { cl =>
+      val center = Array.fill(dim)(rnd.nextGaussian())
+      (0 until 10).map { i =>
+        ((cl * 10 + i).toLong,
+          center.map(x => (x + rnd.nextGaussian() * 0.5).toFloat))
+      }
+    }
+    val dups = (1000L until 1004L).map(id => (id, clustered.head._2))
+    val vecs = (clustered ++ dups :+ ((2000L, Array.fill(dim)(0f))))
+      .toDF("vec_id", "embedding")
+    val pls = Some(SimilarityOps.hyperplanesPortable(32, dim))
+    def knn() = SimilarityOps.knnGraphBuild(vecs, "vec_id", "embedding",
+      m = 12, tables = 8, bits = 4, dim = dim, planesFlat = pls).collect()
+    def near() = DedupOps.embeddingNearDup(vecs, "vec_id", "embedding",
+      threshold = 0.6, tables = 8, bits = 4, dim = dim).collect()
+    def keyed[T](f: => T): T = {
+      sys.props("graft.knnBroadcastRows") = "0" // force the keyed path
+      try f finally sys.props.remove("graft.knnBroadcastRows")
+    }
+    def same(got: Array[Row], want: Array[Row], what: String): Unit = {
+      assert(got.length == got.toSet.size, s"$what: repeated rows")
+      assert(got.toSet == want.toSet, s"$what diverged: " +
+        s"${(want.toSet diff got.toSet).size} missing, " +
+        s"${(got.toSet diff want.toSet).size} extra")
+    }
+    val (g, gk) = (knn(), keyed(knn()))
+    val (n, nk) = (near(), keyed(near()))
+    Caches.clear()
+    same(g, gk, "knnGraphBuild")
+    same(n, nk, "embeddingNearDup")
+    val degree = g.groupBy(_.getLong(0)).map { case (s, es) => s -> es.length }
+    assert(degree.values.exists(_ < 12) && degree.values.exists(_ == 12),
+      s"out-degrees $degree do not straddle m")
+    assert(g.exists(r => r.getLong(0) == 2000L && r.isNullAt(3)),
+      "no zero-vector edge")
+    assert(!n.exists(r => r.getLong(0) == 2000L || r.getLong(1) == 2000L))
+    assert(g.exists(r => r.getLong(0) == 1000L && r.getLong(2) == 1001L),
+      "duplicates are not each other's neighbours")
+    assert(n.exists(r => r.getLong(0) == 1000L && r.getLong(1) == 1003L))
   }
 
   test("triangles: rank-oriented compact-forward == id-ordered wedge " +
