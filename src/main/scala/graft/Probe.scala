@@ -38,7 +38,7 @@ object Probe {
   private def explain(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
 
-  /** v37/v38 knnGraphBuild BEFORE/AFTER plans: the default blocked
+  /** v37/v38 knnGraphBuild BEFORE/AFTER plans: the default src-clustered
     * broadcast-scored plan vs the keyed-join plan it replaces
     * (prop-forced, the same fallback big corpora take). The build is
     * one lazy frame — explain works directly, no tap needed. */

@@ -1355,9 +1355,10 @@ object DedupOps {
     * shares with [[SimilarityOps.knnGraphBuild]] — never all-pairs. Up to
     * `knnBroadcastRows` vectors the normalized vectors broadcast and each
     * id1's pairs are generated, scored, filtered and deduplicated in one
-    * task (the src postings are the only exchange); above it the keyed
-    * plan dedups candidate ids and rejoins vectors by key. The re-rank is
-    * an exact codegen'd dot product, so precision is 1.
+    * task (the src postings are the only exchange, about `scoreBlockRows`
+    * of them per task); above it the keyed plan dedups candidate ids and
+    * rejoins vectors by key. The re-rank is an exact codegen'd dot
+    * product, so precision is 1.
     *
     * Recall: a pair at cosine t collides per table with prob p^bits where
     * p = 1 − arccos(t)/π; overall 1 − (1 − p^bits)^tables. At the defaults

@@ -732,10 +732,11 @@ object SimilarityOps {
   /** The LSH candidate pairs of a vector frame `v` (id, e, n), scored:
     * every (src, dst) that shares at least one (table, bucket) and
     * satisfies `pair(src, dst)`, with its cosine `sim` (dot-then-divide,
-    * DuckDB's formula; NULL for a zero vector). Returns (src, dst, sim). The one pair generator
-    * of [[knnGraphBuild]] and [[DedupOps.embeddingNearDup]]; each
-    * applies its own final selection (per-src top-m, sim ≥ threshold)
-    * to the result and drops a pair's copies.
+    * DuckDB's formula; NULL for a zero vector). Returns (src, dst, sim).
+    * The one pair generator of [[knnGraphBuild]] and
+    * [[DedupOps.embeddingNearDup]]; each applies its own final selection
+    * (per-src top-m, sim ≥ threshold) to the result and drops a pair's
+    * copies.
     *
     * `bucketCap` keeps only the `cap` smallest ids per (table, bucket) as
     * destinations (every id still sources pairs).
@@ -779,7 +780,8 @@ object SimilarityOps {
     val sim = try_divide(graft.functions.DotProduct.dotNative(col("se"),
       col("de")), col("sn") * col("dn")).as("sim")
     if (cut.rows <= knnBroadcastRows) {
-      val width = math.max(v.sparkSession.sessionState.conf.numShufflePartitions,
+      val width = math.max(
+        v.sparkSession.sessionState.conf.numShufflePartitions,
         math.ceil(cut.rows.toDouble * tables / scoreBlockRows).toInt)
       posts("src").repartition(width, col("src"))
         .join(broadcast(vecs("src", "se", "sn")), "src")

@@ -2,6 +2,7 @@
 """Summarise Spark event logs: per-SQL-execution cost and driver gaps.
 
     usage: tools/evlog.py <eventlog dir or file> [--gap-ms 200] [--shuffle]
+                          [--memory]
 
 For every application log (an uncompressed JSON-lines file written with
 spark.eventLog.enabled=true and spark.eventLog.compress=false; rolling
@@ -20,6 +21,13 @@ origin of a shuffle (e.g. `hashpartitioning(id, 4), REPARTITION_BY_NUM`)
 with the bytes it wrote, a broadcast with the bytes it built, and a reused
 exchange. Expression ids are dropped from the partitioning.
 
+With --memory it prints, per stage, largest first, the execution memory its
+tasks hold at their peaks when four run at once: the sum of its four largest
+task `Peak Execution Memory` values (buffers of sorts, aggregations, windows
+and shuffles), with the stage's SQL execution and name. This is how
+perfbench's `stagePeak` sizes a stage on local[4]; its largest value over a
+session is `peak_exec_mb`. MB here is 2^20 bytes, as there.
+
 Times are read from the log's own timestamps (ms since the epoch).
 """
 import argparse
@@ -34,6 +42,7 @@ SQL_REPLAN = ("org.apache.spark.sql.execution.ui."
               "SparkListenerSQLAdaptiveExecutionUpdate")
 DRIVER_ACCUMS = ("org.apache.spark.sql.execution.ui."
                  "SparkListenerDriverAccumUpdates")
+PEAK_TASKS = 4  # tasks running at once: perfbench's local[4]
 COMPRESSED = (".lz4", ".lzf", ".snappy", ".zstd")
 
 
@@ -77,6 +86,8 @@ def summarise(events):
     task_ms = {}    # stage id -> summed task duration
     shuffle_w = {}  # stage id -> shuffle bytes written by its tasks
     accums = {}     # accumulator id -> summed task and driver updates
+    task_peaks = {}  # stage id -> [peak execution memory of each task]
+    stage_names = {}  # stage id -> stage name
     for e in events:
         kind = e.get("Event")
         if kind == "SparkListenerApplicationStart":
@@ -105,14 +116,18 @@ def summarise(events):
             jobs[e["Job ID"]]["end"] = e["Completion Time"]
         elif kind == "SparkListenerStageCompleted":
             stages_run.add(e["Stage Info"]["Stage ID"])
+            stage_names[e["Stage Info"]["Stage ID"]] = (
+                e["Stage Info"].get("Stage Name", ""))
         elif kind == "SparkListenerTaskEnd":
             info = e.get("Task Info", {})
             dur = info.get("Finish Time", 0) - info.get("Launch Time", 0)
             task_ms[e["Stage ID"]] = task_ms.get(e["Stage ID"], 0) + max(dur, 0)
-            written = ((e.get("Task Metrics") or {})
-                       .get("Shuffle Write Metrics", {})
+            metrics = e.get("Task Metrics") or {}
+            written = (metrics.get("Shuffle Write Metrics", {})
                        .get("Shuffle Bytes Written", 0))
             shuffle_w[e["Stage ID"]] = shuffle_w.get(e["Stage ID"], 0) + written
+            task_peaks.setdefault(e["Stage ID"], []).append(
+                metrics.get("Peak Execution Memory", 0))
             for a in info.get("Accumulables", []):
                 # SQL metrics log their updates as decimal strings
                 try:
@@ -121,7 +136,20 @@ def summarise(events):
                     continue
                 accums[a["ID"]] = accums.get(a["ID"], 0) + v
     return (app_start, app_end, sqls, jobs, stage_job, stages_run, task_ms,
-            shuffle_w, accums)
+            shuffle_w, accums, task_peaks, stage_names)
+
+
+def stage_peaks(jobs, stage_job, task_peaks, stage_names):
+    """[(bytes, sql id or None, stage id, stage name)] for every stage whose
+    tasks held execution memory, largest first: a stage's bytes are the sum
+    of its PEAK_TASKS largest task peaks."""
+    rows = []
+    for st, peaks in task_peaks.items():
+        total = sum(sorted(peaks)[-PEAK_TASKS:])
+        if total:
+            job = jobs.get(stage_job.get(st), {})
+            rows.append((total, job.get("sql"), st, stage_names.get(st, "")))
+    return sorted(rows, key=lambda r: (-r[0], r[2]))
 
 
 def exchanges(node):
@@ -155,9 +183,9 @@ def exchange_line(node, accums):
             f"{text[len('Exchange '):] if text.startswith('Exchange ') else text}")
 
 
-def report(name, events, gap_ms, shuffle=False):
+def report(name, events, gap_ms, shuffle=False, memory=False):
     (app_start, app_end, sqls, jobs, stage_job, stages_run, task_ms,
-     shuffle_w, accums) = summarise(events)
+     shuffle_w, accums, task_peaks, stage_names) = summarise(events)
     stamps = [t for j in jobs.values() for t in (j["start"], j["end"]) if t]
     stamps += [t for s in sqls.values() for t in (s["start"], s["end"]) if t]
     if not stamps:
@@ -188,6 +216,15 @@ def report(name, events, gap_ms, shuffle=False):
                           f"{shuffle_w[st] / 1e6:>9.4f} MB shuffle")
             for node in exchanges(s["plan"]):
                 print(f"{'':>14}{exchange_line(node, accums)}")
+
+    if memory:
+        peaks = stage_peaks(jobs, stage_job, task_peaks, stage_names)
+        print(f"-- {len(peaks)} stages held execution memory; the sum of each "
+              f"stage's {PEAK_TASKS} largest task peaks, largest first")
+        print(f"{'peak_mb':>9} {'sql':>5} {'stage':>6}  stage name")
+        for total, sql, st, stage_name in peaks:
+            print(f"{total / 2**20:>9.1f} {sql if sql is not None else '-':>5} "
+                  f"{st:>6}  {' '.join(stage_name.split())[:80]}")
 
     # driver gaps: the timeline minus the union of running-job intervals
     spans = sorted((j["start"], j["end"] or t1) for j in jobs.values())
@@ -220,12 +257,16 @@ def main():
     ap.add_argument("--shuffle", action="store_true",
                     help="per execution: shuffle bytes per stage and the "
                          "exchanges of its final plan")
+    ap.add_argument("--memory", action="store_true",
+                    help="per stage, largest first: the sum of its "
+                         f"{PEAK_TASKS} largest task execution-memory peaks")
     args = ap.parse_args()
     apps = app_logs(args.path)
     if not apps:
         sys.exit(f"{args.path}: no event logs")
     for name, files in apps:
-        report(name, list(read_events(files)), args.gap_ms, args.shuffle)
+        report(name, list(read_events(files)), args.gap_ms, args.shuffle,
+               args.memory)
 
 
 if __name__ == "__main__":
